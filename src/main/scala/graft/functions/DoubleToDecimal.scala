@@ -60,6 +60,13 @@ object DoubleToDecimal18 {
       if (d.changePrecision(18, scale)) d else null
     } catch { case _: NumberFormatException => null }
 
+  /** Exact powers of ten 10^0 .. 10^15: each literal is an integer
+    * below 2^53, so the double IS the power — unlike `math.pow`, whose
+    * result the JDK only bounds to within 1 ulp. */
+  val Pow10: Array[Double] = Array(
+    1e0, 1e1, 1e2, 1e3, 1e4, 1e5, 1e6, 1e7,
+    1e8, 1e9, 1e10, 1e11, 1e12, 1e13, 1e14, 1e15)
+
   /** pow must be the double 10^scale (exact for scale ≤ 15). */
   def toDec(x: Double, scale: Int, pow: Double): Decimal = {
     val ax = Math.abs(x)
@@ -99,7 +106,7 @@ case class DoubleToDecimal18(child: Expression, scale: Int)
       s"graft_dec requires a double argument, got ${other.sql}")
   }
 
-  private def pow: Double = math.pow(10d, scale)
+  private def pow: Double = DoubleToDecimal18.Pow10(scale)
 
   override def nullSafeEval(input: Any): Any =
     DoubleToDecimal18.toDec(input.asInstanceOf[Double], scale, pow)

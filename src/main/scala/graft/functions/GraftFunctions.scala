@@ -96,27 +96,6 @@ object GraftFunctions {
        }
        Shingles(exprs.head, n, distinct)
      }),
-    (FunctionIdentifier("graft_dv_alive"),
-     new ExpressionInfo(classOf[graft.sql.DvAlive].getCanonicalName, null,
-       "graft_dv_alive",
-       "true iff (file, pos) is not deleted by the snapshot's deletion vectors", ""),
-     (exprs: Seq[Expression]) => {
-       require(exprs.length == 3,
-         s"graft_dv_alive expects 3 arguments, got ${exprs.length}")
-       val spec = exprs(2) match {
-         case e if e.foldable => String.valueOf(e.eval())
-         case e => throw new IllegalArgumentException(
-           s"graft_dv_alive: spec must be a constant, got '${e.sql}'")
-       }
-       // analysis runs driver-side with the building session active —
-       // capture ITS Hadoop conf for the executor-side blob reads (the
-       // same SerializableConfiguration hand-off every distributed
-       // reader here uses)
-       val session = org.apache.spark.sql.SparkSession.active
-       graft.sql.DvAlive(exprs.head, exprs(1), spec,
-         new org.apache.spark.util.SerializableConfiguration(
-           session.sessionState.newHadoopConf()))
-     }),
     (FunctionIdentifier("graft_theta"),
      new ExpressionInfo(classOf[ThetaSketchAgg].getCanonicalName, null,
        "graft_theta", "KMV theta sketch of a pre-hashed long column (binary)", ""),

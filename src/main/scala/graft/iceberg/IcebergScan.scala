@@ -34,7 +34,9 @@ object IcebergScan {
       versionNameFormat: String = DefaultTableVersionFormat,
       mode: String = "default",
       // analogue of the reference's explicit_cardinality-driven join costing:
-      // broadcast the delete side of the MoR anti join when it is small.
+      // delete sides at or below this many rows are broadcast (position
+      // deletes) or applied by the per-file filter (equality-delete
+      // groups); larger ones take the shuffled anti join.
       broadcastDeleteThreshold: Long = 5L * 1000 * 1000,
       // Simple predicates evaluated driver-side against partition specs and
       // manifest column bounds to SKIP whole data files before the plan is
@@ -51,8 +53,8 @@ object IcebergScan {
       // stable across MoR deletes/updates and compaction (rewrites
       // materialize it); rows from files predating lineage read null.
       rowLineage: Boolean = false,
-      // MAINTENANCE-INTERNAL (rewrite_equality_deletes): skip the
-      // equality-delete anti joins so the conversion can diff
+      // MAINTENANCE-INTERNAL (rewrite_equality_deletes): skip equality
+      // deletes (filter and anti joins) so the conversion can diff
       // "position-filtered" against "fully-filtered" rows. Never set on
       // user-facing reads — the result resurrects eq-tombstoned rows.
       skipEqualityDeletes: Boolean = false)
@@ -106,7 +108,11 @@ object IcebergScan {
     if (opts.allowMovedPaths) IcebergIO.fullPath(tablePath, p) else p
 
   /** iceberg_scan — the snapshot's data as a DataFrame, with v2 position
-    * deletes subtracted via a null-safe anti join (J1, iceberg_scan.cpp:156-199). */
+    * deletes subtracted via a null-safe anti join (J1,
+    * iceberg_scan.cpp:156-199), and v3 deletion vectors plus equality
+    * deletes applied by one per-file `graft_dv_alive` filter (the anti
+    * join only for equality-delete groups above
+    * `broadcastDeleteThreshold`). */
   def scan(spark: SparkSession, path: String, opts: Options = Options()): DataFrame = {
     val snapshot = selectSnapshot(spark, path, opts)
     val root = IcebergIO.tableRoot(path)
@@ -443,33 +449,59 @@ object IcebergScan {
         .drop("__lin_qual", "__lin_base", "__lin_seq")
     }
 
-    // --- merge-on-read position deletes (v2 parquet files + v3 DVs) ---
-    // v3 DELETION VECTORS apply through a join-free filter expression
-    // (round 20, guide §2.4/§3): the old (file_path, pos) broadcast anti
-    // join decoded every blob into a row relation and hashed a
-    // path-string key per data row (~0.45 s of a 0.60 s DV'd scan at
-    // sf0.1; at scale, every deleted position materialized into one
-    // broadcast). graft_dv_alive ships only blob COORDINATES and decodes
-    // each file's DV once per executor (DvPositionCache), probing with a
-    // monotone cursor. Falls back to the anti join if a foreign table
-    // ever carries two live DVs for one file (spec violation — the union
-    // semantics of the join stay correct there).
-    val dvSpecs = dvEntries.map { case (e, _) =>
-      (qualify(resolved(path, e.referencedDataFile.get, opts)),
-       resolved(path, e.filePath, opts), e.contentOffset.get, e.contentSizeInBytes.get)
+    // --- merge-on-read deletes ---
+    // ONE join-free filter, graft_dv_alive (graft.sql.DvAlive), applies
+    // each data file's v3 DELETION VECTOR (one per file, deduped above)
+    // and the EQUALITY deletes that reach it, from a spec of coordinates
+    // only. Joins remain for v2 parquet position deletes and for
+    // equality-delete groups above broadcastDeleteThreshold rows, keyed
+    // on a type the byte-wise probe cannot compare like `<=>`, or holding
+    // a file whose size the manifest does not record (legacy writers; the
+    // executor-side reader needs the length).
+    val eqGroups =
+      if (eqEntries.isEmpty || opts.skipEqualityDeletes) Seq.empty
+      else eqKeyGroups(spark, conf, path, opts, eqEntries, snapshot)
+    val (filterGroups, joinGroups) = eqGroups.partition { g =>
+      g.files.map(_._1.recordCount).sum <= opts.broadcastDeleteThreshold &&
+        g.keyStruct.fields.forall(f => graft.sql.DvAlive.probeable(f.dataType)) &&
+        g.files.forall(_._1.fileSizeInBytes > 0)
     }
-    val dvAsFilter = dvSpecs.nonEmpty &&
-      dvSpecs.map(_._1).distinct.size == dvSpecs.size
-    if (dvAsFilter) {
-      val spec = dvSpecs.map { case (q, p, off, len) =>
-        s"$q\u0001$p\u0001$off\u0001$len"
-      }.mkString("\u0002")
-      cur = cur.filter(call_function("graft_dv_alive",
-        col("__graft_file"), col("__graft_pos"), lit(spec)))
+    val fileDeletes: Map[String, graft.sql.FileDeletes] = {
+      val dvByFile = dvEntries.map { case (e, _) =>
+        e.referencedDataFile.get -> graft.sql.GraftKeyedScan.DvRef(
+          resolved(path, e.filePath, opts), e.contentOffset.get, e.contentSizeInBytes.get)
+      }.toMap
+      // bounds scoping per group (eqDeleteMayMatch merges the group's key
+      // bounds once): a file no group's keys can reach is left out of the
+      // spec and never probed
+      val scopes = filterGroups.map { g =>
+        (IcebergPruning.eqDeleteMayMatch(g.files.map(_._1), g.keyCols),
+         g.files.map(_._2).max)
+      }
+      dataEntries.flatMap { case (de, dseq) =>
+        val gs = scopes.indices.filter { i =>
+          val (mayMatch, maxDelSeq) = scopes(i)
+          dseq < maxDelSeq && mayMatch(de)
+        }
+        val dv = dvByFile.get(de.filePath)
+        if (dv.isEmpty && gs.isEmpty) None
+        else Some(qualify(resolved(path, de.filePath, opts)) ->
+          graft.sql.FileDeletes(dv, dseq, gs))
+      }.toMap
     }
-    val joinDeleteEntries =
-      if (dvAsFilter) deleteEntries else deleteEntries ++ dvEntries
-    if (joinDeleteEntries.nonEmpty) {
+    if (fileDeletes.nonEmpty)
+      cur = cur.filter(graft.sql.DvAlive.filter(spark, fileDeletes,
+        filterGroups.map { g =>
+          val pools = g.pools.map { case (schema, fs) =>
+            schema -> fs.map { case (e, dseq) =>
+              graft.sql.EqDeleteFile(resolved(path, e.filePath, opts), e.fileSizeInBytes, dseq)
+            }
+          }
+          (g.cols, pools)
+        }))
+
+    // v2 parquet position deletes
+    if (deleteEntries.nonEmpty) {
       val fileMap = dataEntries.map { case (e, _) =>
         val passed = resolved(path, e.filePath, opts)
         (e.filePath, qualify(passed))
@@ -480,14 +512,12 @@ object IcebergScan {
       // explicit broadcast below. Data-side stats are deliberately NOT
       // injected — Spark's AQE re-plans the join from runtime statistics,
       // which subsumes a static data-side estimate.
-      val deleteCard = joinDeleteEntries.map(_._1.recordCount).sum
+      val deleteCard = deleteEntries.map(_._1.recordCount).sum
       // the spec's DV-wins read rule must still drop parquet
-      // position-delete rows aimed at DV'd files even when the DVs
-      // themselves apply through the filter expression above
-      val rawDeletes = posDeleteRows(spark, conf, path, opts, joinDeleteEntries,
-        extraDvTargets =
-          if (dvAsFilter) dvEntries.map(_._1.referencedDataFile.get).distinct
-          else Seq.empty)
+      // position-delete rows aimed at DV'd files, whose DVs apply through
+      // the filter above
+      val rawDeletes = posDeleteRows(spark, conf, path, opts, deleteEntries,
+        extraDvTargets = dvEntries.map(_._1.referencedDataFile.get))
       // Map each position-delete row to the qualified data-file URI. Inner
       // join also drops deletes pointing at no-longer-live data files.
       val deletes0 = rawDeletes
@@ -501,8 +531,8 @@ object IcebergScan {
         "left_anti")
     }
 
-    // --- v2 merge-on-read equality deletes (engine extension) ---
-    if (eqEntries.nonEmpty && !opts.skipEqualityDeletes) {
+    // equality-delete groups the filter does not take: the anti join
+    if (joinGroups.nonEmpty) {
       // per-row data sequence number via a broadcast (qualified URI → seq)
       val seqMap = dataEntries.map { case (e, seq) =>
         (qualify(resolved(path, e.filePath, opts)), seq)
@@ -510,35 +540,33 @@ object IcebergScan {
       cur = cur.join(broadcast(seqMap), col("__graft_file") === col("__eq_qual"), "left")
         .drop("__eq_qual")
       val eqCard = eqEntries.map(_._1.recordCount).sum
-      eqDeleteGroups(spark, conf, path, opts, eqEntries, snapshot).foreach {
-        case (cols, groupEntries, delR) =>
-          val delB = if (eqCard <= opts.broadcastDeleteThreshold) broadcast(delR) else delR
-          // SCOPING, part 2 (per group): data files whose key bounds are
-          // disjoint from ALL of the group's delete files bypass the anti
-          // join entirely — a partition-local delete must not shuffle the
-          // whole table through the join when the delete side is too big
-          // to broadcast. The membership predicate on _metadata.file_path
-          // also file-prunes each branch's parquet scan. Bounded: above
-          // EqScopeMaxFiles affected files the split is skipped (a plan
-          // with a 100k-literal IN list would hurt more than the join).
-          val keyCols = cols.flatMap(n => snapshot.schema.find(_.name == n))
-          val mayMatch = IcebergPruning.eqDeleteMayMatch(groupEntries.map(_._1), keyCols)
-          val affected = dataEntries.filter { case (de, dseq) =>
-            groupEntries.exists { case (_, delSeq) => dseq < delSeq } && mayMatch(de)
+      joinGroups.foreach { g =>
+        val delR = eqDeleteFrame(spark, conf, path, opts, g, snapshot)
+        val delB = if (eqCard <= opts.broadcastDeleteThreshold) broadcast(delR) else delR
+        // SCOPING, part 2 (per group): data files whose key bounds are
+        // disjoint from ALL of the group's delete files bypass the anti
+        // join entirely — a partition-local delete must not shuffle the
+        // whole table through the join when the delete side is too big
+        // to broadcast. The membership predicate on _metadata.file_path
+        // also file-prunes each branch's parquet scan. Bounded: above
+        // EqScopeMaxFiles affected files the split is skipped (a plan
+        // with a 100k-literal IN list would hurt more than the join).
+        val mayMatch = IcebergPruning.eqDeleteMayMatch(g.files.map(_._1), g.keyCols)
+        val affected = dataEntries.filter { case (de, dseq) =>
+          g.files.exists { case (_, delSeq) => dseq < delSeq } && mayMatch(de)
+        }
+        if (affected.isEmpty) ()
+        else if (affected.size == dataEntries.size ||
+                 affected.size > EqScopeMaxFiles)
+          cur = cur.join(delB, eqDeleteCond(g.cols), "left_anti")
+        else {
+          val affectedQual = affected.map { case (de, _) =>
+            qualify(resolved(path, de.filePath, opts))
           }
-          if (affected.isEmpty) ()
-          else if (affected.size == dataEntries.size ||
-                   affected.size > EqScopeMaxFiles ||
-                   keyCols.size != cols.size)
-            cur = cur.join(delB, eqDeleteCond(cols), "left_anti")
-          else {
-            val affectedQual = affected.map { case (de, _) =>
-              qualify(resolved(path, de.filePath, opts))
-            }
-            val hit = col("__graft_file").isInCollection(affectedQual)
-            cur = cur.filter(!hit).unionByName(
-              cur.filter(hit).join(delB, eqDeleteCond(cols), "left_anti"))
-          }
+          val hit = col("__graft_file").isInCollection(affectedQual)
+          cur = cur.filter(!hit).unionByName(
+            cur.filter(hit).join(delB, eqDeleteCond(g.cols), "left_anti"))
+        }
       }
       cur = cur.drop("__data_seq")
     }
@@ -547,22 +575,39 @@ object IcebergScan {
     else cur.drop("__graft_file", "__graft_pos") // SELECT * EXCLUDE(...) analogue (P1)
   }
 
-  /** Equality-delete relations grouped by key-column set — the ONE
-    * definition of how delete files become joinable frames, shared by
-    * the MoR scan (anti join) and the changelog (semi join) so their
+  /** One key-column set of equality-delete files: the key column names
+    * (sorted), the group's manifest entries with their sequence numbers,
+    * the key columns as snapshot columns, and the key read schema. */
+  private final case class EqKeyGroup(
+      cols: Seq[String], files: Seq[(ManifestEntry, Long)],
+      keyCols: Seq[IcebergModel.Column], keyStruct: StructType) {
+    /** (read schema, files) per pool. Explicit read schema — the key
+      * columns projected from the SNAPSHOT schema — instead of inference:
+      * delete files written before and after a column widening (int→long
+      * key) have heterogeneous physical types, and inference would pin
+      * whichever file's footer it sampled (Spark 4's parquet reader
+      * widens int→long/float→double under a declared wider schema).
+      * Id-keyed files keep `parquet.field.id` metadata (rename-safe
+      * resolution); legacy id-less files get the same types with the ids
+      * stripped (pure name matching — such files predate id stamping, and
+      * a missing-id read would otherwise throw under fieldId.read.enabled). */
+    def pools: Seq[(StructType, Seq[(ManifestEntry, Long)])] = {
+      val noIds = StructType(keyStruct.fields.map(_.copy(metadata = Metadata.empty)))
+      val (withIds, idLess) = files.partition { case (e, _) => e.equalityIds.nonEmpty }
+      Seq(keyStruct -> withIds, noIds -> idLess).filter(_._2.nonEmpty)
+    }
+  }
+
+  /** Equality-delete files grouped by key-column set — the ONE
+    * definition of how delete files resolve to key columns, shared by the
+    * MoR scan (filter or anti join) and the changelog (semi join) so their
     * semantics stay in lockstep. Manifest `equality_ids` give the key
     * columns WITHOUT touching the files; only id-less files (legacy
-    * writers) pay a schema read each, on the bounded pool. Each group
-    * is ONE multi-path parquet read — at 100k delete files a per-file
-    * loop would serialize 100k driver footer reads before the plan even
-    * composed. Returns (key columns, the group's manifest entries, rows
-    * as __del_<c>… + __del_seq). */
-  private def eqDeleteGroups(
+    * writers) pay a schema read each, on the bounded pool. */
+  private def eqKeyGroups(
       spark: SparkSession, conf: Configuration, path: String, opts: Options,
       entries: Seq[(ManifestEntry, Long)],
-      snapshot: Snapshot): Seq[(Seq[String], Seq[(ManifestEntry, Long)], DataFrame)] = {
-    import spark.implicits._
-    val qualify: String => String = IcebergIO.qualified(_, conf)
+      snapshot: Snapshot): Seq[EqKeyGroup] = {
     val nameById = snapshot.schema.map(c => c.id -> c.name).toMap
     val idless = entries.collect {
       case (e, _) if e.equalityIds.isEmpty => resolved(path, e.filePath, opts)
@@ -590,47 +635,39 @@ object IcebergScan {
         names.sorted
       } else idlessCols(resolved(path, e.filePath, opts))
     }.toSeq.map { case (cols, files) =>
-      // Explicit read schema — the group's key columns projected from the
-      // SNAPSHOT schema — instead of inference: delete files written
-      // before and after a column widening (int→long key) have
-      // heterogeneous physical types, and inference would pin whichever
-      // file's footer it sampled (Spark 4's parquet reader widens
-      // int→long/float→double under a declared wider schema). Id-keyed
-      // files keep `parquet.field.id` metadata (rename-safe resolution);
-      // legacy id-less files get the same types with the ids stripped
-      // (pure name matching — such files predate id stamping, and a
-      // missing-id read would otherwise throw under fieldId.read.enabled).
       val colDef = snapshot.schema.map(c => c.name -> c).toMap
-      val keyStruct = IcebergSchemaParser.toStructType(cols.map(c =>
+      val keyCols = cols.map(c =>
         colDef.getOrElse(c, throw new java.io.IOException(
           s"equality-delete key column '$c' is absent from the snapshot " +
-            "schema — cannot apply the delete"))))
-      val keyStructNoIds = org.apache.spark.sql.types.StructType(
-        keyStruct.fields.map(_.copy(metadata =
-          org.apache.spark.sql.types.Metadata.empty)))
-      def readPool(pf: Seq[(String, Long)], schema: org.apache.spark.sql.types.StructType) =
-        ManifestFileIndex.relation(spark, "parquet", pf, schema, conf,
-            mtimeMs = snapshot.timestampMs)
-          .getOrElse(spark.read.schema(schema).parquet(pf.map(_._1): _*))
-          .select(cols.map(col) :+ col("_metadata.file_path").as("__del_path"): _*)
-      val (withIds, idLess) =
-        files.partition { case (e, _) => e.equalityIds.nonEmpty }
-      val pools = Seq(withIds -> keyStruct, idLess -> keyStructNoIds).collect {
-        case (fs, schema) if fs.nonEmpty =>
-          readPool(fs.map { case (e, _) =>
-            (resolved(path, e.filePath, opts), e.fileSizeInBytes)
-          }, schema)
-      }
-      // per-file delete sequence number via a small broadcast
-      // (qualified URI → seq), same bridge as the data side
-      val delSeqMap = files.map { case (e, dseq) =>
-        (qualify(resolved(path, e.filePath, opts)), dseq)
-      }.toDF("__del_path", "__del_seq")
-      val del = pools.reduce(_ unionByName _)
-        .join(broadcast(delSeqMap), "__del_path")
-      (cols, files, del.select(
-        cols.map(c => col(c).as(s"__del_$c")) :+ col("__del_seq"): _*))
+            "schema — cannot apply the delete")))
+      EqKeyGroup(cols, files, keyCols, IcebergSchemaParser.toStructType(keyCols))
     }
+  }
+
+  /** A group's delete rows as __del_<c>… + __del_seq, for the joins. Each
+    * pool is ONE multi-path parquet read — at 100k delete files a per-file
+    * loop would serialize 100k driver footer reads before the plan even
+    * composed. */
+  private def eqDeleteFrame(
+      spark: SparkSession, conf: Configuration, path: String, opts: Options,
+      g: EqKeyGroup, snapshot: Snapshot): DataFrame = {
+    import spark.implicits._
+    val qualify: String => String = IcebergIO.qualified(_, conf)
+    val pools = g.pools.map { case (schema, pf) =>
+      val files = pf.map { case (e, _) => (resolved(path, e.filePath, opts), e.fileSizeInBytes) }
+      ManifestFileIndex.relation(spark, "parquet", files, schema, conf,
+          mtimeMs = snapshot.timestampMs)
+        .getOrElse(spark.read.schema(schema).parquet(files.map(_._1): _*))
+        .select(g.cols.map(col) :+ col("_metadata.file_path").as("__del_path"): _*)
+    }
+    // per-file delete sequence number via a small broadcast
+    // (qualified URI → seq), same bridge as the data side
+    val delSeqMap = g.files.map { case (e, dseq) =>
+      (qualify(resolved(path, e.filePath, opts)), dseq)
+    }.toDF("__del_path", "__del_seq")
+    pools.reduce(_ unionByName _)
+      .join(broadcast(delSeqMap), "__del_path")
+      .select(g.cols.map(c => col(c).as(s"__del_$c")) :+ col("__del_seq"): _*)
   }
 
   /** Null-safe key equality + the spec's strictly-older sequence scoping. */
@@ -1078,11 +1115,11 @@ object IcebergScan {
           // equality-delete commit must not be forced onto the driver
           val eqCard = newEq.map(_._1.recordCount).sum
           val small = eqCard <= opts.broadcastDeleteThreshold
-          eqDeleteGroups(spark, conf, root, opts, newEq, to).foreach {
-            case (kcols, _, delR) =>
-              val delB = if (small) broadcast(delR) else delR
-              hits :+= withSeq.join(delB, eqDeleteCond(kcols), "left_semi")
-                .select(provCols: _*)
+          eqKeyGroups(spark, conf, root, opts, newEq, to).foreach { g =>
+            val delR = eqDeleteFrame(spark, conf, root, opts, g, to)
+            val delB = if (small) broadcast(delR) else delR
+            hits :+= withSeq.join(delB, eqDeleteCond(g.cols), "left_semi")
+              .select(provCols: _*)
           }
         }
         // a row hit by BOTH a position and an equality delete is one
@@ -1352,7 +1389,8 @@ object IcebergScan {
     val deleteFiles = parquetEntries.map { case (e, _) =>
       (resolved(root, e.filePath, opts), e.fileSizeInBytes)
     }
-    val dvTargets = dvEntries.map(_._1.referencedDataFile.get).distinct
+    val dvTargets =
+      (dvEntries.map(_._1.referencedDataFile.get) ++ extraDvTargets).distinct
     val parquetRows0 =
       if (deleteFiles.isEmpty) spark.emptyDataset[(String, Long)].toDF("file_path", "pos")
       // explicit spec-fixed schema (name-matched, like the inference it

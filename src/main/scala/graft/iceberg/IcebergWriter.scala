@@ -4708,8 +4708,8 @@ object IcebergWriter {
     * the conversion commits at the new sequence like any delete.
     *
     * Effect at scale: a CDC mirror accrues one eq-delete file per epoch,
-    * and every scan's anti-join build side (and the keyed MoR reader's
-    * per-split delete set) grows O(epochs) between compactions. After
+    * and every scan's equality-delete key index (spliced filter and
+    * keyed reader alike) grows O(epochs) between compactions. After
     * conversion the delete side is one DV per affected data file (v3) or
     * a handful of consolidated position files (v2); on v3 the keyed
     * (storage-partitioned) read path composes with DVs, so zero-shuffle

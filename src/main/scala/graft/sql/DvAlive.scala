@@ -1,85 +1,122 @@
 package graft.sql
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BooleanType, DataType, LongType, StringType}
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.{TypeCheckResult, UnresolvedAttribute}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, GenerateUnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.connector.read.PartitionReaderFactory
+import org.apache.spark.sql.graftshim.GraftShims
+import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
-/** Per-partition cursor state for [[DvAlive]] — one per generated
-  * codegen object (i.e. per task), reset whenever the row's file
-  * changes. Top-level class so codegen can name it. */
-final class DvAliveState {
+/** One equality-delete file as [[DvAlive]] ships it: coordinates only. */
+final case class EqDeleteFile(path: String, size: Long, seq: Long)
+
+/** Equality-delete files of one key-column set that share one read
+  * schema (field-id keyed, or name keyed for legacy id-less files). The
+  * reader factory sits outside case-class equality, so two scans of the
+  * same snapshot still compare equal (plan reuse, cache lookups). */
+final case class EqDeletePool(keySchema: StructType, files: Seq[EqDeleteFile])(
+    val factory: PartitionReaderFactory)
+
+/** What may delete rows of one data file: its deletion vector, its data
+  * sequence number, and the equality-delete groups whose key bounds may
+  * match the file. Which of a group's files apply is decided on the
+  * executor: those with a sequence number strictly above `seq`. */
+final case class FileDeletes(dv: Option[GraftKeyedScan.DvRef], seq: Long, groups: Seq[Int])
+
+/** The filter's whole spec: O(data files + delete files), never their
+  * product. `files` is keyed by the qualified data-file URI (the
+  * `_metadata.file_path` domain); a file absent from it passes every row.
+  * `groups(g)` are the pools of key-column set g. */
+final case class DeleteSpec(files: Map[String, FileDeletes], groups: Seq[Seq[EqDeletePool]]) {
+  // computed once: Catalyst hashes plan expressions repeatedly, and the
+  // spec holds an entry per affected data file
+  @transient private lazy val hash = scala.util.hashing.MurmurHash3.productHash(this)
+  override def hashCode(): Int = hash
+}
+
+/** Per-task cursor state for [[DvAlive]] — one per generated codegen
+  * object (i.e. per task), re-seated whenever the row's file changes.
+  * Top-level class so codegen can name it. */
+final class DvAliveState(groupCount: Int) {
   var lastFile: UTF8String = null
   var positions: Array[Long] = null
   var di: Int = -1
   var prevIdx: Long = Long.MinValue
+  /** Per group: the keys deleting rows of the current file, or null. */
+  val keys = new Array[java.util.HashSet[InternalRow]](groupCount)
+  var anyKeys: Boolean = false
+  /** (group, data sequence) → applicable key set; null when none apply. */
+  val bySeq = new java.util.HashMap[(Int, Long), java.util.HashSet[InternalRow]]()
+  /** Interpreted path only: per-group probe projections. */
+  var keyProj: Array[UnsafeProjection] = null
 }
 
-/** `graft_dv_alive(file, pos, spec)` — TRUE iff row `pos` of data file
-  * `file` is NOT deleted by the snapshot's deletion vectors.
+/** `graft_dv_alive(file, pos, keys…)` — TRUE iff row `pos` of data file
+  * `file` survives the snapshot's deletion vectors AND the equality
+  * deletes that reach it: the merge-on-read filter of the spliced scan.
   *
-  * Replaces the (file_path, pos) broadcast LEFT ANTI join the MoR scan
-  * composed for v3 DVs (round 20, guide §2.4 "remove shuffles outright" /
-  * §3): the anti join decoded EVERY blob into a row relation, built a
-  * broadcast hash table over (100-char path string, long) keys, and
-  * hashed that string pair per data row — measured 0.45 s of the 0.60 s
-  * DV'd scan at sf0.1, and at scale it materializes every deleted
-  * position into one broadcast (bounded by the 8 GB cap). This
-  * expression ships only the blob COORDINATES (one spec entry per
-  * affected file, the same driver-side metadata the manifests already
-  * hold), lazily decodes a file's DV once per (executor, file) through
-  * the shared [[DvPositionCache]], and probes with a monotone cursor —
-  * row positions arrive ascending within a split, so membership is
-  * amortized O(1) per row with a binarySearch re-seek on the rare
-  * backward jump (split packing is sorted by length, not offset).
+  * It replaces two join shapes. For v3 DVs, the (file_path, pos)
+  * broadcast LEFT ANTI join decoded every blob into a row relation and
+  * hashed a path-string key per data row (0.45 s of a 0.60 s DV'd scan at
+  * sf0.1). For equality deletes, a per-row `__data_seq` broadcast join on
+  * the path string, a second broadcast join giving each delete row its
+  * sequence number, the anti join itself, and a `Union` split that read
+  * the table twice to keep unaffected files out of the join — six Spark
+  * jobs for a read a DV-only table serves in two.
   *
-  * `spec` is a foldable string: entries joined by U+0002, fields by
-  * U+0001 — (qualified data-file URI, puffin path, offset, length).
-  * The Hadoop conf rides the expression (captured at analysis time from
-  * the active session, like every executor-side reader here).
+  * The driver ships only coordinates ([[DeleteSpec]]): per affected data
+  * file its DV blob, data sequence number and candidate key groups
+  * (bounds-scoped, `IcebergPruning.eqDeleteMayMatch`); per delete file
+  * its path, length and sequence number. On the first row of a file the
+  * expression decodes the DV once per (executor, blob) through
+  * [[DvPositionCache]] and unions the keys of the group files with a
+  * strictly greater sequence number, each file read once per executor
+  * through [[EqDeleteKeyCache]] — the same index the keyed reader uses.
+  * Per row: a monotone DV cursor (positions ascend within a split;
+  * backward jumps re-seek by binarySearch), then, only in files some
+  * equality delete reaches, one UnsafeRow set lookup per group. Keys
+  * compare byte-wise after float normalization (-0.0 = 0.0, one NaN),
+  * which is the anti join's null-safe `<=>` under Spark's join-key
+  * normalization; nulls match nulls.
   *
-  * Exactly the anti join's semantics: the DV is the whole per-file
-  * truth (at most one live DV per file — the builder refuses the
-  * expression route if a foreign table ever violates that and falls
-  * back to the join), and files without a DV pass every row.
+  * Children: the file URI, the row position (null on ORC, which carries
+  * no DVs), then each group's key columns cast to its key types. The
+  * Hadoop conf rides the expression for the executor-side blob reads.
   */
 case class DvAlive(
-    left: Expression, right: Expression, spec: String,
-    conf: org.apache.spark.util.SerializableConfiguration)
-    extends BinaryExpression {
+    children: Seq[Expression], spec: DeleteSpec, conf: SerializableConfiguration)
+    extends Expression {
 
   override def dataType: DataType = BooleanType
+  override def nullable: Boolean = false
 
   override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
+    (children.head.dataType, children(1).dataType) match {
       case (StringType, LongType) => TypeCheckResult.TypeCheckSuccess
       case other => TypeCheckResult.TypeCheckFailure(
-        s"graft_dv_alive requires (string, bigint) arguments, got $other")
+        s"graft_dv_alive requires (string, bigint, keys…) arguments, got $other")
     }
 
-  @transient private lazy val lookup: java.util.HashMap[String, GraftKeyedScan.DvRef] = {
-    val m = new java.util.HashMap[String, GraftKeyedScan.DvRef]()
-    spec.split('\u0002').filter(_.nonEmpty).foreach { ent =>
-      val f = ent.split('\u0001')
-      m.put(f(0), GraftKeyedScan.DvRef(f(1), f(2).toLong, f(3).toLong))
+  /** Each group's key children, in group order. */
+  @transient private lazy val keyExprs: Seq[Seq[Expression]] = {
+    val arity = spec.groups.map(_.head.keySchema.size)
+    arity.indices.map { g =>
+      val from = 2 + arity.take(g).sum
+      children.slice(from, from + arity(g))
     }
-    m
   }
 
-  /** Row check with per-task cursor state (see class doc). */
-  def aliveRow(st: DvAliveState, file: UTF8String, pos: Long): Boolean = {
-    if (st.lastFile == null || !st.lastFile.equals(file)) {
-      // the incoming UTF8String may view a reused buffer — copy the key
-      st.lastFile = file.clone()
-      val ref = lookup.get(file.toString)
-      st.positions =
-        if (ref == null) null else DvPositionCache.load(ref, conf.value)
-      st.di = -1
-      st.prevIdx = Long.MinValue
-    }
+  /** Re-seat the cursor on the first row of a file, then apply its DV.
+    * Leaves `st.keys` holding the key sets the row must also miss. */
+  def fileAlive(st: DvAliveState, file: UTF8String, posNull: Boolean, pos: Long): Boolean = {
+    if (st.lastFile == null || !st.lastFile.equals(file)) enter(st, file)
     val ps = st.positions
-    if (ps == null) return true
+    if (ps == null || posNull) return true
     var deleted = false
     if (st.di < 0 || pos < st.prevIdx) {
       val p = java.util.Arrays.binarySearch(ps, pos)
@@ -92,26 +129,138 @@ case class DvAlive(
     !deleted
   }
 
+  private def enter(st: DvAliveState, file: UTF8String): Unit = {
+    // the incoming UTF8String may view a reused buffer — copy the key
+    st.lastFile = if (file == null) null else file.clone()
+    val fd = if (file == null) null else spec.files.getOrElse(file.toString, null)
+    st.positions =
+      if (fd == null) null else fd.dv.map(DvPositionCache.load(_, conf.value)).orNull
+    st.di = -1
+    st.prevIdx = Long.MinValue
+    java.util.Arrays.fill(st.keys.asInstanceOf[Array[AnyRef]], null)
+    st.anyKeys = false
+    if (fd != null) fd.groups.foreach { g =>
+      val s = keySet(st, g, fd.seq)
+      st.keys(g) = s
+      st.anyKeys |= s != null
+    }
+  }
+
+  /** Union of group g's keys whose delete sequence is above `seq`. */
+  private def keySet(st: DvAliveState, g: Int, seq: Long): java.util.HashSet[InternalRow] = {
+    val memo = (g, seq)
+    if (st.bySeq.containsKey(memo)) return st.bySeq.get(memo)
+    val sets = spec.groups(g).flatMap { pool =>
+      val fs = pool.files.filter(_.seq > seq)
+      if (fs.isEmpty) None
+      else Some(EqDeleteKeyCache.load(
+        fs.map(f => (f.path, f.size)).toArray, pool.factory, pool.keySchema))
+    }.filterNot(_.isEmpty)
+    val set =
+      if (sets.isEmpty) null
+      else if (sets.size == 1) sets.head
+      else {
+        val u = new java.util.HashSet[InternalRow](sets.map(_.size).sum * 2)
+        sets.foreach(s => u.addAll(s): Unit)
+        u
+      }
+    st.bySeq.put(memo, set)
+    set
+  }
+
   // interpreted path (codegen-disabled sessions): per-thread state —
   // within a thread rows arrive partition-sequential, and both the
   // file-change reset and the backward-jump re-seek keep it exact
   // across partition boundaries
   @transient private lazy val tlState =
-    ThreadLocal.withInitial[DvAliveState](() => new DvAliveState)
+    ThreadLocal.withInitial[DvAliveState](() => new DvAliveState(spec.groups.size))
 
-  override def nullSafeEval(f: Any, p: Any): Any =
-    aliveRow(tlState.get(), f.asInstanceOf[UTF8String], p.asInstanceOf[Long])
+  override def eval(input: InternalRow): Any = {
+    val st = tlState.get()
+    val pos = children(1).eval(input)
+    val alive = fileAlive(st, children.head.eval(input).asInstanceOf[UTF8String],
+      pos == null, if (pos == null) -1L else pos.asInstanceOf[Long])
+    if (!alive || !st.anyKeys) return alive
+    if (st.keyProj == null)
+      st.keyProj = keyExprs.map(EqDeleteKeyCache.probeProjection).toArray
+    var g = 0
+    while (g < st.keys.length) {
+      val s = st.keys(g)
+      if (s != null && s.contains(st.keyProj(g)(input))) return false
+      g += 1
+    }
+    true
+  }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val self = ctx.addReferenceObj("dvAlive", this, classOf[DvAlive].getName)
-    val st = ctx.addMutableState(classOf[DvAliveState].getName, "dvAliveState",
-      v => s"$v = new ${classOf[DvAliveState].getName}();")
-    nullSafeCodeGen(ctx, ev, (f, p) => s"${ev.value} = $self.aliveRow($st, $f, $p);")
+    val stCls = classOf[DvAliveState].getName
+    val st = ctx.addMutableState(stCls, "dvAliveState",
+      v => s"$v = new $stCls(${spec.groups.size});")
+    val file = children.head.genCode(ctx)
+    val pos = children(1).genCode(ctx)
+    // key rows are built only for rows of files an equality delete reaches
+    val probes = keyExprs.zipWithIndex.map { case (ks, g) =>
+      val key = GenerateUnsafeProjection.createCode(ctx, EqDeleteKeyCache.normalized(ks))
+      s"""
+         |if (${ev.value} && $st.keys()[$g] != null) {
+         |  ${key.code}
+         |  ${ev.value} = !$st.keys()[$g].contains(${key.value});
+         |}""".stripMargin
+    }
+    ev.copy(code = code"""
+      ${file.code}
+      ${pos.code}
+      boolean ${ev.value} = $self.fileAlive($st,
+        ${file.isNull} ? null : ${file.value}, ${pos.isNull}, ${pos.value});
+      if (${ev.value} && $st.anyKeys()) {
+        ${probes.mkString("\n")}
+      }""", isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
   }
 
   override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DvAlive =
-    copy(left = newLeft, right = newRight)
+      newChildren: IndexedSeq[Expression]): DvAlive = copy(children = newChildren)
 
   override def prettyName: String = "graft_dv_alive"
+
+  // plan strings carry a summary, not the per-file spec
+  override def toString: String =
+    s"$prettyName(${children.mkString(", ")}; ${spec.files.size} files, " +
+      s"${spec.files.values.count(_.dv.isDefined)} DVs, " +
+      s"${spec.groups.map(_.map(_.files.size).sum).sum} eq-delete files)"
+}
+
+object DvAlive {
+
+  /** Key types the byte-wise probe decides exactly like `<=>`: atomic
+    * values with a canonical UnsafeRow form (floats after
+    * normalization; strings only under binary-equality collations). */
+  def probeable(dt: DataType): Boolean = dt match {
+    case BooleanType | ByteType | ShortType | IntegerType | LongType |
+         FloatType | DoubleType | DateType | TimestampType | TimestampNTZType |
+         BinaryType | _: DecimalType => true
+    case s: StringType => s == StringType // UTF8_BINARY
+    case _ => false
+  }
+
+  /** The filter column over a relation carrying `__graft_file` /
+    * `__graft_pos`. `groups`: per key-column set, the key column names
+    * and its pools as (key read schema, files) — every pool of a group
+    * shares the key types. */
+  def filter(
+      spark: SparkSession, files: Map[String, FileDeletes],
+      groups: Seq[(Seq[String], Seq[(StructType, Seq[EqDeleteFile])])]): Column = {
+    val spec = DeleteSpec(files, groups.map(_._2.map { case (schema, fs) =>
+      EqDeletePool(schema, fs)(ParquetReaders.factory(spark, schema, schema))
+    }))
+    val keys = groups.flatMap { case (cols, pools) =>
+      cols.zip(pools.head._1.fields).map { case (c, f) =>
+        Cast(UnresolvedAttribute.quoted(c), f.dataType)
+      }
+    }
+    GraftShims.column(DvAlive(
+      Seq(UnresolvedAttribute.quoted("__graft_file"),
+        UnresolvedAttribute.quoted("__graft_pos")) ++ keys,
+      spec, new SerializableConfiguration(spark.sessionState.newHadoopConf())))
+  }
 }

@@ -483,14 +483,32 @@ private final class GraftKeyedMorFilePartition(
     val rawPath: String = "")
     extends GraftKeyedFilePartition(idx, fs, key)
 
-/** Executor-side soft cache of equality-delete KEY SETS: every split of
-  * a tuple re-applies the same delete files, and at 1000 executors the
-  * same epoch-delete file would otherwise be re-read once per task. Keys
-  * are UnsafeProjection outputs, so set membership is byte-level — and
-  * null-safe, the Iceberg equality-delete rule (null matches null). */
+/** Executor-side soft cache of equality-delete KEY SETS — the one
+  * equality-delete index of both read paths: the keyed reader applies it
+  * per split, the spliced scan's [[DvAlive]] filter per data file. Every
+  * split of a tuple re-applies the same delete files, and at 1000
+  * executors the same epoch-delete file would otherwise be re-read once
+  * per task. Keys are UnsafeProjection outputs, so set membership is
+  * byte-level — and null-safe, the Iceberg equality-delete rule (null
+  * matches null). Floating-point keys are normalized on both sides
+  * (-0.0 = 0.0, one NaN), like Spark's join keys. */
 private[sql] object EqDeleteKeyCache {
   private val cache = new java.util.concurrent.ConcurrentHashMap[
     String, java.lang.ref.SoftReference[java.util.HashSet[InternalRow]]]()
+
+  /** `exprs` with float/double values normalized. */
+  def normalized(exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
+      : Seq[org.apache.spark.sql.catalyst.expressions.Expression] =
+    exprs.map(e => e.dataType match {
+      case FloatType | DoubleType =>
+        org.apache.spark.sql.catalyst.optimizer.NormalizeNaNAndZero(e)
+      case _ => e
+    })
+
+  /** The probe-side key projection matching the cached sets' bytes. */
+  def probeProjection(exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
+      : org.apache.spark.sql.catalyst.expressions.UnsafeProjection =
+    org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(normalized(exprs))
 
   /** Union of the per-FILE cached key sets (VERDICT r15 #7: keying the
     * cache by the whole concatenated path list re-read EVERY file in the
@@ -530,18 +548,83 @@ private[sql] object EqDeleteKeyCache {
       val it = cache.entrySet().iterator()
       while (it.hasNext) { if (it.next().getValue.get() == null) it.remove() }
       val set = new java.util.HashSet[InternalRow]()
-      val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-        .create(keySchema)
+      val proj = probeProjection(keySchema.fields.toSeq.zipWithIndex.map {
+        case (f, i) => org.apache.spark.sql.catalyst.expressions
+          .BoundReference(i, f.dataType, f.nullable)
+      })
       val pfs = Array(
         PartitionedFile(InternalRow.empty, SparkPath.fromPathString(path),
           0L, len, Array.empty[String], 0L, len))
-      val reader = factory.createReader(FilePartition(0, pfs))
-      try {
-        while (reader.next()) { set.add(proj(reader.get()).copy()): Unit }
-      } finally reader.close()
+      val part = FilePartition(0, pfs)
+      // the vectorized reader when the factory offers it: the path every
+      // data scan keeps warm, where a row-based parquet read of a fresh
+      // delete file starts cold
+      if (factory.supportColumnarReads(part)) {
+        val reader = factory.createColumnarReader(part)
+        try {
+          while (reader.next()) {
+            val rows = reader.get().rowIterator()
+            while (rows.hasNext) set.add(proj(rows.next()).copy()): Unit
+          }
+        } finally reader.close()
+      } else {
+        val reader = factory.createReader(part)
+        try {
+          while (reader.next()) { set.add(proj(reader.get()).copy()): Unit }
+        } finally reader.close()
+      }
       cache.put(cacheKey, new java.lang.ref.SoftReference(set))
       set
     }
+  }
+}
+
+/** Parquet reader factories built the way Spark's own scans build them. */
+private[sql] object ParquetReaders {
+  /** The exact conf hand-off Spark's own ParquetScan.createReaderFactory
+    * performs — the read-support class and requested schema ride the
+    * broadcast Hadoop conf, not the factory's constructor. Shared by the
+    * keyed scan's data/delete readers and [[DvAlive]]'s delete reads. */
+  def factory(
+      spark: SparkSession, readSchema: StructType, dataSchema: StructType,
+      pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
+      : PartitionReaderFactory = {
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetWriteSupport}
+    import org.apache.spark.sql.internal.SQLConf
+    val sqlConf = spark.sessionState.conf
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    hadoopConf.set(
+      org.apache.parquet.hadoop.ParquetInputFormat.READ_SUPPORT_CLASS,
+      classOf[ParquetReadSupport].getName)
+    hadoopConf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, readSchema.json)
+    hadoopConf.set(ParquetWriteSupport.SPARK_ROW_SCHEMA, readSchema.json)
+    hadoopConf.set(SQLConf.SESSION_LOCAL_TIMEZONE.key,
+      sqlConf.sessionLocalTimeZone)
+    hadoopConf.setBoolean(SQLConf.NESTED_SCHEMA_PRUNING_ENABLED.key,
+      sqlConf.nestedSchemaPruningEnabled)
+    hadoopConf.setBoolean(SQLConf.CASE_SENSITIVE.key,
+      sqlConf.caseSensitiveAnalysis)
+    hadoopConf.setBoolean(SQLConf.PARQUET_BINARY_AS_STRING.key,
+      sqlConf.isParquetBinaryAsString)
+    hadoopConf.setBoolean(SQLConf.PARQUET_INT96_AS_TIMESTAMP.key,
+      sqlConf.isParquetINT96AsTimestamp)
+    hadoopConf.setBoolean(SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key,
+      sqlConf.parquetInferTimestampNTZEnabled)
+    hadoopConf.setBoolean(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key,
+      sqlConf.legacyParquetNanosAsLong)
+    val broadcasted = spark.sparkContext.broadcast(
+      new SerializableConfiguration(hadoopConf))
+    ParquetPartitionReaderFactory(
+      sqlConf, broadcasted,
+      dataSchema = dataSchema,
+      readDataSchema = readSchema,
+      partitionSchema = new StructType(),
+      // row-group/page pruning inside the parquet reader; rows still
+      // pass through Spark's residual Filter above the scan
+      filters = pushed,
+      aggregation = None,
+      options = new ParquetOptions(
+        Map.empty[String, String], sqlConf))
   }
 }
 
@@ -688,7 +771,7 @@ private final class GraftKeyedMorReaderFactory(
   override def createColumnarReader(p: InputPartition)
       : org.apache.spark.sql.connector.read.PartitionReader[
         org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, UnsafeProjection}
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
     import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
     val m = p.asInstanceOf[GraftKeyedMorFilePartition]
     val deleted =
@@ -711,7 +794,7 @@ private final class GraftKeyedMorReaderFactory(
     }
     val keyProj =
       if (keySchema.isEmpty || deleted == null) null
-      else UnsafeProjection.create(keySchema.fields.map(bound))
+      else EqDeleteKeyCache.probeProjection(keySchema.fields.toSeq.map(bound))
     val innerReader = inner.createColumnarReader(p)
     new org.apache.spark.sql.connector.read.PartitionReader[ColumnarBatch] {
       private var current: ColumnarBatch = _
@@ -798,7 +881,7 @@ private final class GraftKeyedMorReaderFactory(
     // output projection both see the filled values)
     val keyProj =
       if (keySchema.isEmpty) null
-      else UnsafeProjection.create(keySchema.fields.map(bound))
+      else EqDeleteKeyCache.probeProjection(keySchema.fields.toSeq.map(bound))
     val outProj =
       if (outSchema.fieldNames.sameElements(extendedSchema.fieldNames)) null
       else UnsafeProjection.create(outSchema.fields.map(bound))
@@ -1039,51 +1122,6 @@ private final class GraftKeyedV2Scan(
     out.result()
   }
 
-  /** The exact conf hand-off Spark's own ParquetScan.createReaderFactory
-    * performs — the read-support class and requested schema ride the
-    * broadcast Hadoop conf, not the factory's constructor. */
-  private def parquetFactory(
-      readSchema: StructType, dataSchema: StructType,
-      pushed: Array[org.apache.spark.sql.sources.Filter])
-      : PartitionReaderFactory = {
-    import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetWriteSupport}
-    import org.apache.spark.sql.internal.SQLConf
-    val sqlConf = spark.sessionState.conf
-    val hadoopConf = spark.sessionState.newHadoopConf()
-    hadoopConf.set(
-      org.apache.parquet.hadoop.ParquetInputFormat.READ_SUPPORT_CLASS,
-      classOf[ParquetReadSupport].getName)
-    hadoopConf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, readSchema.json)
-    hadoopConf.set(ParquetWriteSupport.SPARK_ROW_SCHEMA, readSchema.json)
-    hadoopConf.set(SQLConf.SESSION_LOCAL_TIMEZONE.key,
-      sqlConf.sessionLocalTimeZone)
-    hadoopConf.setBoolean(SQLConf.NESTED_SCHEMA_PRUNING_ENABLED.key,
-      sqlConf.nestedSchemaPruningEnabled)
-    hadoopConf.setBoolean(SQLConf.CASE_SENSITIVE.key,
-      sqlConf.caseSensitiveAnalysis)
-    hadoopConf.setBoolean(SQLConf.PARQUET_BINARY_AS_STRING.key,
-      sqlConf.isParquetBinaryAsString)
-    hadoopConf.setBoolean(SQLConf.PARQUET_INT96_AS_TIMESTAMP.key,
-      sqlConf.isParquetINT96AsTimestamp)
-    hadoopConf.setBoolean(SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key,
-      sqlConf.parquetInferTimestampNTZEnabled)
-    hadoopConf.setBoolean(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key,
-      sqlConf.legacyParquetNanosAsLong)
-    val broadcasted = spark.sparkContext.broadcast(
-      new SerializableConfiguration(hadoopConf))
-    ParquetPartitionReaderFactory(
-      sqlConf, broadcasted,
-      dataSchema = dataSchema,
-      readDataSchema = readSchema,
-      partitionSchema = new StructType(),
-      // row-group/page pruning inside the parquet reader; rows still
-      // pass through Spark's residual Filter above the scan
-      filters = pushed,
-      aggregation = None,
-      options = new ParquetOptions(
-        Map.empty[String, String], sqlConf))
-  }
-
   override def createReaderFactory(): PartitionReaderFactory = {
     val anyDv = keyed.entries.exists(_.dv.isDefined)
     val anyPositional = anyDv || keyed.posDeletes.nonEmpty
@@ -1092,7 +1130,7 @@ private final class GraftKeyedV2Scan(
       // fill happens inside the parquet reader (EXISTS_DEFAULT), so no
       // row-based wrapper is needed (pre-r18 the fill projection pushed
       // the whole scan row-based — Spark rejects mixed-columnar scans)
-      parquetFactory(schema, table.tableSchema, filters)
+      ParquetReaders.factory(spark, schema, table.tableSchema, filters)
     } else {
       // MoR: the data reader must surface the equality-key columns even
       // when the query pruned them, plus Spark's parquet row-index
@@ -1107,9 +1145,9 @@ private final class GraftKeyedV2Scan(
         extended.fields.find(_.name.equalsIgnoreCase(f.name)).getOrElse(f)
       })
       new GraftKeyedMorReaderFactory(
-        inner = parquetFactory(extended, table.tableSchema, filters),
-        deleteReaderFactory = parquetFactory(
-          keyed.eqKeySchema, keyed.eqKeySchema, Array.empty),
+        inner = ParquetReaders.factory(spark, extended, table.tableSchema, filters),
+        deleteReaderFactory = ParquetReaders.factory(spark,
+          keyed.eqKeySchema, keyed.eqKeySchema),
         extendedSchema = extended,
         keySchema = keySchemaAligned,
         outSchema = schema,
@@ -1117,8 +1155,8 @@ private final class GraftKeyedV2Scan(
         // position-delete files read by NAME (no declared field ids:
         // the spec's reserved ids are metadata our own writer omits and
         // name matching resolves either way)
-        posDeleteReaderFactory = parquetFactory(
-          PosDeleteSchema, PosDeleteSchema, Array.empty))
+        posDeleteReaderFactory = ParquetReaders.factory(spark,
+          PosDeleteSchema, PosDeleteSchema))
     }
   }
 

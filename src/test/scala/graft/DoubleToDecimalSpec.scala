@@ -56,11 +56,29 @@ class DoubleToDecimalSpec extends AnyFunSuite with BeforeAndAfterAll {
   // direct unit-level check too (interpreted eval path)
   private def compareUnit(x: Double, scale: Int): Unit = {
     val fast = graft.functions.DoubleToDecimal18.toDec(
-      x, scale, math.pow(10d, scale))
+      x, scale, graft.functions.DoubleToDecimal18.Pow10(scale))
     val ref = graft.functions.DoubleToDecimal18.slow(x, scale)
     assert((fast == null && ref == null) ||
            (fast != null && ref != null && fast.equals(ref)),
       s"toDec($x, $scale) = $fast but reference gives $ref")
+  }
+
+  test("the power table is exactly 10^scale for every scale 0..15") {
+    val pows = graft.functions.DoubleToDecimal18.Pow10
+    assert(pows.length === 16)
+    (0 to 15).foreach { s =>
+      assert(new java.math.BigDecimal(pows(s)) === java.math.BigDecimal.TEN.pow(s),
+        s"Pow10($s) is not exact")
+    }
+  }
+
+  test("every scale 0..15 agrees with the cast, eval and codegen") {
+    val values = Seq(0.0, -0.0, 1.0, -1.0, 0.5, 2.5, -2.5, 0.1, 0.125, 1.005,
+      3.14159265358979, 123.456789, -98765.4321, 1e-7, 5e-16, 1234.5678901234)
+    (0 to 15).foreach { s =>
+      values.foreach(compareUnit(_, s))
+      compare(values.map(v => java.lang.Double.valueOf(v)), s)
+    }
   }
 
   test("directed boundary values, scale 6") {

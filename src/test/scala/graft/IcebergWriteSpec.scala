@@ -555,11 +555,21 @@ class IcebergWriteSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     val df = IcebergScan.scan(spark, table)
     assert(df.count() === nation.count() - 4)
-    // the group must be ONE multi-path relation (its root paths are the four
-    // delete dirs), not one relation per file — per-file driver reads would
-    // serialize 100k footer opens at scale before the plan even composes
+    // the per-file filter carries the four files as ONE group (one key
+    // index per data file, not one per delete file)
+    val filters = df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+      case d: graft.sql.DvAlive => d
+    }))
+    assert(filters.size === 1)
+    assert(filters.head.spec.groups.map(_.map(_.files.size)) === Seq(Seq(4)))
+    // above the broadcast threshold (the anti join), the group must be ONE
+    // multi-path relation (its root paths are the four delete dirs), not
+    // one relation per file — per-file driver reads would serialize 100k
+    // footer opens at scale before the plan even composes
+    val joined = IcebergScan.scan(spark, table, Options(broadcastDeleteThreshold = 0L))
+    assert(joined.count() === nation.count() - 4)
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    val delRelations = df.queryExecution.optimizedPlan.collect {
+    val delRelations = joined.queryExecution.optimizedPlan.collect {
       case l: LogicalRelation
           if l.relation.isInstanceOf[HadoopFsRelation] &&
             l.relation.asInstanceOf[HadoopFsRelation]
@@ -597,12 +607,23 @@ class IcebergWriteSpec extends AnyFunSuite with BeforeAndAfterAll {
     val scanned = IcebergScan.scan(spark, table)
     assert(scanned.filter(col("dt") === d0).count() === 0)
     assert(scanned.count() === events.filter(col("dt") =!= d0).count())
-    // part 2: the plan splits — unaffected files bypass the anti join
-    // (a Union with exactly one LeftAnti branch), instead of funneling
-    // every partition's rows through the join
-    val plan = scanned.queryExecution.optimizedPlan.toString
-    assert(plan.contains("Union"), plan.take(3000))
-    assert("LeftAnti".r.findAllIn(plan).size === 1, plan.take(3000))
+    // part 2: the delete applies through the per-file graft_dv_alive
+    // filter — no join, no Union — and only day d0's files, whose key
+    // bounds the delete can reach, are in its spec; every other file
+    // passes unprobed
+    val optimized = scanned.queryExecution.optimizedPlan
+    val plan = optimized.toString
+    assert(!plan.contains("Union") && !plan.contains("LeftAnti"), plan.take(3000))
+    val filters = optimized.flatMap(_.expressions.flatMap(_.collect {
+      case d: graft.sql.DvAlive => d
+    }))
+    assert(filters.size === 1, plan.take(3000))
+    val dataFiles = IcebergScan.scan(spark, table, Options(mode = "list_files"))
+      .collect().count(_.getString(1) === "data")
+    val d0Files = IcebergScan.scan(spark, table, Options(mode = "list_files",
+      filters = Seq(ColPredicate("dt", Eq, d0.toString)))).collect().count(_.getString(1) === "data")
+    assert(filters.head.spec.files.size === d0Files && d0Files < dataFiles,
+      s"probed ${filters.head.spec.files.size} files, d0 has $d0Files of $dataFiles")
 
     // delete files written with key bounds + zero null counts recorded
     val eqEntry = graft.iceberg.ManifestReader.loadTable(
