@@ -73,29 +73,6 @@ object GraftFunctions {
        }
        DoubleToDecimal18(exprs.head, scale)
      }),
-    (FunctionIdentifier("graft_shingles"),
-     new ExpressionInfo(classOf[Shingles].getCanonicalName, null,
-       "graft_shingles", "space-joined word n-grams of a string array", ""),
-     (exprs: Seq[Expression]) => {
-       require(exprs.length == 3,
-         s"graft_shingles expects 3 arguments, got ${exprs.length}")
-       def const(e: Expression, what: String): Any = e match {
-         case c if c.foldable => c.eval()
-         case other => throw new IllegalArgumentException(
-           s"graft_shingles: $what must be a constant, got '${other.sql}'")
-       }
-       val n = const(exprs(1), "n") match {
-         case i: Int if i >= 1 => i
-         case other => throw new IllegalArgumentException(
-           s"graft_shingles: n must be a positive Int literal, got $other")
-       }
-       val distinct = const(exprs(2), "distinct") match {
-         case b: Boolean => b
-         case other => throw new IllegalArgumentException(
-           s"graft_shingles: distinct must be a Boolean literal, got $other")
-       }
-       Shingles(exprs.head, n, distinct)
-     }),
     (FunctionIdentifier("graft_theta"),
      new ExpressionInfo(classOf[ThetaSketchAgg].getCanonicalName, null,
        "graft_theta", "KMV theta sketch of a pre-hashed long column (binary)", ""),

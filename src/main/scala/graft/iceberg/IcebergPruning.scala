@@ -657,6 +657,26 @@ object IcebergPruning {
     }
   }
 
+  /** Position-delete scoping, the one check of every planner: can a
+    * delete file whose `file_path` column has bounds `lo`/`hi` (recorded
+    * under the reserved id [[IcebergWriter.PosDeleteFilePathFieldId]])
+    * reference the data file recorded in manifests as `rawPath`? Unsigned
+    * byte order (Iceberg's binary order for strings); truncated bounds
+    * stay sound — a truncated lower bound only lowers, a
+    * truncated-incremented upper only raises. Absent bounds (foreign
+    * writers) = may reference. */
+  def pathInBounds(
+      lo: Option[Array[Byte]], hi: Option[Array[Byte]], rawPath: String): Boolean = {
+    lazy val p = rawPath.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    lo.forall(java.util.Arrays.compareUnsigned(p, _) >= 0) &&
+      hi.forall(java.util.Arrays.compareUnsigned(p, _) <= 0)
+  }
+
+  /** [[pathInBounds]] over a position-delete manifest entry's bounds. */
+  def posDeleteMayReference(d: ManifestEntry, rawPath: String): Boolean =
+    pathInBounds(d.lowerBounds.get(IcebergWriter.PosDeleteFilePathFieldId),
+      d.upperBounds.get(IcebergWriter.PosDeleteFilePathFieldId), rawPath)
+
   /** The residual Spark filter equivalent to `predicates` — always applied
     * on top of the pruned scan so pruning can never change semantics. */
   def residual(predicates: Seq[ColPredicate], schema: Seq[Column]): Option[SqlColumn] = {

@@ -34,9 +34,9 @@ object IcebergScan {
       versionNameFormat: String = DefaultTableVersionFormat,
       mode: String = "default",
       // analogue of the reference's explicit_cardinality-driven join costing:
-      // delete sides at or below this many rows are broadcast (position
-      // deletes) or applied by the per-file filter (equality-delete
-      // groups); larger ones take the shuffled anti join.
+      // equality-delete groups at or below this many rows are applied by
+      // the per-file filter; larger ones take the shuffled anti join.
+      // Position deletes and DVs take the filter at every size.
       broadcastDeleteThreshold: Long = 5L * 1000 * 1000,
       // Simple predicates evaluated driver-side against partition specs and
       // manifest column bounds to SKIP whole data files before the plan is
@@ -91,8 +91,9 @@ object IcebergScan {
 
   /** Spec-fixed position-delete columns (delete files may also carry a
     * `row` struct — pruned by this projection). No field ids: name
-    * matching, exactly what the schema inference this replaces did. */
-  private val posDeleteSchema = StructType(Seq(
+    * matching, exactly what the schema inference this replaces did. The
+    * one definition of every position-delete reader. */
+  private[graft] val PosDeleteSchema = StructType(Seq(
     StructField("file_path", StringType, nullable = false),
     StructField("pos", LongType, nullable = false)))
 
@@ -108,10 +109,10 @@ object IcebergScan {
     if (opts.allowMovedPaths) IcebergIO.fullPath(tablePath, p) else p
 
   /** iceberg_scan — the snapshot's data as a DataFrame, with v2 position
-    * deletes subtracted via a null-safe anti join (J1,
-    * iceberg_scan.cpp:156-199), and v3 deletion vectors plus equality
-    * deletes applied by one per-file `graft_dv_alive` filter (the anti
-    * join only for equality-delete groups above
+    * deletes, v3 deletion vectors and equality deletes applied by one
+    * per-file `graft_dv_alive` filter (the reference subtracts position
+    * deletes with a null-safe anti join, J1, iceberg_scan.cpp:156-199; an
+    * anti join remains here only for equality-delete groups above
     * `broadcastDeleteThreshold`). */
   def scan(spark: SparkSession, path: String, opts: Options = Options()): DataFrame = {
     val snapshot = selectSnapshot(spark, path, opts)
@@ -159,21 +160,13 @@ object IcebergScan {
     val dvEntries = dvAll
       .filter { case (e, _) => dataPathSet(e.referencedDataFile.get) }
       .groupBy(_._1.referencedDataFile.get).values.map(_.maxBy(_._2)).toSeq
-    // Position-delete SCOPING (driver-side): a delete file recording
-    // `file_path` bounds under the reserved id (spec: 2147483546) is
-    // dropped when no surviving data file's manifest path falls in that
-    // range — a pruned scan of untouched partitions then reads zero
+    // Position-delete SCOPING (driver-side): a delete file whose
+    // `file_path` bounds no surviving data file's manifest path falls in
+    // is dropped — a pruned scan of untouched partitions then reads zero
     // position-delete files. Bounds absent (foreign writers) → keep.
     val deleteEntries = deleteEntriesAll.filter { case (e, _) =>
-      val id = IcebergWriter.PosDeleteFilePathFieldId
-      (e.lowerBounds.get(id).map(new String(_, "UTF-8")),
-       e.upperBounds.get(id).map(new String(_, "UTF-8"))) match {
-        case (Some(lo), Some(hi)) => dataEntries.exists { case (de, _) =>
-          IcebergPruning.utf8Compare(de.filePath, lo) >= 0 &&
-          IcebergPruning.utf8Compare(de.filePath, hi) <= 0
-        }
-        case _ => true
-      }
+      dataEntries.exists { case (de, _) =>
+        IcebergPruning.posDeleteMayReference(e, de.filePath) }
     }
     // Equality deletes (content==2): the capability the reference defines
     // but never executes (iceberg_types.hpp:45 enum only) — implemented
@@ -415,11 +408,11 @@ object IcebergScan {
         "Spark's ORC reader exposes no row positions; use equality " +
         "deletes (deleteEquality/merge) on ORC-format tables")
 
-    // Spark reports _metadata.file_path as a fully-qualified URI, while the
-    // delete files reference data files by the exact strings the writer put
-    // in the manifests. Bridge on the driver: passed-path → qualified URI,
-    // shipped as a small broadcast relation (scales to O(100k) files without
-    // bloating the plan, unlike a literal map).
+    // Spark reports _metadata.file_path as a fully-qualified URI, while
+    // manifests and position-delete files record the writer's exact
+    // strings. Bridge on the driver: the delete filter's spec and the
+    // lineage/anti-join broadcasts are keyed by the qualified URI, and the
+    // spec carries each file's raw path for the position-delete lookup.
     val conf = hadoopConf(spark)
     val qualify: String => String = IcebergIO.qualified(_, conf)
     import spark.implicits._
@@ -435,8 +428,9 @@ object IcebergScan {
     // --- v3 row lineage: materialized column, else manifest inheritance ---
     if (opts.rowLineage) {
       // per-file (first_row_id, data sequence) via a small broadcast —
-      // the same qualified-URI bridge as the MoR join; a file's row N has
-      // _row_id = first_row_id + N unless the file materializes the ids
+      // the same qualified-URI bridge as the delete filter; a file's row
+      // N has _row_id = first_row_id + N unless the file materializes
+      // the ids
       val lineageMap = dataEntries.map { case (e, seq) =>
         (qualify(resolved(path, e.filePath, opts)), e.firstRowId, seq)
       }.toDF("__lin_qual", "__lin_base", "__lin_seq")
@@ -451,20 +445,18 @@ object IcebergScan {
 
     // --- merge-on-read deletes ---
     // ONE join-free filter, graft_dv_alive (graft.sql.DvAlive), applies
-    // each data file's v3 DELETION VECTOR (one per file, deduped above)
-    // and the EQUALITY deletes that reach it, from a spec of coordinates
-    // only. Joins remain for v2 parquet position deletes and for
-    // equality-delete groups above broadcastDeleteThreshold rows, keyed
-    // on a type the byte-wise probe cannot compare like `<=>`, or holding
-    // a file whose size the manifest does not record (legacy writers; the
-    // executor-side reader needs the length).
+    // to each data file its v3 DELETION VECTOR (one per file, deduped
+    // above) or else the v2 parquet POSITION-delete files that may
+    // reference it, and the EQUALITY deletes that reach it, from a spec of
+    // coordinates only. The anti join remains for equality-delete groups
+    // above broadcastDeleteThreshold rows or keyed on a type the byte-wise
+    // probe cannot compare like `<=>`.
     val eqGroups =
       if (eqEntries.isEmpty || opts.skipEqualityDeletes) Seq.empty
       else eqKeyGroups(spark, conf, path, opts, eqEntries, snapshot)
     val (filterGroups, joinGroups) = eqGroups.partition { g =>
       g.files.map(_._1.recordCount).sum <= opts.broadcastDeleteThreshold &&
-        g.keyStruct.fields.forall(f => graft.sql.DvAlive.probeable(f.dataType)) &&
-        g.files.forall(_._1.fileSizeInBytes > 0)
+        g.keyStruct.fields.forall(f => graft.sql.DvAlive.probeable(f.dataType))
     }
     val fileDeletes: Map[String, graft.sql.FileDeletes] = {
       val dvByFile = dvEntries.map { case (e, _) =>
@@ -478,15 +470,28 @@ object IcebergScan {
         (IcebergPruning.eqDeleteMayMatch(g.files.map(_._1), g.keyCols),
          g.files.map(_._2).max)
       }
+      val posFiles = deleteEntries.map { case (e, delSeq) =>
+        val p = resolved(path, e.filePath, opts)
+        (e, delSeq, (p, deleteFileLength(e, p, conf)))
+      }
       dataEntries.flatMap { case (de, dseq) =>
         val gs = scopes.indices.filter { i =>
           val (mayMatch, maxDelSeq) = scopes(i)
           dseq < maxDelSeq && mayMatch(de)
         }
         val dv = dvByFile.get(de.filePath)
-        if (dv.isEmpty && gs.isEmpty) None
+        // a position delete reaches data files at or before its own
+        // sequence, within its file_path bounds; a DV is the whole truth
+        // for its file (the spec's v3 read rule: DV writes absorb them)
+        val pos =
+          if (dv.isDefined) Seq.empty
+          else posFiles.collect {
+            case (e, delSeq, coords) if dseq <= delSeq &&
+              IcebergPruning.posDeleteMayReference(e, de.filePath) => coords
+          }
+        if (dv.isEmpty && gs.isEmpty && pos.isEmpty) None
         else Some(qualify(resolved(path, de.filePath, opts)) ->
-          graft.sql.FileDeletes(dv, dseq, gs))
+          graft.sql.FileDeletes(dv, dseq, gs, de.filePath, pos))
       }.toMap
     }
     if (fileDeletes.nonEmpty)
@@ -494,42 +499,12 @@ object IcebergScan {
         filterGroups.map { g =>
           val pools = g.pools.map { case (schema, fs) =>
             schema -> fs.map { case (e, dseq) =>
-              graft.sql.EqDeleteFile(resolved(path, e.filePath, opts), e.fileSizeInBytes, dseq)
+              val p = resolved(path, e.filePath, opts)
+              graft.sql.EqDeleteFile(p, deleteFileLength(e, p, conf), dseq)
             }
           }
           (g.cols, pools)
         }))
-
-    // v2 parquet position deletes
-    if (deleteEntries.nonEmpty) {
-      val fileMap = dataEntries.map { case (e, _) =>
-        val passed = resolved(path, e.filePath, opts)
-        (e.filePath, qualify(passed))
-      }.toDF("__orig_path", "__qual_path")
-
-      // Cardinality-driven join costing (reference's explicit_cardinality,
-      // iceberg_scan.cpp:283-294): the delete-side manifest stats drive an
-      // explicit broadcast below. Data-side stats are deliberately NOT
-      // injected — Spark's AQE re-plans the join from runtime statistics,
-      // which subsumes a static data-side estimate.
-      val deleteCard = deleteEntries.map(_._1.recordCount).sum
-      // the spec's DV-wins read rule must still drop parquet
-      // position-delete rows aimed at DV'd files, whose DVs apply through
-      // the filter above
-      val rawDeletes = posDeleteRows(spark, conf, path, opts, deleteEntries,
-        extraDvTargets = dvEntries.map(_._1.referencedDataFile.get))
-      // Map each position-delete row to the qualified data-file URI. Inner
-      // join also drops deletes pointing at no-longer-live data files.
-      val deletes0 = rawDeletes
-        .join(broadcast(fileMap), col("file_path") === col("__orig_path"))
-        .select(col("__qual_path").as("__del_file"), col("pos").as("__del_pos"))
-      val deletes =
-        if (deleteCard <= opts.broadcastDeleteThreshold) broadcast(deletes0) else deletes0
-      // Null-safe ≡ join keys, mirroring COMPARE_NOT_DISTINCT_FROM (J1).
-      cur = cur.join(deletes,
-        col("__graft_file") <=> col("__del_file") && col("__graft_pos") <=> col("__del_pos"),
-        "left_anti")
-    }
 
     // equality-delete groups the filter does not take: the anti join
     if (joinGroups.nonEmpty) {
@@ -597,6 +572,13 @@ object IcebergScan {
       Seq(keyStruct -> withIds, noIds -> idLess).filter(_._2.nonEmpty)
     }
   }
+
+  /** A delete file's byte length for the executor-side readers: the
+    * manifest's, or — where a foreign or legacy writer left
+    * `file_size_in_bytes` unset — one driver-side getFileStatus. */
+  private def deleteFileLength(e: ManifestEntry, p: String, conf: Configuration): Long =
+    if (e.fileSizeInBytes > 0) e.fileSizeInBytes
+    else { val hp = new Path(p); hp.getFileSystem(conf).getFileStatus(hp).getLen }
 
   /** Equality-delete files grouped by key-column set — the ONE
     * definition of how delete files resolve to key columns, shared by the
@@ -1368,11 +1350,7 @@ object IcebergScan {
   private def posDeleteRows(
       spark: SparkSession, conf: org.apache.hadoop.conf.Configuration,
       root: String, opts: Options,
-      entries: Seq[(ManifestEntry, Long)],
-      // data files whose DVs apply OUTSIDE this relation (the scan's
-      // graft_dv_alive filter) but whose parquet position-delete rows
-      // must still be dropped here (spec v3: the DV is the whole truth)
-      extraDvTargets: Seq[String] = Seq.empty): DataFrame = {
+      entries: Seq[(ManifestEntry, Long)]): DataFrame = {
     import spark.implicits._
     val (dvEntries, parquetEntries) = entries.partition(_._1.isDV)
     val sconf = new org.apache.spark.util.SerializableConfiguration(conf)
@@ -1389,15 +1367,14 @@ object IcebergScan {
     val deleteFiles = parquetEntries.map { case (e, _) =>
       (resolved(root, e.filePath, opts), e.fileSizeInBytes)
     }
-    val dvTargets =
-      (dvEntries.map(_._1.referencedDataFile.get) ++ extraDvTargets).distinct
+    val dvTargets = dvEntries.map(_._1.referencedDataFile.get).distinct
     val parquetRows0 =
       if (deleteFiles.isEmpty) spark.emptyDataset[(String, Long)].toDF("file_path", "pos")
       // explicit spec-fixed schema (name-matched, like the inference it
       // replaces) over a manifest-seeded index: no plan-time footer read
       // or stat per delete file
       else ManifestFileIndex.relation(spark, "parquet", deleteFiles,
-          posDeleteSchema, conf)
+          PosDeleteSchema, conf)
         .getOrElse(spark.read.parquet(deleteFiles.map(_._1): _*))
         .select("file_path", "pos")
     val parquetRows =
@@ -1692,22 +1669,16 @@ object IcebergScan {
     // (reserved field id — mirrors scanLoaded): a partition-local
     // delete leaves other partitions' counting job empty
     val posScoped = posAll.filter { case (e, _) =>
-      val id = IcebergWriter.PosDeleteFilePathFieldId
-      (e.lowerBounds.get(id).map(new String(_, "UTF-8")),
-       e.upperBounds.get(id).map(new String(_, "UTF-8"))) match {
-        case (Some(lo), Some(hi)) => dataWithSeq.exists { case (de, _) =>
-          IcebergPruning.utf8Compare(de.filePath, lo) >= 0 &&
-          IcebergPruning.utf8Compare(de.filePath, hi) <= 0
-        }
-        case _ => true
-      }
+      dataWithSeq.exists { case (de, _) =>
+        IcebergPruning.posDeleteMayReference(e, de.filePath) }
     }
     val posCounts: Map[String, Long] =
       if (posScoped.isEmpty) Map.empty
       else {
         // DV-wins on upgraded tables (ib36): a DV'd file's tombstones
         // come from the vector alone — candidates exclude DV'd files,
-        // exactly like the scan's left_anti against dvTargets
+        // exactly like the scan, whose filter gives a DV'd file no
+        // parquet position-delete files
         val candidates = dataWithSeq.collect {
           case (e, _) if !dvByFile.contains(e.filePath) =>
             (e.filePath, e.recordCount)
@@ -1831,14 +1802,17 @@ object IcebergScan {
       }
     }
 
-  // per-metadata-file override verdicts: superseded metadata.json files
-  // are immutable, so a verdict never changes; bounded LRU like the DV
-  // cardinality cache
+  // per-metadata-file override verdicts, keyed by the metadata-log entry
+  // (timestamp-ms, path): superseded metadata.json files are immutable,
+  // but `v{N}.metadata.json` names repeat when a table is dropped and
+  // recreated at the same location — the path alone would hand the new
+  // table the old one's verdicts. Bounded LRU like the DV cardinality
+  // cache.
   private val metricsHistoryCache =
-    new java.util.LinkedHashMap[String, java.lang.Boolean](
+    new java.util.LinkedHashMap[(Long, String), java.lang.Boolean](
         16, 0.75f, /* accessOrder = */ true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[String, java.lang.Boolean]): Boolean =
+          e: java.util.Map.Entry[(Long, String), java.lang.Boolean]): Boolean =
         size > 1024
     }
   private[iceberg] def clearMetricsHistoryCache(): Unit =
@@ -1856,11 +1830,11 @@ object IcebergScan {
   private def metricsEverOverridden(
       spark: SparkSession, path: String, opts: Options): Boolean = {
     val conf = hadoopConf(spark)
-    def fileOverridden(p: String): Boolean = {
+    def fileOverridden(ts: Long, p: String): Boolean = {
       val resolvedP = if (opts.allowMovedPaths) IcebergIO.fullPath(
         IcebergIO.tableRoot(path), p) else p
-      val cached = metricsHistoryCache.synchronized(
-        metricsHistoryCache.get(resolvedP))
+      val key = (ts, resolvedP)
+      val cached = metricsHistoryCache.synchronized(metricsHistoryCache.get(key))
       if (cached != null) cached.booleanValue
       else {
         val v = scala.util.Try {
@@ -1875,13 +1849,13 @@ object IcebergScan {
           }
         }.getOrElse(true) // unreadable history: refuse
         metricsHistoryCache.synchronized(
-          metricsHistoryCache.put(resolvedP, java.lang.Boolean.valueOf(v)))
+          metricsHistoryCache.put(key, java.lang.Boolean.valueOf(v)))
         v
       }
     }
     scala.util.Try(loadInfo(spark, path, opts)).toOption match {
       case None => true // can't see history: refuse
-      case Some(info) => info.metadataLog.map(_._2).exists(fileOverridden)
+      case Some(info) => info.metadataLog.exists { case (ts, p) => fileOverridden(ts, p) }
     }
   }
 
@@ -2322,7 +2296,7 @@ object IcebergScan {
           (resolved(meta.path, e.filePath, opts), e.fileSizeInBytes)
         }
         ManifestFileIndex.relation(spark, "parquet", files,
-            posDeleteSchema, conf)
+            PosDeleteSchema, conf)
           .getOrElse(spark.read.parquet(files.map(_._1): _*))
           .select(col("file_path"), col("pos"),
             col("_metadata.file_path").as("__pd_qual"))

@@ -832,7 +832,7 @@ object IcebergWriter {
     * files (spec "Reserved field ids"): bounds recorded under it let a
     * planner skip delete files whose target-path range can't intersect the
     * scan's surviving data files. */
-  private[iceberg] val PosDeleteFilePathFieldId = 2147483546
+  private[graft] val PosDeleteFilePathFieldId = 2147483546
 
   /** Position-delete files under `dir` with `file_path` bounds from their
     * footers keyed by the reserved id — the stats the scan's
@@ -3746,8 +3746,8 @@ object IcebergWriter {
 
   /** Row-level DELETE, merge-on-read: rows matching `predicate` are
     * tombstoned by a v2 position-delete file (`file_path`, `pos`) in a new
-    * snapshot — no data file is rewritten. The scan's null-safe anti join
-    * (J1) subtracts them at read time, so this also round-trips the MoR
+    * snapshot — no data file is rewritten. The scan's per-file delete
+    * filter subtracts them at read time, so this also round-trips the MoR
     * read path against our own writer. Positions come from the parquet
     * `_metadata.row_index` of each live data file, keyed by the exact path
     * string the manifests carry. */
@@ -4618,13 +4618,14 @@ object IcebergWriter {
     * small delete file per commit, and every scan reads ALL of them —
     * this rewrite merges them (clustered by target file for join
     * locality) and DROPS dangling tombstones whose target data file is
-    * no longer live (left behind by compaction/overwrite), shrinking the
-    * anti-join's build side to what can actually match. v3 deletion
+    * no longer live (left behind by compaction/overwrite), shrinking what
+    * every scan reads to what can actually match. v3 deletion
     * vectors are already one-per-file and carry forward untouched.
     * Old delete entries are tombstoned under explicit sequence numbers;
     * the consolidated files commit at the new sequence — position
-    * deletes match purely by (file_path, pos), so re-sequencing them
-    * forward never changes which rows are tombstoned. Returns the new
+    * deletes match by (file_path, pos) in data files at or before their
+    * sequence, so re-sequencing them forward never changes which rows are
+    * tombstoned. Returns the new
     * snapshot id, or None when there are no parquet delete files. */
   def rewritePositionDeleteFiles(spark: SparkSession, path: String,
                                  branch: String = "main"): Option[Long] = {

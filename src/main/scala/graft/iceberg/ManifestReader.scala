@@ -530,6 +530,7 @@ object ManifestReader {
     listCache.synchronized(listCache.clear())
     entryCache.synchronized(entryCache.clear())
     IcebergScan.clearDvCardinalityCache()
+    IcebergScan.clearMetricsHistoryCache()
   }
 
   private val manifestsDecodedCtr = new java.util.concurrent.atomic.AtomicLong

@@ -177,16 +177,6 @@ object Puffin {
     (metas, offset + footerSize, footerSize)
   }
 
-  /** Read one raw blob's payload by footer-recorded offset+length. */
-  def readBlob(path: Path, conf: Configuration, offset: Long, length: Long): Array[Byte] = {
-    val in = path.getFileSystem(conf).open(path)
-    try {
-      val bytes = new Array[Byte](length.toInt)
-      in.readFully(offset, bytes)
-      bytes
-    } finally in.close()
-  }
-
   private def footerPayload(metas: Seq[BlobMeta]): Array[Byte] = {
     val root = mapper.createObjectNode()
     val blobs = root.putArray("blobs")

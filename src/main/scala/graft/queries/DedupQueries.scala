@@ -273,18 +273,6 @@ object DedupQueries {
     propagate(labels0, edges, fixpoint = false, maxRounds = 3)
   }
 
-  /** Production variant: iterate to convergence (no label changes) —
-    * correct connected components for any graph diameter. */
-  private[queries] def clusterLabelsFixpoint(
-      s: SparkSession, dir: String, maxRounds: Int = 50): DataFrame = {
-    val cand = minhashCandidates(s, dir)
-    val edges = cand.select(col("doc_a").as("s"), col("doc_b").as("d"))
-      .union(cand.select(col("doc_b").as("s"), col("doc_a").as("d")))
-    val labels0 = Tables.load(s, dir, "documents")
-      .select(col("doc_id"), col("doc_id").as("label"))
-    propagate(labels0, edges, fixpoint = true, maxRounds = maxRounds)
-  }
-
   /** The same propagation as oracle CTEs ending in `l3(doc_id, label)`
     * (expects `cand` from [[minhashCandSql]] in scope). */
   private[queries] val clusterLabelsSql: String = s"""

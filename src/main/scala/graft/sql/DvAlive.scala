@@ -23,16 +23,24 @@ final case class EqDeletePool(keySchema: StructType, files: Seq[EqDeleteFile])(
     val factory: PartitionReaderFactory)
 
 /** What may delete rows of one data file: its deletion vector, its data
-  * sequence number, and the equality-delete groups whose key bounds may
-  * match the file. Which of a group's files apply is decided on the
-  * executor: those with a sequence number strictly above `seq`. */
-final case class FileDeletes(dv: Option[GraftKeyedScan.DvRef], seq: Long, groups: Seq[Int])
+  * sequence number, the equality-delete groups whose key bounds may match
+  * the file, its MANIFEST-recorded path `rawPath` (the domain of the
+  * position-delete files' `file_path` column) and the v2 parquet
+  * position-delete files that may reference it, as (path, length) — none
+  * when the file has a DV, which is the whole truth for its file. Which of
+  * a group's files apply is decided on the executor: those with a sequence
+  * number strictly above `seq`. */
+final case class FileDeletes(
+    dv: Option[GraftKeyedScan.DvRef], seq: Long, groups: Seq[Int],
+    rawPath: String, pos: Seq[(String, Long)])
 
-/** The filter's whole spec: O(data files + delete files), never their
-  * product. `files` is keyed by the qualified data-file URI (the
-  * `_metadata.file_path` domain); a file absent from it passes every row.
-  * `groups(g)` are the pools of key-column set g. */
-final case class DeleteSpec(files: Map[String, FileDeletes], groups: Seq[Seq[EqDeletePool]]) {
+/** The filter's whole spec: one entry per affected data file plus one per
+  * equality-delete file. `files` is keyed by the qualified data-file URI
+  * (the `_metadata.file_path` domain); a file absent from it passes every
+  * row. `groups(g)` are the pools of key-column set g. The position-delete
+  * reader factory sits outside case-class equality like a pool's. */
+final case class DeleteSpec(files: Map[String, FileDeletes], groups: Seq[Seq[EqDeletePool]])(
+    val posFactory: PartitionReaderFactory) {
   // computed once: Catalyst hashes plan expressions repeatedly, and the
   // spec holds an entry per affected data file
   @transient private lazy val hash = scala.util.hashing.MurmurHash3.productHash(this)
@@ -44,9 +52,8 @@ final case class DeleteSpec(files: Map[String, FileDeletes], groups: Seq[Seq[EqD
   * Top-level class so codegen can name it. */
 final class DvAliveState(groupCount: Int) {
   var lastFile: UTF8String = null
-  var positions: Array[Long] = null
-  var di: Int = -1
-  var prevIdx: Long = Long.MinValue
+  /** The current file's deleted positions, or null when none apply. */
+  var cursor: PositionCursor = null
   /** Per group: the keys deleting rows of the current file, or null. */
   val keys = new Array[java.util.HashSet[InternalRow]](groupCount)
   var anyKeys: Boolean = false
@@ -57,36 +64,33 @@ final class DvAliveState(groupCount: Int) {
 }
 
 /** `graft_dv_alive(file, pos, keys…)` — TRUE iff row `pos` of data file
-  * `file` survives the snapshot's deletion vectors AND the equality
-  * deletes that reach it: the merge-on-read filter of the spliced scan.
+  * `file` survives the snapshot's row deletes that reach it — its
+  * deletion vector or v2 parquet position deletes, and equality deletes:
+  * the one merge-on-read filter of the spliced scan.
   *
-  * It replaces two join shapes. For v3 DVs, the (file_path, pos)
-  * broadcast LEFT ANTI join decoded every blob into a row relation and
-  * hashed a path-string key per data row (0.45 s of a 0.60 s DV'd scan at
-  * sf0.1). For equality deletes, a per-row `__data_seq` broadcast join on
-  * the path string, a second broadcast join giving each delete row its
-  * sequence number, the anti join itself, and a `Union` split that read
-  * the table twice to keep unaffected files out of the join — six Spark
-  * jobs for a read a DV-only table serves in two.
+  * Applying them here, not by joins, keeps a deleted read at the two
+  * Spark jobs of a clean one: a (file, pos) or key anti join per delete
+  * kind cost four to six, and hashed a path string per data row.
   *
   * The driver ships only coordinates ([[DeleteSpec]]): per affected data
-  * file its DV blob, data sequence number and candidate key groups
-  * (bounds-scoped, `IcebergPruning.eqDeleteMayMatch`); per delete file
-  * its path, length and sequence number. On the first row of a file the
-  * expression decodes the DV once per (executor, blob) through
-  * [[DvPositionCache]] and unions the keys of the group files with a
-  * strictly greater sequence number, each file read once per executor
-  * through [[EqDeleteKeyCache]] — the same index the keyed reader uses.
-  * Per row: a monotone DV cursor (positions ascend within a split;
-  * backward jumps re-seek by binarySearch), then, only in files some
-  * equality delete reaches, one UnsafeRow set lookup per group. Keys
-  * compare byte-wise after float normalization (-0.0 = 0.0, one NaN),
-  * which is the anti join's null-safe `<=>` under Spark's join-key
-  * normalization; nulls match nulls.
+  * file its DV blob or position-delete files, data sequence number and
+  * candidate key groups (bounds-scoped, `IcebergPruning.eqDeleteMayMatch`);
+  * per equality-delete file its path, length and sequence number. On the
+  * first row of a file the expression loads the file's deleted positions
+  * once per executor — from its DV through [[DvPositionCache]], else from
+  * its position-delete files through [[PosDeleteCache]] — and unions the
+  * keys of the group files with a strictly greater sequence number, each
+  * file read once per executor through [[EqDeleteKeyCache]]: the same
+  * indexes the keyed reader uses. Per row: one [[PositionCursor]] step,
+  * then, only in files some equality delete reaches, one UnsafeRow set
+  * lookup per group. Keys compare byte-wise after float normalization
+  * (-0.0 = 0.0, one NaN), which is the anti join's null-safe `<=>` under
+  * Spark's join-key normalization; nulls match nulls.
   *
   * Children: the file URI, the row position (null on ORC, which carries
-  * no DVs), then each group's key columns cast to its key types. The
-  * Hadoop conf rides the expression for the executor-side blob reads.
+  * no positional deletes), then each group's key columns cast to its key
+  * types. The Hadoop conf rides the expression for the executor-side blob
+  * reads.
   */
 case class DvAlive(
     children: Seq[Expression], spec: DeleteSpec, conf: SerializableConfiguration)
@@ -111,32 +115,25 @@ case class DvAlive(
     }
   }
 
-  /** Re-seat the cursor on the first row of a file, then apply its DV.
-    * Leaves `st.keys` holding the key sets the row must also miss. */
+  /** Re-seat the state on the first row of a file, then apply its
+    * deleted positions. Leaves `st.keys` holding the key sets the row
+    * must also miss. */
   def fileAlive(st: DvAliveState, file: UTF8String, posNull: Boolean, pos: Long): Boolean = {
     if (st.lastFile == null || !st.lastFile.equals(file)) enter(st, file)
-    val ps = st.positions
-    if (ps == null || posNull) return true
-    var deleted = false
-    if (st.di < 0 || pos < st.prevIdx) {
-      val p = java.util.Arrays.binarySearch(ps, pos)
-      if (p >= 0) { st.di = p; deleted = true } else st.di = -p - 1
-    } else {
-      while (st.di < ps.length && ps(st.di) < pos) st.di += 1
-      deleted = st.di < ps.length && ps(st.di) == pos
-    }
-    st.prevIdx = pos
-    !deleted
+    st.cursor == null || posNull || !st.cursor.deleted(pos)
   }
 
   private def enter(st: DvAliveState, file: UTF8String): Unit = {
     // the incoming UTF8String may view a reused buffer — copy the key
     st.lastFile = if (file == null) null else file.clone()
     val fd = if (file == null) null else spec.files.getOrElse(file.toString, null)
-    st.positions =
-      if (fd == null) null else fd.dv.map(DvPositionCache.load(_, conf.value)).orNull
-    st.di = -1
-    st.prevIdx = Long.MinValue
+    val positions =
+      if (fd == null) null
+      else fd.dv.map(DvPositionCache.load(_, conf.value)).getOrElse {
+        if (fd.pos.isEmpty) null
+        else PosDeleteCache.load(fd.pos.toArray, fd.rawPath, spec.posFactory)
+      }
+    st.cursor = if (positions == null) null else new PositionCursor(positions)
     java.util.Arrays.fill(st.keys.asInstanceOf[Array[AnyRef]], null)
     st.anyKeys = false
     if (fd != null) fd.groups.foreach { g =>
@@ -227,6 +224,7 @@ case class DvAlive(
   override def toString: String =
     s"$prettyName(${children.mkString(", ")}; ${spec.files.size} files, " +
       s"${spec.files.values.count(_.dv.isDefined)} DVs, " +
+      s"${spec.files.values.flatMap(_.pos).toSet.size} pos-delete files, " +
       s"${spec.groups.map(_.map(_.files.size).sum).sum} eq-delete files)"
 }
 
@@ -252,7 +250,8 @@ object DvAlive {
       groups: Seq[(Seq[String], Seq[(StructType, Seq[EqDeleteFile])])]): Column = {
     val spec = DeleteSpec(files, groups.map(_._2.map { case (schema, fs) =>
       EqDeletePool(schema, fs)(ParquetReaders.factory(spark, schema, schema))
-    }))
+    }))(if (files.valuesIterator.exists(_.pos.nonEmpty)) PosDeleteCache.factory(spark)
+        else null)
     val keys = groups.flatMap { case (cols, pools) =>
       cols.zip(pools.head._1.fields).map { case (c, f) =>
         Cast(UnresolvedAttribute.quoted(c), f.dataType)

@@ -106,10 +106,6 @@ object GraftKeyedScan {
   def enabled(spark: SparkSession): Boolean =
     spark.conf.getOption(ConfKey).exists(_.toBoolean)
 
-  /** Iceberg reserved field id of the position-delete `file_path`
-    * column — the key its bounds are recorded under in manifests. */
-  private val PosDeletePathId = 2147483546
-
   /** One live v3 deletion vector: the resolved puffin path plus the
     * manifest-recorded blob coordinates (spec data-file fields 143-145 —
     * the reader seeks straight to the roaring bitmap, no footer). */
@@ -141,25 +137,9 @@ object GraftKeyedScan {
       // whole partition). Absent bounds = conservative "may reference".
       pathLo: Option[Array[Byte]] = None,
       pathHi: Option[Array[Byte]] = None) {
-    /** Can this position-delete file reference data file `rawPath`?
-      * Unsigned lexicographic byte compare (Iceberg's binary order for
-      * strings); truncated bounds stay sound — a truncated lower bound
-      * only lowers, a truncated-incremented upper only raises. */
-    def mayReference(rawPath: String): Boolean = {
-      def cmp(a: Array[Byte], b: Array[Byte]): Int = {
-        var i = 0
-        val n = math.min(a.length, b.length)
-        while (i < n) {
-          val d = (a(i) & 0xff) - (b(i) & 0xff)
-          if (d != 0) return d
-          i += 1
-        }
-        a.length - b.length
-      }
-      lazy val p = rawPath.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      pathLo.forall(lo => cmp(p, lo) >= 0) &&
-        pathHi.forall(hi => cmp(p, hi) <= 0)
-    }
+    /** Can this position-delete file reference data file `rawPath`? */
+    def mayReference(rawPath: String): Boolean =
+      IcebergPruning.pathInBounds(pathLo, pathHi, rawPath)
   }
 
   final case class Keyed(
@@ -307,8 +287,8 @@ object GraftKeyedScan {
         if (e.partition.isEmpty) None
         else Some(tupleOf(e).getOrElse(return None))
       EqDelete(resolvedPath(e), e.fileSizeInBytes, seq, tuple,
-        pathLo = e.lowerBounds.get(PosDeletePathId),
-        pathHi = e.upperBounds.get(PosDeletePathId))
+        pathLo = e.lowerBounds.get(IcebergWriter.PosDeleteFilePathFieldId),
+        pathHi = e.upperBounds.get(IcebergWriter.PosDeleteFilePathFieldId))
     }
     // v3 deletion vectors: ONE live DV per data file (the spec
     // invariant — a rewrite REPLACES the old vector), addressed by the
@@ -654,11 +634,19 @@ private[sql] object DvPositionCache {
 /** Executor-side soft cache of PARQUET position-delete files, decoded
   * once into a (file_path → sorted positions) map: one epoch's delete
   * file can reference thousands of data files, and re-reading it once
-  * per referenced file would make cold I/O quadratic. */
+  * per referenced file would make cold I/O quadratic. The one v2
+  * position-delete index of both read paths: the keyed reader applies it
+  * per split, the spliced scan's [[DvAlive]] filter per data file. */
 private[sql] object PosDeleteCache {
   private val cache = new java.util.concurrent.ConcurrentHashMap[
     String, java.lang.ref.SoftReference[
       java.util.HashMap[String, Array[Long]]]]()
+
+  /** The reader [[load]] takes: `file_path`/`pos` by NAME (no declared
+    * field ids — the spec's reserved ids are metadata some writers omit,
+    * and name matching resolves either way). */
+  def factory(spark: SparkSession): PartitionReaderFactory =
+    ParquetReaders.factory(spark, IcebergScan.PosDeleteSchema, IcebergScan.PosDeleteSchema)
 
   /** Sorted deleted positions of `rawPath` across `files`. */
   def load(files: Array[(String, Long)], rawPath: String,
@@ -677,10 +665,13 @@ private[sql] object PosDeleteCache {
         try {
           while (reader.next()) {
             val r = reader.get()
-            val f = r.getUTF8String(0).toString
-            var b = builders.get(f)
-            if (b == null) { b = Array.newBuilder[Long]; builders.put(f, b): Unit }
-            b += r.getLong(1)
+            // a null coordinate deletes nothing (foreign files may hold one)
+            if (!r.isNullAt(0) && !r.isNullAt(1)) {
+              val f = r.getUTF8String(0).toString
+              var b = builders.get(f)
+              if (b == null) { b = Array.newBuilder[Long]; builders.put(f, b): Unit }
+              b += r.getLong(1)
+            }
           }
         } finally reader.close()
         val m = new java.util.HashMap[String, Array[Long]]()
@@ -698,6 +689,31 @@ private[sql] object PosDeleteCache {
       java.util.Arrays.sort(all)
       all
     }
+  }
+}
+
+/** Monotone cursor over one file's sorted deleted positions — the one
+  * position test of both read paths. Rows arrive in ascending position
+  * within a split, so one advance per row replaces log2(n) probe cache
+  * misses; the first row and any backward jump (split boundaries inside
+  * one partition are packed by length, and an interpreted filter's
+  * thread-local state crosses partitions) re-seek with one binarySearch. */
+private[sql] final class PositionCursor(positions: Array[Long]) {
+  private var i = -1
+  private var prev = Long.MinValue
+
+  def deleted(pos: Long): Boolean = {
+    val hit =
+      if (i < 0 || pos < prev) {
+        val p = java.util.Arrays.binarySearch(positions, pos)
+        i = if (p >= 0) p else -p - 1
+        p >= 0
+      } else {
+        while (i < positions.length && positions(i) < pos) i += 1
+        i < positions.length && positions(i) == pos
+      }
+    prev = pos
+    hit
   }
 }
 
@@ -768,24 +784,32 @@ private final class GraftKeyedMorReaderFactory(
   override def supportColumnarReads(p: InputPartition): Boolean =
     inner.supportColumnarReads(p)
 
+  private def deletedKeys(m: GraftKeyedMorFilePartition): java.util.HashSet[InternalRow] =
+    if (m.deleteFiles.isEmpty) null
+    else EqDeleteKeyCache.load(m.deleteFiles, deleteReaderFactory, keySchema)
+
+  /** The split's deleted positions: its DV, else its parquet position
+    * deletes (a DV'd split carries none); null when neither applies. */
+  private def positionCursor(m: GraftKeyedMorFilePartition): PositionCursor = {
+    val ps = m.dv.map(DvPositionCache.load(_, conf.value)).getOrElse {
+      if (m.posDeleteFiles.isEmpty) null
+      else PosDeleteCache.load(m.posDeleteFiles, m.rawPath, posDeleteReaderFactory)
+    }
+    if (ps == null) null else new PositionCursor(ps)
+  }
+
+  private val rowIdxOrd = extendedSchema.fieldNames.indexOf(
+    org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+      .ROW_INDEX_TEMPORARY_COLUMN_NAME)
+
   override def createColumnarReader(p: InputPartition)
       : org.apache.spark.sql.connector.read.PartitionReader[
         org.apache.spark.sql.vectorized.ColumnarBatch] = {
     import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
     import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
     val m = p.asInstanceOf[GraftKeyedMorFilePartition]
-    val deleted =
-      if (m.deleteFiles.isEmpty) null
-      else EqDeleteKeyCache.load(m.deleteFiles, deleteReaderFactory, keySchema)
-    val dvPositions: Array[Long] =
-      m.dv.map(DvPositionCache.load(_, conf.value)).getOrElse {
-        if (m.posDeleteFiles.isEmpty) null
-        else PosDeleteCache.load(m.posDeleteFiles, m.rawPath,
-          posDeleteReaderFactory)
-      }
-    val rowIdxOrd = extendedSchema.fieldNames.indexOf(
-      org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-        .ROW_INDEX_TEMPORARY_COLUMN_NAME)
+    val deleted = deletedKeys(m)
+    val cursor = positionCursor(m)
     val outOrds: Array[Int] =
       outSchema.fields.map(f => extendedSchema.fieldIndex(f.name))
     def bound(f: StructField): Expression = {
@@ -798,35 +822,19 @@ private final class GraftKeyedMorReaderFactory(
     val innerReader = inner.createColumnarReader(p)
     new org.apache.spark.sql.connector.read.PartitionReader[ColumnarBatch] {
       private var current: ColumnarBatch = _
-      // DV cursor — same monotone-advance scheme as the row-based reader
-      private var di = -1
-      private var prevIdx = Long.MinValue
       override def next(): Boolean = {
         while (innerReader.next()) {
           val b = innerReader.get()
           val n = b.numRows()
           val survives =
-            if (deleted == null && dvPositions == null) n
+            if (deleted == null && cursor == null) n
             else {
               val mapping = new Array[Int](n)
               var k = 0
-              val idxCol = if (dvPositions == null) null else b.column(rowIdxOrd)
+              val idxCol = if (cursor == null) null else b.column(rowIdxOrd)
               var i = 0
               while (i < n) {
-                var dvDeleted = false
-                if (dvPositions != null) {
-                  val idx = idxCol.getLong(i)
-                  if (di < 0 || idx < prevIdx) {
-                    val pos = java.util.Arrays.binarySearch(dvPositions, idx)
-                    if (pos >= 0) { di = pos; dvDeleted = true }
-                    else di = -pos - 1
-                  } else {
-                    while (di < dvPositions.length && dvPositions(di) < idx) di += 1
-                    dvDeleted = di < dvPositions.length && dvPositions(di) == idx
-                  }
-                  prevIdx = idx
-                }
-                if (!dvDeleted &&
+                if ((cursor == null || !cursor.deleted(idxCol.getLong(i))) &&
                     (deleted == null || !deleted.contains(keyProj(b.getRow(i))))) {
                   mapping(k) = i; k += 1
                 }
@@ -859,18 +867,8 @@ private final class GraftKeyedMorReaderFactory(
       : org.apache.spark.sql.connector.read.PartitionReader[InternalRow] = {
     import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, UnsafeProjection}
     val m = p.asInstanceOf[GraftKeyedMorFilePartition]
-    val deleted =
-      if (m.deleteFiles.isEmpty) null
-      else EqDeleteKeyCache.load(m.deleteFiles, deleteReaderFactory, keySchema)
-    val dvPositions: Array[Long] =
-      m.dv.map(DvPositionCache.load(_, conf.value)).getOrElse {
-        if (m.posDeleteFiles.isEmpty) null
-        else PosDeleteCache.load(m.posDeleteFiles, m.rawPath,
-          posDeleteReaderFactory)
-      }
-    val rowIdxOrd = extendedSchema.fieldNames.indexOf(
-      org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-        .ROW_INDEX_TEMPORARY_COLUMN_NAME)
+    val deleted = deletedKeys(m)
+    val cursor = positionCursor(m)
     val dataReader = inner.createReader(p)
     def bound(f: StructField): Expression = {
       val i = extendedSchema.fieldIndex(f.name)
@@ -887,32 +885,10 @@ private final class GraftKeyedMorReaderFactory(
       else UnsafeProjection.create(outSchema.fields.map(bound))
     new org.apache.spark.sql.connector.read.PartitionReader[InternalRow] {
       private var current: InternalRow = _
-      // Sorted-positions CURSOR instead of a per-row binarySearch
-      // (round 20, guide §"per-task work"): the parquet row-index
-      // generator emits ascending positions within a split, so one
-      // cursor advance per row replaces log2(|DV|) probe cache misses.
-      // Split boundaries inside one FilePartition can jump BACKWARD
-      // (splits are packed sorted by length), so a backward jump —
-      // and the first row — re-seeks with one binarySearch.
-      private var di = -1
-      private var prevIdx = Long.MinValue
       override def next(): Boolean = {
         while (dataReader.next()) {
           val r = dataReader.get()
-          var dvDeleted = false
-          if (dvPositions != null) {
-            val idx = r.getLong(rowIdxOrd)
-            if (di < 0 || idx < prevIdx) {
-              val p = java.util.Arrays.binarySearch(dvPositions, idx)
-              if (p >= 0) { di = p; dvDeleted = true }
-              else di = -p - 1
-            } else {
-              while (di < dvPositions.length && dvPositions(di) < idx) di += 1
-              dvDeleted = di < dvPositions.length && dvPositions(di) == idx
-            }
-            prevIdx = idx
-          }
-          if (!dvDeleted &&
+          if ((cursor == null || !cursor.deleted(r.getLong(rowIdxOrd))) &&
               (deleted == null || !deleted.contains(keyProj(r)))) {
             current = if (outProj == null) r else outProj(r)
             return true
@@ -1152,17 +1128,9 @@ private final class GraftKeyedV2Scan(
         keySchema = keySchemaAligned,
         outSchema = schema,
         conf = new SerializableConfiguration(spark.sessionState.newHadoopConf()),
-        // position-delete files read by NAME (no declared field ids:
-        // the spec's reserved ids are metadata our own writer omits and
-        // name matching resolves either way)
-        posDeleteReaderFactory = ParquetReaders.factory(spark,
-          PosDeleteSchema, PosDeleteSchema))
+        posDeleteReaderFactory = PosDeleteCache.factory(spark))
     }
   }
-
-  private val PosDeleteSchema = StructType(Seq(
-    StructField("file_path", StringType, nullable = false),
-    StructField("pos", LongType, nullable = false)))
 }
 
 private[sql] object GraftKeyedV2Scan {

@@ -121,7 +121,7 @@ object GraftProcedures {
         Seq(row(out.map(Long.box).orNull))
       }),
     ProcDef("rewrite_position_delete_files",
-      "compact the MoR delete side (shrinks every scan's anti-join build)",
+      "compact the MoR delete side (shrinks what every scan's delete filter reads)",
       Seq(TableParam),
       StructType(Seq(StructField("rewritten_snapshot_id", LongType, nullable = true))),
       (s, ops, a) => Seq(row(ops.withTableWrite(s, a.str("table"))(p =>

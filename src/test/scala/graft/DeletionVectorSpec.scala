@@ -248,5 +248,11 @@ class DeletionVectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     IcebergWriter.delete(spark, table, col("o_orderkey") <= cut)
     val (dvs, parquet) = liveDeletes(table)
     assert(dvs.isEmpty && parquet.nonEmpty)
+    // ...which the spliced scan applies through its one per-file filter
+    val df = IcebergScan.scan(spark, table)
+    assert(df.filter(col("o_orderkey") <= cut).count() === 0L && df.count() > 0L)
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.linesIterator.count(_.contains("Filter graft_dv_alive")) === 1 &&
+      !plan.contains("Join"), plan.take(3000))
   }
 }

@@ -1328,6 +1328,31 @@ class GraftCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(q5.head.getString(0) === "abc")
     assert(scansOf(q5) > 0,
       "a historically-overridden metrics config must refuse string min")
+    // a table dropped and recreated at the same location re-mints the
+    // same v{N}.metadata.json names: the old table's "never overridden"
+    // verdicts must not carry over to the new table's history
+    val p6 = s"$wh/db/smin_reuse"
+    def short(v: String) =
+      spark.range(0, 5).select(col("id").as("k"), lit(v).as("nm"))
+    (1 to 5).foreach(_ => IcebergWriter.write(short("abc"), p6)) // log v1..v4
+    val q6 = spark.sql("SELECT min(nm) AS lo FROM graft.db.smin_reuse")
+    assert(q6.head.getString(0) === "abc" && scansOf(q6) === 0)
+    spark.sql("DROP TABLE graft.db.smin_reuse")
+    IcebergWriter.write(short("zz"), p6)
+    IcebergWriter.setProperties(spark, p6,
+      Map("write.metadata.metrics.default" -> "truncate(2)"))
+    // written as a writer honoring truncate(2) writes it: parquet's own
+    // footer-statistics truncation leaves the lower bound "ab", which
+    // reads like an exact sub-16-code-point minimum
+    spark.conf.set("parquet.statistics.truncate.length", "2")
+    try IcebergWriter.write(short("abcdefgh"), p6)
+    finally spark.conf.unset("parquet.statistics.truncate.length")
+    IcebergWriter.setProperties(spark, p6,
+      remove = Seq("write.metadata.metrics.default"))
+    val plain = IcebergScan.scan(spark, p6).agg(min("nm")).head.getString(0)
+    assert(plain === "abcdefgh")
+    assert(spark.sql("SELECT min(nm) AS lo FROM graft.db.smin_reuse")
+      .head.getString(0) === plain)
   }
 
   test("equality deletes taint only the tuples they may match (round 19)") {

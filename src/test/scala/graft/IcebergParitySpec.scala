@@ -17,9 +17,10 @@ import graft.iceberg.IcebergScan.Options
   * wrong codec / missing dir / bad version format errors
   * (iceberg_snapshots.test:30-49, iceberg_metadata.test:41-49), v1 and gzip
   * metadata goldens (iceberg_metadata.test), no-hint guessing variants, and
-  * the equality-delete read path over a FOREIGN-written fixture (the
-  * reference's enum defines the content type but nothing executes it —
-  * iceberg_types.hpp:45; here it is a real engine extension).
+  * the equality- and position-delete read paths over FOREIGN-written
+  * fixtures (for equality deletes the reference's enum defines the content
+  * type but nothing executes it — iceberg_types.hpp:45; here it is a real
+  * engine extension).
   */
 class IcebergParitySpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -124,35 +125,40 @@ class IcebergParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally spark.conf.unset("unsafe_enable_version_guessing")
   }
 
-  // ---- foreign-written equality deletes ----------------------------------
+  // ---- foreign-written deletes -------------------------------------------
 
   /** Build a minimal v2 table BY HAND (not via IcebergWriter) whose
-    * snapshot carries data files at two sequence numbers and one
-    * equality-delete file WITHOUT the `equality_ids` manifest field —
-    * exercising the fallback where the delete file's own parquet schema
-    * defines the key columns, plus the spec's strictly-older sequence
-    * scoping. Layout: seq 1 data {1..10}, seq 2 delete {x∈(3,5)},
-    * seq 3 data {3}. Expected read: {1,2,4,6,7,8,9,10} ∪ {3}. */
-  private def buildEqualityDeleteTable(): String = {
+    * snapshot carries data files at two sequence numbers and one delete
+    * file of content `deleteContent` at seq 2, written by `deletes` from
+    * the two data files' paths. The manifests record no
+    * `file_size_in_bytes` and no `equality_ids` — a legacy writer's shape.
+    * Layout: seq 1 data {1..10}, seq 2 delete, seq 3 data {3}. */
+  private def buildForeignV2Table(
+      deleteContent: Int)(
+      deletes: (String, String) => (org.apache.spark.sql.DataFrame, Boolean)): String = {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_eqdel_").toFile
+    val root = Files.createTempDirectory("graft_foreigndel_").toFile
     val metaDir = new File(root, "metadata"); metaDir.mkdirs()
 
-    def writeOneParquet(df: org.apache.spark.sql.DataFrame, dir: String): String = {
+    def writeOneParquet(
+        df: org.apache.spark.sql.DataFrame, dir: String, ids: Boolean = true): String = {
       import org.apache.spark.sql.functions.col
       import org.apache.spark.sql.types.MetadataBuilder
       // field-id metadata, like any real Iceberg writer (the session reads
-      // by field id)
-      val withIds = df.select(df.schema.fieldNames.zipWithIndex.map { case (n, i) =>
-        col(n).as(n, new MetadataBuilder().putLong("parquet.field.id", i + 1L).build())
-      }.toIndexedSeq: _*)
-      withIds.coalesce(1).write.parquet(s"${root.getAbsolutePath}/$dir")
+      // by field id), unless the file is to be matched by name only
+      val out =
+        if (!ids) df
+        else df.select(df.schema.fieldNames.zipWithIndex.map { case (n, i) =>
+          col(n).as(n, new MetadataBuilder().putLong("parquet.field.id", i + 1L).build())
+        }.toIndexedSeq: _*)
+      out.coalesce(1).write.parquet(s"${root.getAbsolutePath}/$dir")
       new File(s"${root.getAbsolutePath}/$dir").listFiles()
         .filter(_.getName.endsWith(".parquet")).head.getAbsolutePath
     }
     val data1 = writeOneParquet((1L to 10L).toDF("x"), "data/d1")
-    val del2 = writeOneParquet(Seq(3L, 5L).toDF("x"), "data/del2")
     val data3 = writeOneParquet(Seq(3L).toDF("x"), "data/d3")
+    val (delDf, delIds) = deletes(data1, data3)
+    val del2 = writeOneParquet(delDf, "data/del2", delIds)
 
     val manifestSchema = new Schema.Parser().parse("""
       {"type":"record","name":"manifest_entry","fields":[
@@ -176,7 +182,7 @@ class IcebergParitySpec extends AnyFunSuite with BeforeAndAfterAll {
       f
     }
     val m1 = writeManifest("m1.avro", 0, data1, 10L)
-    val m2 = writeManifest("m2.avro", 2, del2, 2L) // EQUALITY_DELETES
+    val m2 = writeManifest("m2.avro", deleteContent, del2, delDf.count())
     val m3 = writeManifest("m3.avro", 0, data3, 1L)
 
     val listSchema = new Schema.Parser().parse("""
@@ -272,7 +278,7 @@ class IcebergParitySpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("scan works with explicit file:// scheme paths (the S3-shape path bridge)") {
-    // The MoR delete anti-join bridges manifest path strings to Spark's
+    // The MoR delete filter bridges manifest path strings to Spark's
     // fully-qualified _metadata.file_path URIs; an explicit scheme on the
     // table path exercises exactly the qualification code that a remote
     // (s3a://) deployment would hit.
@@ -282,10 +288,32 @@ class IcebergParitySpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("foreign equality deletes subtract with strictly-older sequence scoping") {
-    val table = buildEqualityDeleteTable()
-    val got = IcebergScan.scan(spark, table).collect().map(_.getLong(0)).sorted
+    import spark.implicits._
+    // delete {x∈(3,5)} WITHOUT manifest `equality_ids`: the delete file's
+    // own parquet schema defines the key columns
+    val table = buildForeignV2Table(2)((_, _) => (Seq(3L, 5L).toDF("x"), true))
+    val df = IcebergScan.scan(spark, table)
+    val got = df.collect().map(_.getLong(0)).sorted
     // seq-1 rows 3 and 5 deleted by the seq-2 delete; the seq-3 re-insert
     // of 3 survives (delete applies only to strictly older data files)
     assert(got.toSeq === Seq(1L, 2L, 3L, 4L, 6L, 7L, 8L, 9L, 10L))
+    // the unsized delete file still applies through the per-file filter
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("graft_dv_alive") && !plan.contains("Join"), plan.take(3000))
+  }
+
+  test("foreign unsized v2 position deletes apply through the per-file filter") {
+    import spark.implicits._
+    // name-only `file_path`/`pos` columns (no field ids): positions 2 and 4
+    // of the seq-1 file (x = 3, 5), plus a row naming the seq-3 file,
+    // which a seq-2 delete cannot reach (data sequence must be ≤ the
+    // delete's)
+    val table = buildForeignV2Table(1)((data1, data3) =>
+      (Seq((data1, 2L), (data1, 4L), (data3, 0L)).toDF("file_path", "pos"), false))
+    val df = IcebergScan.scan(spark, table)
+    assert(df.collect().map(_.getLong(0)).sorted.toSeq ===
+      Seq(1L, 2L, 3L, 4L, 6L, 7L, 8L, 9L, 10L))
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("graft_dv_alive") && !plan.contains("Join"), plan.take(3000))
   }
 }
