@@ -233,12 +233,11 @@ object AvroDataSource {
       }.toArray
     }
     override def createReaderFactory(): PartitionReaderFactory =
-      // runs on the DRIVER: snapshot the session Hadoop conf into the
-      // (serialized) factory so executor-side opens see the same
+      // runs on the DRIVER: the factory carries the session Hadoop conf
+      // as a broadcast, so executor-side opens see the same
       // spark.hadoop.* settings path qualification resolved under
       new AvroReaderFactory(required, pushed,
-        new org.apache.spark.util.SerializableConfiguration(
-          org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()))
+        ConfBroadcast.session(org.apache.spark.sql.SparkSession.active))
     override def estimateStatistics()
         : org.apache.spark.sql.connector.read.Statistics =
       new org.apache.spark.sql.connector.read.Statistics {
@@ -261,12 +260,13 @@ object AvroDataSource {
   private final class AvroReaderFactory(
       required: StructType,
       pushed: Seq[org.apache.spark.sql.sources.Filter],
-      sconf: org.apache.spark.util.SerializableConfiguration)
+      conf: org.apache.spark.broadcast.Broadcast[
+        org.apache.spark.util.SerializableConfiguration])
     extends PartitionReaderFactory {
     override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
       val fp = p.asInstanceOf[AvroFilePartition]
       new AvroPartitionReader(fp.path, fp.qualified, required, pushed,
-        sconf.value, fp.start, fp.end)
+        conf.value.value, fp.start, fp.end)
     }
   }
 

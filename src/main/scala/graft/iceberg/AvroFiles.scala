@@ -247,14 +247,13 @@ object AvroFiles {
     val jobToken = java.util.UUID.randomUUID().toString.take(8)
     val stagingRoot = new Path(dataDir, StagingPrefix + jobToken)
     val stagingStr = stagingRoot.toString
-    // the SESSION Hadoop conf, serialized into the tasks: a bare
+    // the SESSION Hadoop conf, broadcast to the tasks: a bare
     // new Configuration() on executors would drop every spark.hadoop.*
     // setting (credentials, custom FS impls) the driver resolved with
-    val sconf = new org.apache.spark.util.SerializableConfiguration(
-      df.sparkSession.sessionState.newHadoopConf())
+    val confB = ConfBroadcast.session(df.sparkSession)
     try {
       df.queryExecution.toRdd.foreachPartition { rows =>
-        val conf = sconf.value
+        val conf = confB.value.value
         val writerSchema = new Schema.Parser().parse(schemaJson)
         val tc = org.apache.spark.TaskContext.get()
         val taskId = tc.partitionId()

@@ -384,7 +384,6 @@ object IcebergScan {
     // Residual filter: the exact predicate semantics, pushed into the
     // parquet scan by Catalyst; file pruning above was only an accelerant.
     val residual = IcebergPruning.residual(opts.filters, snapshot.schema)
-    val dataDF = residual.foldLeft(dataRelation(withMeta = false))(_.filter(_))
     // Spec-v3 DEFAULT VALUES need no plan node: the read schema carries
     // EXISTS_DEFAULT metadata (toStructType), so every reader fills the
     // initial-default for columns PHYSICALLY ABSENT from a file's footer —
@@ -392,7 +391,8 @@ object IcebergScan {
     // per file from the file itself, the rule survives snapshot expiry
     // (a derived add-sequence does not — judge probe r17).
     if (deletePaths.isEmpty && dvEntries.isEmpty && eqPaths.isEmpty &&
-      !opts.keepProvenance && !opts.rowLineage) return dataDF
+      !opts.keepProvenance && !opts.rowLineage)
+      return residual.foldLeft(dataRelation(withMeta = false))(_.filter(_))
 
     // POSITION-based consumers need per-row positions, which Spark's ORC
     // reader does not expose (`_metadata.row_index` is parquet-only). A
@@ -1338,52 +1338,77 @@ object IcebergScan {
       .unionByName(pureDeletes).unionByName(pureInserts)
   }
 
-  /** mode='list_files' output: (file, type ∈ {data, delete}) — S14. */
-  /** (file_path, pos) rows of position-delete entries, both formats:
-    * parquet delete files read as one relation; v3 deletion vectors
-    * decoded EXECUTOR-side from their manifest blob coordinates
-    * (offset+length — no puffin footer read). `file_path` is in MANIFEST
-    * coordinates (the strings delete files/DV properties record). The
-    * spec-v3 read rule is applied here: for a data file with a DV, the DV
-    * is the whole truth — parquet position-delete rows for that file are
-    * dropped via a small broadcast anti join (the DV writer merged them). */
+  /** (file_path, pos, delete_file_path, data_sequence_number) rows of
+    * position-delete entries, as (parquet rows, DV rows): parquet delete
+    * files read as one relation, provenance through `_metadata.file_path`
+    * bridged over a broadcast map (never a per-file read loop); v3
+    * deletion vectors decoded EXECUTOR-side from their manifest blob
+    * coordinates (offset+length — no puffin footer read). `file_path` is
+    * in MANIFEST coordinates (the strings delete files/DV properties
+    * record); `data_sequence_number` is the delete's. */
+  private def posDeleteFrames(
+      spark: SparkSession, conf: org.apache.hadoop.conf.Configuration,
+      root: String, opts: Options,
+      entries: Seq[(ManifestEntry, Long)]): (DataFrame, DataFrame) = {
+    import spark.implicits._
+    val (dvEntries, parquetEntries) = entries.partition(_._1.isDV)
+    val empty = spark.emptyDataset[(String, Long, String, Long)]
+      .toDF("file_path", "pos", "delete_file_path", "data_sequence_number")
+    val dvRows =
+      if (dvEntries.isEmpty) empty
+      else {
+        val confB = ConfBroadcast(spark, conf)
+        spark.createDataset(dvEntries.map { case (e, seq) =>
+          (resolved(root, e.filePath, opts), e.contentOffset.get,
+           e.contentSizeInBytes.get, e.referencedDataFile.get, seq)
+        }).flatMap { case (p, off, len, ref, seq) =>
+          Puffin.readDV(new org.apache.hadoop.fs.Path(p), confB.value.value, off, len)
+            .map(pos => (ref, pos, p, seq))
+        }.toDF("file_path", "pos", "delete_file_path", "data_sequence_number")
+      }
+    val parquetRows =
+      if (parquetEntries.isEmpty) empty
+      else {
+        val qualify: String => String = IcebergIO.qualified(_, conf)
+        val seqMap = parquetEntries.map { case (e, seq) =>
+          val passed = resolved(root, e.filePath, opts)
+          (qualify(passed), passed, seq)
+        }.toDF("__pd_qual", "delete_file_path", "data_sequence_number")
+        val files = parquetEntries.map { case (e, _) =>
+          (resolved(root, e.filePath, opts), e.fileSizeInBytes)
+        }
+        // explicit spec-fixed schema (name-matched) over a manifest-seeded
+        // index: no plan-time footer read or stat per delete file
+        ManifestFileIndex.relation(spark, "parquet", files,
+            PosDeleteSchema, conf)
+          .getOrElse(spark.read.parquet(files.map(_._1): _*))
+          .select(col("file_path"), col("pos"),
+            col("_metadata.file_path").as("__pd_qual"))
+          .join(broadcast(seqMap), Seq("__pd_qual"))
+          .select("file_path", "pos", "delete_file_path", "data_sequence_number")
+      }
+    (parquetRows, dvRows)
+  }
+
+  /** [[posDeleteFrames]]' rows under the spec-v3 read rule: for a data
+    * file with a DV, the DV is the whole truth — parquet position-delete
+    * rows for that file are dropped via a small broadcast anti join (the
+    * DV writer merged them). */
   private def posDeleteRows(
       spark: SparkSession, conf: org.apache.hadoop.conf.Configuration,
       root: String, opts: Options,
       entries: Seq[(ManifestEntry, Long)]): DataFrame = {
     import spark.implicits._
-    val (dvEntries, parquetEntries) = entries.partition(_._1.isDV)
-    val sconf = new org.apache.spark.util.SerializableConfiguration(conf)
-    val dvItems = dvEntries.map { case (e, _) =>
-      (resolved(root, e.filePath, opts), e.contentOffset.get,
-       e.contentSizeInBytes.get, e.referencedDataFile.get)
-    }
-    val dvRows =
-      if (dvItems.isEmpty) spark.emptyDataset[(String, Long)].toDF("file_path", "pos")
-      else spark.createDataset(dvItems).flatMap { case (p, off, len, ref) =>
-        Puffin.readDV(new org.apache.hadoop.fs.Path(p), sconf.value, off, len)
-          .map(pos => (ref, pos))
-      }.toDF("file_path", "pos")
-    val deleteFiles = parquetEntries.map { case (e, _) =>
-      (resolved(root, e.filePath, opts), e.fileSizeInBytes)
-    }
-    val dvTargets = dvEntries.map(_._1.referencedDataFile.get).distinct
-    val parquetRows0 =
-      if (deleteFiles.isEmpty) spark.emptyDataset[(String, Long)].toDF("file_path", "pos")
-      // explicit spec-fixed schema (name-matched, like the inference it
-      // replaces) over a manifest-seeded index: no plan-time footer read
-      // or stat per delete file
-      else ManifestFileIndex.relation(spark, "parquet", deleteFiles,
-          PosDeleteSchema, conf)
-        .getOrElse(spark.read.parquet(deleteFiles.map(_._1): _*))
-        .select("file_path", "pos")
-    val parquetRows =
-      if (dvTargets.isEmpty) parquetRows0
-      else parquetRows0.join(
+    val (parquetRows, dvRows) = posDeleteFrames(spark, conf, root, opts, entries)
+    val dvTargets = entries.collect { case (e, _) if e.isDV => e.referencedDataFile.get }.distinct
+    val live =
+      if (dvTargets.isEmpty) parquetRows
+      else parquetRows.join(
         broadcast(dvTargets.toDF("file_path")), Seq("file_path"), "left_anti")
-    parquetRows.unionByName(dvRows)
+    live.unionByName(dvRows)
   }
 
+  /** mode='list_files' output: (file, type ∈ {data, delete}) — S14. */
   private def listFilesDF(spark: SparkSession, data: Seq[String], deletes: Seq[String]): DataFrame = {
     import spark.implicits._
     (data.map((_, "data")) ++ deletes.map((_, "delete"))).toDF("file", "type")
@@ -1680,8 +1705,8 @@ object IcebergScan {
         // exactly like the scan, whose filter gives a DV'd file no
         // parquet position-delete files
         val candidates = dataWithSeq.collect {
-          case (e, _) if !dvByFile.contains(e.filePath) =>
-            (e.filePath, e.recordCount)
+          case (e, seq) if !dvByFile.contains(e.filePath) =>
+            (e.filePath, e.recordCount, seq)
         }
         posDeleteCounts(spark, root, opts, posScoped, candidates)
       }
@@ -1735,22 +1760,26 @@ object IcebergScan {
     * files only (the same reader the MoR scan uses, so dedupe across
     * stacked delete files and dropped dangling references match the
     * scan by construction). `candidates` are the (manifest path,
-    * record_count) pairs of the data files tombstones may hit; the
-    * record-count range filter drops corrupt out-of-range positions
-    * that delete nothing. */
+    * record_count, data sequence) triples of the data files tombstones
+    * may hit; the record-count range filter drops corrupt out-of-range
+    * positions that delete nothing, and a tombstone counts only where
+    * the scans apply it: at data files whose data sequence is at or
+    * below the delete's. */
   private[graft] def posDeleteCounts(
       spark: SparkSession, root: String, opts: Options,
       posEntries: Seq[(ManifestEntry, Long)],
-      candidates: Seq[(String, Long)]): Map[String, Long] = {
+      candidates: Seq[(String, Long, Long)]): Map[String, Long] = {
     if (candidates.isEmpty) return Map.empty
     import spark.implicits._
     val conf = hadoopConf(spark)
-    val rcDf = candidates.toDF("file_path", "__rc")
+    val rcDf = candidates.toDF("file_path", "__rc", "__data_seq")
     posDeleteRows(spark, conf, root, opts, posEntries)
       .where(col("file_path").isNotNull && col("pos").isNotNull)
-      .distinct()
       .join(broadcast(rcDf), Seq("file_path"))
-      .where(col("pos") >= 0 && col("pos") < col("__rc"))
+      .where(col("pos") >= 0 && col("pos") < col("__rc") &&
+        col("__data_seq") <= col("data_sequence_number"))
+      .select("file_path", "pos")
+      .distinct()
       .groupBy("file_path").count()
       .collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -2266,43 +2295,8 @@ object IcebergScan {
     val conf = hadoopConf(spark)
     val meta = ManifestReader.loadTable(
       IcebergIO.tableRoot(path), snapshot, conf, opts.allowMovedPaths)
-    import spark.implicits._
-    val live = for {
-      (m, es) <- meta.entries
-      e <- es if e.status != 2 && e.content == 1
-    } yield (e, e.seqOr(m.sequenceNumber))
-    val (dvEntries, parquetEntries) = live.partition(_._1.isDV)
-    val sconf = new org.apache.spark.util.SerializableConfiguration(conf)
-    val empty = spark.emptyDataset[(String, Long, String, Long)]
-      .toDF("file_path", "pos", "delete_file_path", "data_sequence_number")
-    val dvRows =
-      if (dvEntries.isEmpty) empty
-      else spark.createDataset(dvEntries.map { case (e, seq) =>
-        (resolved(meta.path, e.filePath, opts), e.contentOffset.get,
-         e.contentSizeInBytes.get, e.referencedDataFile.get, seq)
-      }).flatMap { case (p, off, len, ref, seq) =>
-        Puffin.readDV(new org.apache.hadoop.fs.Path(p), sconf.value, off, len)
-          .map(pos => (ref, pos, p, seq))
-      }.toDF("file_path", "pos", "delete_file_path", "data_sequence_number")
-    val parquetRows =
-      if (parquetEntries.isEmpty) empty
-      else {
-        val qualify: String => String = IcebergIO.qualified(_, conf)
-        val seqMap = parquetEntries.map { case (e, seq) =>
-          val passed = resolved(meta.path, e.filePath, opts)
-          (qualify(passed), passed, seq)
-        }.toDF("__pd_qual", "delete_file_path", "data_sequence_number")
-        val files = parquetEntries.map { case (e, _) =>
-          (resolved(meta.path, e.filePath, opts), e.fileSizeInBytes)
-        }
-        ManifestFileIndex.relation(spark, "parquet", files,
-            PosDeleteSchema, conf)
-          .getOrElse(spark.read.parquet(files.map(_._1): _*))
-          .select(col("file_path"), col("pos"),
-            col("_metadata.file_path").as("__pd_qual"))
-          .join(broadcast(seqMap), Seq("__pd_qual"))
-          .select("file_path", "pos", "delete_file_path", "data_sequence_number")
-      }
+    val (parquetRows, dvRows) =
+      posDeleteFrames(spark, conf, meta.path, opts, livePaths(meta, 1, 1, opts))
     parquetRows.unionByName(dvRows)
   }
 

@@ -3895,7 +3895,7 @@ object IcebergWriter {
     val oldDVs = prevDel.collect {
       case (_, e) if e.isDV && affected(e.referencedDataFile.get) => e
     }
-    val sconf = new org.apache.spark.util.SerializableConfiguration(conf)
+    val confB = ConfBroadcast(spark, conf)
     val posSchema = StructType(Seq(
       StructField("file_path", org.apache.spark.sql.types.StringType),
       StructField("pos", LongType)))
@@ -3907,7 +3907,7 @@ object IcebergWriter {
           (e.filePath, e.contentOffset.get, e.contentSizeInBytes.get,
            e.referencedDataFile.get)))
         .flatMap { case (p, off, len, ref) =>
-          Puffin.readDV(new Path(p), sconf.value, off, len).map(pos => (ref, pos))
+          Puffin.readDV(new Path(p), confB.value.value, off, len).map(pos => (ref, pos))
         }.toDF("file_path", "pos")
     val oldParquet = prevDel.collect { case (_, e) if !e.isDV => e.filePath }.distinct
     val oldParquetRows =
@@ -3928,7 +3928,7 @@ object IcebergWriter {
         else {
           val pid = org.apache.spark.TaskContext.getPartitionId()
           val out = new Path(s"$dvDir/part-$pid.puffin")
-          val w = new Puffin.DVWriter(out, sconf.value, snapshotId, seq)
+          val w = new Puffin.DVWriter(out, confB.value.value, snapshotId, seq)
           val results = Seq.newBuilder[(String, String, Long, Long, Long)]
           var curFile: String = null
           var buf = Array.newBuilder[Long]

@@ -273,8 +273,8 @@ object ManifestReader {
 
   /** Decode every manifest on the EXECUTORS: one task per slice of the
     * manifest list, results restored to manifest-list order. The closure
-    * only captures the table path, format version, a serializable Hadoop
-    * conf and (round 12) the optional entry-level prune predicate — entry
+    * only captures the table path, format version, the broadcast Hadoop
+    * conf ([[ConfBroadcast]]) and (round 12) the optional entry-level prune predicate — entry
     * decoding is the same [[readManifestEntries]] the driver pool runs, so
     * the two paths cannot diverge. With `entryFilter` set, each task drops
     * non-surviving entries BEFORE the collect, so the driver receives heap
@@ -288,7 +288,7 @@ object ManifestReader {
       formatVersion: Int,
       allowMovedPaths: Boolean,
       entryFilter: Option[IcebergPruning.EntryPredicate]): Seq[(Manifest, Seq[ManifestEntry])] = {
-    val sconf = new org.apache.spark.util.SerializableConfiguration(conf)
+    val confB = ConfBroadcast(spark, conf)
     val items = manifests.zipWithIndex.map { case (m, i) => (i, m) }
     val slices = math.max(1,
       math.min(items.size, spark.sparkContext.defaultParallelism * 2))
@@ -297,7 +297,7 @@ object ManifestReader {
         val mPath =
           if (allowMovedPaths) IcebergIO.fullPath(tablePath, m.manifestPath)
           else m.manifestPath
-        val all = readManifestEntries(mPath, sconf.value, formatVersion)
+        val all = readManifestEntries(mPath, confB.value.value, formatVersion)
         val kept = entryFilter match {
           case Some(f) => all.filter(f.keep(m.content, _))
           case None => all
@@ -374,7 +374,7 @@ object ManifestReader {
     if (!estimated.exists(_ > entryBudget)) return None
 
     val spark = active.get
-    val sconf = new org.apache.spark.util.SerializableConfiguration(conf)
+    val confB = ConfBroadcast(spark, conf)
     val formatVersion = snapshot.formatVersion
     def resolvedPath(p: String): String =
       if (allowMovedPaths) IcebergIO.fullPath(tablePath, p) else p
@@ -409,7 +409,7 @@ object ManifestReader {
         // dominates the DV'd files' bounds (MetaAgg.applyDeletes).
         val refs = Seq.newBuilder[(String, TupleAgg)]
         val perManifest = ps.flatMap { p =>
-          val es = readManifestEntries(p, sconf.value, formatVersion)
+          val es = readManifestEntries(p, confB.value.value, formatVersion)
           val (ref, plain) =
             if (refSetB.value.isEmpty) (Seq.empty, es)
             else es.partition(e =>

@@ -10,7 +10,10 @@ import org.apache.spark.sql.connector.read.PartitionReaderFactory
 import org.apache.spark.sql.graftshim.GraftShims
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.util.SerializableConfiguration
+
+import graft.iceberg.ConfBroadcast
 
 /** One equality-delete file as [[DvAlive]] ships it: coordinates only. */
 final case class EqDeleteFile(path: String, size: Long, seq: Long)
@@ -89,11 +92,13 @@ final class DvAliveState(groupCount: Int) {
   *
   * Children: the file URI, the row position (null on ORC, which carries
   * no positional deletes), then each group's key columns cast to its key
-  * types. The Hadoop conf rides the expression for the executor-side blob
-  * reads.
+  * types. The executor-side blob reads take the session Hadoop conf from
+  * its one cached broadcast ([[ConfBroadcast]]): the
+  * expression itself ships only the broadcast's handle.
   */
 case class DvAlive(
-    children: Seq[Expression], spec: DeleteSpec, conf: SerializableConfiguration)
+    children: Seq[Expression], spec: DeleteSpec,
+    conf: Broadcast[SerializableConfiguration])
     extends Expression {
 
   override def dataType: DataType = BooleanType
@@ -129,7 +134,7 @@ case class DvAlive(
     val fd = if (file == null) null else spec.files.getOrElse(file.toString, null)
     val positions =
       if (fd == null) null
-      else fd.dv.map(DvPositionCache.load(_, conf.value)).getOrElse {
+      else fd.dv.map(DvPositionCache.load(_, conf.value.value)).getOrElse {
         if (fd.pos.isEmpty) null
         else PosDeleteCache.load(fd.pos.toArray, fd.rawPath, spec.posFactory)
       }
@@ -260,6 +265,6 @@ object DvAlive {
     GraftShims.column(DvAlive(
       Seq(UnresolvedAttribute.quoted("__graft_file"),
         UnresolvedAttribute.quoted("__graft_pos")) ++ keys,
-      spec, new SerializableConfiguration(spark.sessionState.newHadoopConf())))
+      spec, ConfBroadcast.session(spark)))
   }
 }

@@ -2,6 +2,7 @@ package graft.sql
 
 import scala.util.Try
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -16,7 +17,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.iceberg.{IcebergIO, IcebergModel, IcebergPruning, IcebergScan, IcebergWriter, ManifestReader, IcebergTransforms => T}
+import graft.iceberg.{ConfBroadcast, IcebergIO, IcebergModel, IcebergPruning, IcebergScan, IcebergWriter, ManifestReader, IcebergTransforms => T}
 
 /** Storage-partitioned joins + runtime (dim-side) pruning: a catalog scan
   * planned entirely from manifest entries.
@@ -563,7 +564,8 @@ private[sql] object EqDeleteKeyCache {
 private[sql] object ParquetReaders {
   /** The exact conf hand-off Spark's own ParquetScan.createReaderFactory
     * performs — the read-support class and requested schema ride the
-    * broadcast Hadoop conf, not the factory's constructor. Shared by the
+    * broadcast Hadoop conf, not the factory's constructor; equal confs
+    * share one broadcast ([[ConfBroadcast]]). Shared by the
     * keyed scan's data/delete readers and [[DvAlive]]'s delete reads. */
   def factory(
       spark: SparkSession, readSchema: StructType, dataSchema: StructType,
@@ -592,10 +594,8 @@ private[sql] object ParquetReaders {
       sqlConf.parquetInferTimestampNTZEnabled)
     hadoopConf.setBoolean(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key,
       sqlConf.legacyParquetNanosAsLong)
-    val broadcasted = spark.sparkContext.broadcast(
-      new SerializableConfiguration(hadoopConf))
     ParquetPartitionReaderFactory(
-      sqlConf, broadcasted,
+      sqlConf, ConfBroadcast(spark, hadoopConf),
       dataSchema = dataSchema,
       readDataSchema = readSchema,
       partitionSchema = new StructType(),
@@ -775,7 +775,7 @@ private final class GraftKeyedMorReaderFactory(
     extendedSchema: StructType,
     keySchema: StructType,
     outSchema: StructType,
-    conf: SerializableConfiguration = null,
+    conf: Broadcast[SerializableConfiguration] = null,
     posDeleteReaderFactory: PartitionReaderFactory = null)
     extends PartitionReaderFactory {
 
@@ -791,7 +791,7 @@ private final class GraftKeyedMorReaderFactory(
   /** The split's deleted positions: its DV, else its parquet position
     * deletes (a DV'd split carries none); null when neither applies. */
   private def positionCursor(m: GraftKeyedMorFilePartition): PositionCursor = {
-    val ps = m.dv.map(DvPositionCache.load(_, conf.value)).getOrElse {
+    val ps = m.dv.map(DvPositionCache.load(_, conf.value.value)).getOrElse {
       if (m.posDeleteFiles.isEmpty) null
       else PosDeleteCache.load(m.posDeleteFiles, m.rawPath, posDeleteReaderFactory)
     }
@@ -1127,7 +1127,7 @@ private final class GraftKeyedV2Scan(
         extendedSchema = extended,
         keySchema = keySchemaAligned,
         outSchema = schema,
-        conf = new SerializableConfiguration(spark.sessionState.newHadoopConf()),
+        conf = ConfBroadcast.session(spark),
         posDeleteReaderFactory = PosDeleteCache.factory(spark))
     }
   }

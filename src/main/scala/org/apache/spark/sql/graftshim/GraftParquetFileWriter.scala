@@ -3,6 +3,7 @@ package graftshim
 
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.OutputWriterFactory
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetUtils}
@@ -22,18 +23,19 @@ import org.apache.spark.util.SerializableConfiguration
   * only opaque wrappers. */
 object GraftParquetWrite {
 
-  /** Driver-side: the configured write support, serializable whole. */
+  /** Driver-side: the configured write support, serializable whole (the
+    * Hadoop conf rides it as a broadcast). */
   def prepare(spark: SparkSession, schema: StructType): WriteSupport = {
     val cs = spark.asInstanceOf[classic.SparkSession]
     val job = Job.getInstance(cs.sessionState.newHadoopConf())
     val opts = new ParquetOptions(Map.empty[String, String], cs.sessionState.conf)
     val f = ParquetUtils.prepareWrite(cs.sessionState.conf, job, schema, opts)
-    new WriteSupport(f, new SerializableConfiguration(job.getConfiguration), schema)
+    new WriteSupport(f, _root_.graft.iceberg.ConfBroadcast(spark, job.getConfiguration), schema)
   }
 
   final class WriteSupport private[graftshim](
       factory: OutputWriterFactory,
-      conf: SerializableConfiguration,
+      conf: Broadcast[SerializableConfiguration],
       schema: StructType) extends Serializable {
     /** Executor-side: open one parquet file for row-at-a-time writes. */
     def open(path: String, partitionId: Int, taskId: Long): RowFileWriter = {
@@ -41,9 +43,9 @@ object GraftParquetWrite {
         new TaskID(new JobID("graft-stream", partitionId), TaskType.MAP,
           (taskId % Int.MaxValue).toInt), 0)
       new RowFileWriter(factory.newInstance(
-        path, schema, new TaskAttemptContextImpl(conf.value, attempt)))
+        path, schema, new TaskAttemptContextImpl(conf.value.value, attempt)))
     }
-    def hadoopConf: org.apache.hadoop.conf.Configuration = conf.value
+    def hadoopConf: org.apache.hadoop.conf.Configuration = conf.value.value
   }
 
   final class RowFileWriter private[graftshim](

@@ -1604,20 +1604,20 @@ class GraftCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
     // duplicate tombstones count ONCE (footer record counts would say 4)
     val counts = IcebergScan.posDeleteCounts(
       spark, p, graft.iceberg.IcebergScan.Options(),
-      entries, Seq((dataPath, 50L)))
+      entries, Seq((dataPath, 50L, 0L)))
     assert(counts === Map(dataPath -> 2L),
       "stacked duplicate tombstones must dedupe")
     // positions at/past the file's record count delete nothing: with a
     // claimed record count of 5, position 7 is out of range
     val clamped = IcebergScan.posDeleteCounts(
       spark, p, graft.iceberg.IcebergScan.Options(),
-      entries, Seq((dataPath, 5L)))
+      entries, Seq((dataPath, 5L, 0L)))
     assert(clamped === Map(dataPath -> 1L),
       "out-of-range tombstones must not count")
     // tombstones referencing non-live files drop out entirely
     val none = IcebergScan.posDeleteCounts(
       spark, p, graft.iceberg.IcebergScan.Options(),
-      entries, Seq(("some/other/file.parquet", 50L)))
+      entries, Seq(("some/other/file.parquet", 50L, 0L)))
     assert(none === Map.empty)
   }
 
