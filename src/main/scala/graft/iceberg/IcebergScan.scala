@@ -59,8 +59,9 @@ object IcebergScan {
       // user-facing reads — the result resurrects eq-tombstoned rows.
       skipEqualityDeletes: Boolean = false)
 
+  /** Shared and read-only ([[ConfBroadcast.sessionConf]]). */
   private def hadoopConf(spark: SparkSession): Configuration =
-    spark.sessionState.newHadoopConf()
+    ConfBroadcast.sessionConf(spark)
 
   private def guessingEnabled(spark: SparkSession): Boolean =
     spark.conf.getOption(VersionGuessingConfigKey).exists(_.toBoolean)
@@ -413,13 +414,35 @@ object IcebergScan {
     // strings. Bridge on the driver: the delete filter's spec and the
     // lineage/anti-join broadcasts are keyed by the qualified URI, and the
     // spec carries each file's raw path for the position-delete lookup.
-    val conf = hadoopConf(spark)
+    val conf = scanConf
     val qualify: String => String = IcebergIO.qualified(_, conf)
     import spark.implicits._
 
+    // --- merge-on-read deletes ---
+    // ONE join-free filter, graft_dv_alive (graft.sql.DvAlive), applies
+    // to each data file its v3 DELETION VECTOR (one per file, deduped
+    // above) or else the v2 parquet POSITION-delete files that may
+    // reference it, and the EQUALITY deletes that reach it, from a spec of
+    // coordinates only. The anti join remains for equality-delete groups
+    // above broadcastDeleteThreshold rows or keyed on a type the byte-wise
+    // probe cannot compare like `<=>`.
+    val eqGroups =
+      if (eqEntries.isEmpty || opts.skipEqualityDeletes) Seq.empty
+      else eqKeyGroups(spark, conf, path, opts, eqEntries, snapshot)
+    val (filterGroups, joinGroups) = eqGroups.partition { g =>
+      g.files.map(_._1.recordCount).sum <= opts.broadcastDeleteThreshold &&
+        g.keyStruct.fields.forall(f => graft.sql.DvAlive.probeable(f.dataType))
+    }
+    // The common merge-on-read read (one parquet or ORC relation, no
+    // provenance, lineage or anti join) filters on `_metadata` directly:
+    // every Dataset step re-analyzes the whole plan, and selecting the
+    // positions as columns only to drop them again cost two more analyses.
+    val direct = !opts.keepProvenance && !opts.rowLineage && joinGroups.isEmpty &&
+      avroDataFiles.isEmpty && (parquetDataFiles.isEmpty || orcDataFiles.isEmpty)
+
     // provenance attaches PER RELATION (a `_metadata` select cannot cross
     // a format union), then the residual filter applies on top
-    var cur = residual.foldLeft(dataRelation(withMeta = true))(_.filter(_))
+    var cur = residual.foldLeft(dataRelation(withMeta = !direct))(_.filter(_))
 
     // (v3 initial-defaults are filled inside the file readers via the
     // read schema's EXISTS_DEFAULT metadata — nothing to do here, and the
@@ -443,21 +466,6 @@ object IcebergScan {
         .drop("__lin_qual", "__lin_base", "__lin_seq")
     }
 
-    // --- merge-on-read deletes ---
-    // ONE join-free filter, graft_dv_alive (graft.sql.DvAlive), applies
-    // to each data file its v3 DELETION VECTOR (one per file, deduped
-    // above) or else the v2 parquet POSITION-delete files that may
-    // reference it, and the EQUALITY deletes that reach it, from a spec of
-    // coordinates only. The anti join remains for equality-delete groups
-    // above broadcastDeleteThreshold rows or keyed on a type the byte-wise
-    // probe cannot compare like `<=>`.
-    val eqGroups =
-      if (eqEntries.isEmpty || opts.skipEqualityDeletes) Seq.empty
-      else eqKeyGroups(spark, conf, path, opts, eqEntries, snapshot)
-    val (filterGroups, joinGroups) = eqGroups.partition { g =>
-      g.files.map(_._1.recordCount).sum <= opts.broadcastDeleteThreshold &&
-        g.keyStruct.fields.forall(f => graft.sql.DvAlive.probeable(f.dataType))
-    }
     val fileDeletes: Map[String, graft.sql.FileDeletes] = {
       val dvByFile = dvEntries.map { case (e, _) =>
         e.referencedDataFile.get -> graft.sql.GraftKeyedScan.DvRef(
@@ -494,8 +502,12 @@ object IcebergScan {
           graft.sql.FileDeletes(dv, dseq, gs, de.filePath, pos))
       }.toMap
     }
-    if (fileDeletes.nonEmpty)
-      cur = cur.filter(graft.sql.DvAlive.filter(spark, fileDeletes,
+    if (fileDeletes.nonEmpty) {
+      val (file, pos) =
+        if (!direct) (col("__graft_file"), col("__graft_pos"))
+        else (col("_metadata.file_path"),
+          if (orcDataFiles.nonEmpty) lit(null).cast(LongType) else col("_metadata.row_index"))
+      cur = cur.filter(graft.sql.DvAlive.filter(spark, file, pos, fileDeletes,
         filterGroups.map { g =>
           val pools = g.pools.map { case (schema, fs) =>
             schema -> fs.map { case (e, dseq) =>
@@ -505,6 +517,7 @@ object IcebergScan {
           }
           (g.cols, pools)
         }))
+    }
 
     // equality-delete groups the filter does not take: the anti join
     if (joinGroups.nonEmpty) {
@@ -546,7 +559,7 @@ object IcebergScan {
       cur = cur.drop("__data_seq")
     }
 
-    if (opts.keepProvenance) cur
+    if (opts.keepProvenance || direct) cur
     else cur.drop("__graft_file", "__graft_pos") // SELECT * EXCLUDE(...) analogue (P1)
   }
 

@@ -54,6 +54,8 @@ final case class DeleteSpec(files: Map[String, FileDeletes], groups: Seq[Seq[EqD
   * object (i.e. per task), re-seated whenever the row's file changes.
   * Top-level class so codegen can name it. */
 final class DvAliveState(groupCount: Int) {
+  /** The last row's file value as passed in, and a copy of its bytes. */
+  var lastRef: UTF8String = null
   var lastFile: UTF8String = null
   /** The current file's deleted positions, or null when none apply. */
   var cursor: PositionCursor = null
@@ -124,7 +126,13 @@ case class DvAlive(
     * deleted positions. Leaves `st.keys` holding the key sets the row
     * must also miss. */
   def fileAlive(st: DvAliveState, file: UTF8String, posNull: Boolean, pos: Long): Boolean = {
-    if (st.lastFile == null || !st.lastFile.equals(file)) enter(st, file)
+    // a scan hands every row of a batch one file-path object (a constant
+    // column) and other values a fresh object per row, so the same object
+    // is the same file: compare bytes only when the object changes
+    if (file ne st.lastRef) {
+      if (st.lastFile == null || !st.lastFile.equals(file)) enter(st, file)
+      st.lastRef = file
+    }
     st.cursor == null || posNull || !st.cursor.deleted(pos)
   }
 
@@ -246,12 +254,12 @@ object DvAlive {
     case _ => false
   }
 
-  /** The filter column over a relation carrying `__graft_file` /
-    * `__graft_pos`. `groups`: per key-column set, the key column names
-    * and its pools as (key read schema, files) — every pool of a group
-    * shares the key types. */
+  /** The filter column over a relation whose rows carry their data
+    * file's URI `file` and row position `pos`. `groups`: per key-column
+    * set, the key column names and its pools as (key read schema, files)
+    * — every pool of a group shares the key types. */
   def filter(
-      spark: SparkSession, files: Map[String, FileDeletes],
+      spark: SparkSession, file: Column, pos: Column, files: Map[String, FileDeletes],
       groups: Seq[(Seq[String], Seq[(StructType, Seq[EqDeleteFile])])]): Column = {
     val spec = DeleteSpec(files, groups.map(_._2.map { case (schema, fs) =>
       EqDeletePool(schema, fs)(ParquetReaders.factory(spark, schema, schema))
@@ -263,8 +271,7 @@ object DvAlive {
       }
     }
     GraftShims.column(DvAlive(
-      Seq(UnresolvedAttribute.quoted("__graft_file"),
-        UnresolvedAttribute.quoted("__graft_pos")) ++ keys,
+      Seq(GraftShims.expression(file), GraftShims.expression(pos)) ++ keys,
       spec, ConfBroadcast.session(spark)))
   }
 }

@@ -206,7 +206,7 @@ object GraftKeyedScan {
         case _                    => return None
       }
     }
-    val conf = spark.sessionState.newHadoopConf()
+    val conf = ConfBroadcast.sessionConf(spark)
     val root = IcebergIO.tableRoot(t.path)
     val meta = Try(ManifestReader.loadTable(
       root, snapshot, conf, t.opts.allowMovedPaths)).toOption.getOrElse(return None)
@@ -564,8 +564,9 @@ private[sql] object EqDeleteKeyCache {
 private[sql] object ParquetReaders {
   /** The exact conf hand-off Spark's own ParquetScan.createReaderFactory
     * performs — the read-support class and requested schema ride the
-    * broadcast Hadoop conf, not the factory's constructor; equal confs
-    * share one broadcast ([[ConfBroadcast]]). Shared by the
+    * broadcast Hadoop conf, not the factory's constructor; equal settings
+    * share one broadcast of the session conf plus them
+    * ([[ConfBroadcast.withSettings]]). Shared by the
     * keyed scan's data/delete readers and [[DvAlive]]'s delete reads. */
   def factory(
       spark: SparkSession, readSchema: StructType, dataSchema: StructType,
@@ -574,28 +575,22 @@ private[sql] object ParquetReaders {
     import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetWriteSupport}
     import org.apache.spark.sql.internal.SQLConf
     val sqlConf = spark.sessionState.conf
-    val hadoopConf = spark.sessionState.newHadoopConf()
-    hadoopConf.set(
-      org.apache.parquet.hadoop.ParquetInputFormat.READ_SUPPORT_CLASS,
-      classOf[ParquetReadSupport].getName)
-    hadoopConf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, readSchema.json)
-    hadoopConf.set(ParquetWriteSupport.SPARK_ROW_SCHEMA, readSchema.json)
-    hadoopConf.set(SQLConf.SESSION_LOCAL_TIMEZONE.key,
-      sqlConf.sessionLocalTimeZone)
-    hadoopConf.setBoolean(SQLConf.NESTED_SCHEMA_PRUNING_ENABLED.key,
-      sqlConf.nestedSchemaPruningEnabled)
-    hadoopConf.setBoolean(SQLConf.CASE_SENSITIVE.key,
-      sqlConf.caseSensitiveAnalysis)
-    hadoopConf.setBoolean(SQLConf.PARQUET_BINARY_AS_STRING.key,
-      sqlConf.isParquetBinaryAsString)
-    hadoopConf.setBoolean(SQLConf.PARQUET_INT96_AS_TIMESTAMP.key,
-      sqlConf.isParquetINT96AsTimestamp)
-    hadoopConf.setBoolean(SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key,
-      sqlConf.parquetInferTimestampNTZEnabled)
-    hadoopConf.setBoolean(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key,
-      sqlConf.legacyParquetNanosAsLong)
+    val schemaJson = readSchema.json
+    val settings = Seq(
+      org.apache.parquet.hadoop.ParquetInputFormat.READ_SUPPORT_CLASS ->
+        classOf[ParquetReadSupport].getName,
+      ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA -> schemaJson,
+      ParquetWriteSupport.SPARK_ROW_SCHEMA -> schemaJson,
+      SQLConf.SESSION_LOCAL_TIMEZONE.key -> sqlConf.sessionLocalTimeZone,
+      SQLConf.NESTED_SCHEMA_PRUNING_ENABLED.key -> sqlConf.nestedSchemaPruningEnabled,
+      SQLConf.CASE_SENSITIVE.key -> sqlConf.caseSensitiveAnalysis,
+      SQLConf.PARQUET_BINARY_AS_STRING.key -> sqlConf.isParquetBinaryAsString,
+      SQLConf.PARQUET_INT96_AS_TIMESTAMP.key -> sqlConf.isParquetINT96AsTimestamp,
+      SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key -> sqlConf.parquetInferTimestampNTZEnabled,
+      SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key -> sqlConf.legacyParquetNanosAsLong
+    ).map { case (k, v) => k -> v.toString }
     ParquetPartitionReaderFactory(
-      sqlConf, ConfBroadcast(spark, hadoopConf),
+      sqlConf, ConfBroadcast.withSettings(spark, settings),
       dataSchema = dataSchema,
       readDataSchema = readSchema,
       partitionSchema = new StructType(),

@@ -255,4 +255,24 @@ class DeletionVectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(plan.linesIterator.count(_.contains("Filter graft_dv_alive")) === 1 &&
       !plan.contains("Join"), plan.take(3000))
   }
+
+  test("one task reading two DV'd files applies each file's own vector") {
+    val table = newTable("graft_dv7_")
+    IcebergWriter.write(spark.range(0, 20).toDF("id").repartitionByRange(2, col("id")),
+      table, formatVersion = 3)
+    IcebergWriter.delete(spark, table, col("id").isin(3L, 15L))
+    assert(liveDeletes(table)._1.size === 2)
+    // no open cost and one split's worth of bytes per core: both small
+    // files pack into one split, so the filter sees the second file's rows
+    // right after the first's
+    val keys = Seq("spark.sql.files.openCostInBytes", "spark.sql.files.minPartitionNum")
+    try {
+      spark.conf.set(keys(0), "0")
+      spark.conf.set(keys(1), "1")
+      val df = IcebergScan.scan(spark, table)
+      assert(df.rdd.getNumPartitions === 1)
+      assert(df.collect().map(_.getLong(0)).sorted.toSeq ===
+        (0L until 20L).filterNot(Set(3L, 15L)))
+    } finally keys.foreach(spark.conf.unset)
+  }
 }

@@ -12,9 +12,10 @@ import graft.iceberg.{ConfBroadcast, IcebergScan, IcebergWriter}
 
 /** The Hadoop conf reaches executors through one cached broadcast
   * ([[ConfBroadcast]]): equal content shares a broadcast, a changed
-  * setting gets a new one, a stopped context leaves nothing behind, and
-  * the delete filter ships only the broadcast's handle. The last test
-  * stops the session. */
+  * setting gets a new one, the memoized session conf follows the
+  * context's conf, a stopped context leaves nothing behind, and the
+  * delete filter ships only the broadcast's handle. The last test stops
+  * the session. */
 class ConfBroadcastSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession =
@@ -68,6 +69,21 @@ class ConfBroadcastSpec extends AnyFunSuite with BeforeAndAfterAll {
         .map(_ => after.value.value.get(key)).collect()
       assert(seen.toSeq === Seq("after"))
     } finally spark.conf.unset(key)
+  }
+
+  test("the session conf is shared until the context's Hadoop conf changes") {
+    val key = "graft.test.contextKey"
+    val hc = spark.sparkContext.hadoopConfiguration
+    val first = ConfBroadcast.sessionConf(spark)
+    assert(ConfBroadcast.sessionConf(spark) eq first)
+    try {
+      hc.set(key, "v1")
+      val changed = ConfBroadcast.sessionConf(spark)
+      assert(changed ne first)
+      assert(changed.get(key) === "v1")
+      assert(first.get(key) === null)
+    } finally hc.unset(key)
+    assert(ConfBroadcast.sessionConf(spark).get(key) === null)
   }
 
   test("a stopped context leaves nothing in the cache") {
