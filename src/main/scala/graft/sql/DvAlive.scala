@@ -15,8 +15,15 @@ import org.apache.spark.util.SerializableConfiguration
 
 import graft.iceberg.ConfBroadcast
 
-/** One equality-delete file as [[DvAlive]] ships it: coordinates only. */
-final case class EqDeleteFile(path: String, size: Long, seq: Long)
+/** One equality-delete file as both readers ship it: coordinates only.
+  * `part` names the partition it is scoped to (equal to the data files'
+  * `FileDeletes.part` it reaches), -1 when it reaches every partition. */
+final case class EqDeleteFile(path: String, size: Long, seq: Long, part: Int)
+
+/** One key-column set of equality deletes as the driver plans it: the key
+  * columns as the snapshot schema types them (with field ids) and its
+  * pools as (key read schema, files) — every pool shares the key types. */
+final case class EqDeleteGroup(keySchema: StructType, pools: Seq[(StructType, Seq[EqDeleteFile])])
 
 /** Equality-delete files of one key-column set that share one read
   * schema (field-id keyed, or name keyed for legacy id-less files). The
@@ -25,29 +32,82 @@ final case class EqDeleteFile(path: String, size: Long, seq: Long)
 final case class EqDeletePool(keySchema: StructType, files: Seq[EqDeleteFile])(
     val factory: PartitionReaderFactory)
 
-/** What may delete rows of one data file: its deletion vector, its data
-  * sequence number, the equality-delete groups whose key bounds may match
-  * the file, its MANIFEST-recorded path `rawPath` (the domain of the
-  * position-delete files' `file_path` column) and the v2 parquet
-  * position-delete files that may reference it, as (path, length) — none
-  * when the file has a DV, which is the whole truth for its file. Which of
-  * a group's files apply is decided on the executor: those with a sequence
-  * number strictly above `seq`. */
+/** What may delete rows of one data file, as the one driver-side planner
+  * (`IcebergScan.planDeletes`) assigns it for both read paths: its
+  * deletion vector, its data sequence number, its partition id `part`
+  * (-1 when no equality delete is partition-scoped), the equality-delete
+  * groups whose key bounds may match the file, its MANIFEST-recorded path
+  * `rawPath` (the domain of the position-delete files' `file_path`
+  * column) and the v2 parquet position-delete files that may reference
+  * it, as (path, length) — none when the file has a DV, which is the
+  * whole truth for its file. Which of a group's files apply is decided on
+  * the executor ([[DeleteLoader.keys]]): those with a sequence number
+  * strictly above `seq`, global or scoped to `part`. */
 final case class FileDeletes(
-    dv: Option[GraftKeyedScan.DvRef], seq: Long, groups: Seq[Int],
+    dv: Option[GraftKeyedScan.DvRef], seq: Long, part: Int, groups: Seq[Int],
     rawPath: String, pos: Seq[(String, Long)])
 
-/** The filter's whole spec: one entry per affected data file plus one per
-  * equality-delete file. `files` is keyed by the qualified data-file URI
-  * (the `_metadata.file_path` domain); a file absent from it passes every
-  * row. `groups(g)` are the pools of key-column set g. The position-delete
-  * reader factory sits outside case-class equality like a pool's. */
+/** The executor-side spec of both readers: one entry per affected data
+  * file plus the equality-delete pools. `files` is keyed by the qualified
+  * data-file URI (the `_metadata.file_path` domain) for the spliced
+  * scan's filter, where a file absent from it passes every row; the keyed
+  * scan leaves it empty, each split carrying its file's entry. `groups(g)`
+  * are the pools of key-column set g. The position-delete reader factory
+  * sits outside case-class equality like a pool's. */
 final case class DeleteSpec(files: Map[String, FileDeletes], groups: Seq[Seq[EqDeletePool]])(
     val posFactory: PartitionReaderFactory) {
   // computed once: Catalyst hashes plan expressions repeatedly, and the
   // spec holds an entry per affected data file
   @transient private lazy val hash = scala.util.hashing.MurmurHash3.productHash(this)
   override def hashCode(): Int = hash
+}
+
+object DeleteSpec {
+  /** The spec with its reader factories; `positional` = some data file
+    * may carry position-delete files. */
+  def build(spark: SparkSession, files: Map[String, FileDeletes],
+            groups: Seq[EqDeleteGroup], positional: Boolean): DeleteSpec =
+    DeleteSpec(files, groups.map(_.pools.map { case (schema, fs) =>
+      EqDeletePool(schema, fs)(ParquetReaders.factory(spark, schema, schema))
+    }))(if (positional) PosDeleteCache.factory(spark) else null)
+}
+
+/** The executor side of a [[DeleteSpec]], the one loader of both readers:
+  * the spliced scan's [[DvAlive]] filter calls it per data file, the keyed
+  * scan's reader per split. Positions come from [[DvPositionCache]] or
+  * [[PosDeleteCache]], keys from [[EqDeleteKeyCache]]; each file is read
+  * once per executor. */
+private[sql] object DeleteLoader {
+
+  /** `fd`'s deleted positions — its DV, else its position-delete files —
+    * or null when none apply. */
+  def positions(spec: DeleteSpec, fd: FileDeletes,
+                conf: => org.apache.hadoop.conf.Configuration): PositionCursor = {
+    val ps = fd.dv.map(DvPositionCache.load(_, conf)).getOrElse {
+      if (fd.pos.isEmpty) null
+      else PosDeleteCache.load(fd.pos.toArray, fd.rawPath, spec.posFactory)
+    }
+    if (ps == null) null else new PositionCursor(ps)
+  }
+
+  /** Union of group g's keys that reach a data file of sequence `seq` in
+    * partition `part`: files with a greater sequence, global or scoped to
+    * `part`. Null when none. */
+  def keys(spec: DeleteSpec, g: Int, seq: Long, part: Int): java.util.HashSet[InternalRow] = {
+    val sets = spec.groups(g).flatMap { pool =>
+      val fs = pool.files.filter(f => f.seq > seq && (f.part < 0 || f.part == part))
+      if (fs.isEmpty) None
+      else Some(EqDeleteKeyCache.load(
+        fs.map(f => (f.path, f.size)).toArray, pool.factory, pool.keySchema))
+    }.filterNot(_.isEmpty)
+    if (sets.isEmpty) null
+    else if (sets.size == 1) sets.head
+    else {
+      val u = new java.util.HashSet[InternalRow](sets.map(_.size).sum * 2)
+      sets.foreach(s => u.addAll(s): Unit)
+      u
+    }
+  }
 }
 
 /** Per-task cursor state for [[DvAlive]] — one per generated codegen
@@ -62,8 +122,9 @@ final class DvAliveState(groupCount: Int) {
   /** Per group: the keys deleting rows of the current file, or null. */
   val keys = new Array[java.util.HashSet[InternalRow]](groupCount)
   var anyKeys: Boolean = false
-  /** (group, data sequence) → applicable key set; null when none apply. */
-  val bySeq = new java.util.HashMap[(Int, Long), java.util.HashSet[InternalRow]]()
+  /** (group, data sequence, partition) → applicable key set; null when
+    * none apply. */
+  val bySeq = new java.util.HashMap[(Int, Long, Int), java.util.HashSet[InternalRow]]()
   /** Interpreted path only: per-group probe projections. */
   var keyProj: Array[UnsafeProjection] = null
 }
@@ -77,16 +138,16 @@ final class DvAliveState(groupCount: Int) {
   * Spark jobs of a clean one: a (file, pos) or key anti join per delete
   * kind cost four to six, and hashed a path string per data row.
   *
-  * The driver ships only coordinates ([[DeleteSpec]]): per affected data
-  * file its DV blob or position-delete files, data sequence number and
-  * candidate key groups (bounds-scoped, `IcebergPruning.eqDeleteMayMatch`);
-  * per equality-delete file its path, length and sequence number. On the
-  * first row of a file the expression loads the file's deleted positions
-  * once per executor — from its DV through [[DvPositionCache]], else from
-  * its position-delete files through [[PosDeleteCache]] — and unions the
-  * keys of the group files with a strictly greater sequence number, each
-  * file read once per executor through [[EqDeleteKeyCache]]: the same
-  * indexes the keyed reader uses. Per row: one [[PositionCursor]] step,
+  * The driver ships only coordinates ([[DeleteSpec]]), planned by the
+  * one delete assignment both read paths share (`IcebergScan.planDeletes`):
+  * per affected data file its [[FileDeletes]]; per equality-delete file
+  * its path, length, sequence number and partition scope. On the first
+  * row of a file the expression loads, through [[DeleteLoader]] (the
+  * keyed reader's loader too), the file's deleted positions — from its DV
+  * through [[DvPositionCache]], else from its position-delete files
+  * through [[PosDeleteCache]] — and per group the union of the keys that
+  * reach the file, each delete file read once per executor through
+  * [[EqDeleteKeyCache]]. Per row: one [[PositionCursor]] step,
   * then, only in files some equality delete reaches, one UnsafeRow set
   * lookup per group. Keys compare byte-wise after float normalization
   * (-0.0 = 0.0, one NaN), which is the anti join's null-safe `<=>` under
@@ -140,42 +201,17 @@ case class DvAlive(
     // the incoming UTF8String may view a reused buffer — copy the key
     st.lastFile = if (file == null) null else file.clone()
     val fd = if (file == null) null else spec.files.getOrElse(file.toString, null)
-    val positions =
-      if (fd == null) null
-      else fd.dv.map(DvPositionCache.load(_, conf.value.value)).getOrElse {
-        if (fd.pos.isEmpty) null
-        else PosDeleteCache.load(fd.pos.toArray, fd.rawPath, spec.posFactory)
-      }
-    st.cursor = if (positions == null) null else new PositionCursor(positions)
+    st.cursor = if (fd == null) null else DeleteLoader.positions(spec, fd, conf.value.value)
     java.util.Arrays.fill(st.keys.asInstanceOf[Array[AnyRef]], null)
     st.anyKeys = false
     if (fd != null) fd.groups.foreach { g =>
-      val s = keySet(st, g, fd.seq)
+      val memo = (g, fd.seq, fd.part)
+      if (!st.bySeq.containsKey(memo))
+        st.bySeq.put(memo, DeleteLoader.keys(spec, g, fd.seq, fd.part))
+      val s = st.bySeq.get(memo)
       st.keys(g) = s
       st.anyKeys |= s != null
     }
-  }
-
-  /** Union of group g's keys whose delete sequence is above `seq`. */
-  private def keySet(st: DvAliveState, g: Int, seq: Long): java.util.HashSet[InternalRow] = {
-    val memo = (g, seq)
-    if (st.bySeq.containsKey(memo)) return st.bySeq.get(memo)
-    val sets = spec.groups(g).flatMap { pool =>
-      val fs = pool.files.filter(_.seq > seq)
-      if (fs.isEmpty) None
-      else Some(EqDeleteKeyCache.load(
-        fs.map(f => (f.path, f.size)).toArray, pool.factory, pool.keySchema))
-    }.filterNot(_.isEmpty)
-    val set =
-      if (sets.isEmpty) null
-      else if (sets.size == 1) sets.head
-      else {
-        val u = new java.util.HashSet[InternalRow](sets.map(_.size).sum * 2)
-        sets.foreach(s => u.addAll(s): Unit)
-        u
-      }
-    st.bySeq.put(memo, set)
-    set
   }
 
   // interpreted path (codegen-disabled sessions): per-thread state —
@@ -255,21 +291,15 @@ object DvAlive {
   }
 
   /** The filter column over a relation whose rows carry their data
-    * file's URI `file` and row position `pos`. `groups`: per key-column
-    * set, the key column names and its pools as (key read schema, files)
-    * — every pool of a group shares the key types. */
+    * file's URI `file` and row position `pos`. */
   def filter(
       spark: SparkSession, file: Column, pos: Column, files: Map[String, FileDeletes],
-      groups: Seq[(Seq[String], Seq[(StructType, Seq[EqDeleteFile])])]): Column = {
-    val spec = DeleteSpec(files, groups.map(_._2.map { case (schema, fs) =>
-      EqDeletePool(schema, fs)(ParquetReaders.factory(spark, schema, schema))
-    }))(if (files.valuesIterator.exists(_.pos.nonEmpty)) PosDeleteCache.factory(spark)
-        else null)
-    val keys = groups.flatMap { case (cols, pools) =>
-      cols.zip(pools.head._1.fields).map { case (c, f) =>
-        Cast(UnresolvedAttribute.quoted(c), f.dataType)
-      }
-    }
+      groups: Seq[EqDeleteGroup]): Column = {
+    val spec = DeleteSpec.build(spark, files, groups,
+      positional = files.valuesIterator.exists(_.pos.nonEmpty))
+    val keys = groups.flatMap(_.keySchema.fields.map { f =>
+      Cast(UnresolvedAttribute.quoted(f.name), f.dataType)
+    })
     GraftShims.column(DvAlive(
       Seq(GraftShims.expression(file), GraftShims.expression(pos)) ++ keys,
       spec, ConfBroadcast.session(spark)))

@@ -54,39 +54,27 @@ import graft.iceberg.{ConfBroadcast, IcebergIO, IcebergModel, IcebergPruning, Ic
   * original (entries only drop), satisfying Spark's runtime-filter
   * contract for key-grouped scans.
   *
-  * MoR under EQUALITY deletes (VERDICT r13 #2): the keyed scan routes
-  * live eq-delete files per partition tuple (a delete entry's tuple is
-  * in its manifest, same as data) and filters deleted keys inside the
-  * reader, so a CDC-upserted table — whose every epoch commits an
-  * equality delete — KEEPS its zero-shuffle joins instead of losing
-  * them until compaction. Splits bin by (tuple, sequence), giving each
-  * split an exact "strictly newer, tuple-scoped or global" delete set.
-  *
-  * MoR under v3 DELETION VECTORS (VERDICT r14 #2): each DV names its one
-  * referenced data file in the manifest (plus the blob's offset/length),
-  * so the keyed scan routes vectors per file, decodes the roaring bitmap
-  * executor-side (soft-cached), and drops deleted rows by FILE-relative
-  * position — generated by Spark's own parquet row-index machinery, so
-  * positions stay exact under byte-range splits and row-group skipping.
-  * A v3 table maintained by ordinary row-level DML keeps its
-  * zero-shuffle joins until compaction.
-  *
-  * MoR under PARQUET position deletes (round 15): delete files route
-  * per tuple by the spec's at-or-before sequence rule; affected data
-  * files bin alone, and the reader resolves each delete file ONCE per
-  * executor into a (file_path → sorted positions) map (soft-cached),
-  * then filters by the same row-index column the DV path uses. All
-  * three delete shapes now keep zero-shuffle joins.
+  * Merge-on-read: the keyed scan applies row deletes exactly as the
+  * spliced scan does — v3 DELETION VECTORS, v2 parquet POSITION deletes
+  * and EQUALITY deletes, assigned to data files by the one planner both
+  * scans share (`IcebergScan.planDeletes`), each data file's assignment
+  * a [[FileDeletes]]. Every split carries one [[FileDeletes]], and the
+  * reader loads it through the one executor-side [[DeleteLoader]] of the
+  * spliced scan's `graft_dv_alive` filter, dropping deleted rows by
+  * FILE-relative position (Spark's own parquet row-index generator,
+  * exact under byte-range splits and row-group skipping) and by key. A
+  * DML- or CDC-maintained table keeps its zero-shuffle joins until
+  * compaction.
   *
   * Opt-in and honest: the keyed path runs only under Spark's own SPJ
   * flag (`spark.sql.sources.v2.bucketing.enabled`) AND when the scan
-  * can faithfully deliver rows grouped by tuple — parquet-only, no
-  * name mapping (and no moved paths when position deletes exist — the
-  * delete files reference original locations), one equality key-column
-  * set, initial-default columns with a RESOLVABLE first declaring
-  * snapshot, and every live entry carrying a complete, convertible
-  * partition tuple. Anything else falls back to the native spliced
-  * plan, exactly as before.
+  * can faithfully deliver rows grouped by tuple — parquet data files
+  * with recorded sizes, no name mapping, every live data entry carrying
+  * a complete, convertible partition tuple, and every equality-delete
+  * group one the per-file filter applies (the planner leaves groups
+  * above `broadcastDeleteThreshold` rows, or keyed on types the byte-wise
+  * probe cannot compare, to the spliced plan's anti join). Anything else
+  * falls back to the native spliced plan.
   *
   * File groups come straight from manifest entries — like
   * [[graft.iceberg.ManifestFileIndex]], planning touches no storage
@@ -114,34 +102,11 @@ object GraftKeyedScan {
 
   /** One live data entry of the keyed plan: the manifest entry (kept for
     * runtime re-pruning — bounds, partition, null/NaN counts), the
-    * resolved QUALIFIED path, the Catalyst-domain partition key, the
-    * entry's DATA sequence number (equality deletes reach strictly-older
-    * sequences only), and the file's deletion vector when one is live. */
+    * resolved QUALIFIED path, the Catalyst-domain partition key, and the
+    * row deletes the planner assigned to the file, if any. */
   final case class KeyedEntry(
       entry: IcebergModel.ManifestEntry, path: String, key: Seq[Any],
-      seq: Long, dv: Option[DvRef] = None)
-
-  /** One live EQUALITY-delete file routed into the keyed scan (VERDICT
-    * r13 #2: SPJ under MoR deletes — a CDC-upserted table must keep its
-    * zero-shuffle joins). `tuple` None = the delete is GLOBAL
-    * (unpartitioned delete file: applies to every partition tuple, the
-    * shape [[graft.iceberg.IcebergWriter.deleteEquality]] and the
-    * streaming upsert sink write); Some(key) = scoped to that tuple per
-    * the Iceberg partition-scoping rule. */
-  final case class EqDelete(
-      path: String, size: Long, seq: Long, tuple: Option[Seq[Any]],
-      // position-delete only: manifest bounds of the delete file's
-      // reserved `file_path` column (field 2147483546) in RAW
-      // manifest-path domain. A data file outside [pathLo, pathHi]
-      // cannot be referenced, so it keeps its plain vectorized bin
-      // (ADVICE r15: one small DML delete must not de-vectorize the
-      // whole partition). Absent bounds = conservative "may reference".
-      pathLo: Option[Array[Byte]] = None,
-      pathHi: Option[Array[Byte]] = None) {
-    /** Can this position-delete file reference data file `rawPath`? */
-    def mayReference(rawPath: String): Boolean =
-      IcebergPruning.pathInBounds(pathLo, pathHi, rawPath)
-  }
+      deletes: Option[FileDeletes])
 
   final case class Keyed(
       keyTypes: Seq[DataType],
@@ -152,18 +117,11 @@ object GraftKeyedScan {
       schemaCols: Seq[IcebergModel.Column],
       // manifest-known totals (post-pruning) → SupportsReportStatistics,
       // so join sizing sees the relation's true size (P5), not the V2
-      // default of "unknown = huge". With eq-deletes these are an upper
-      // bound (deleted rows still counted) — still far better than the
-      // V2 "unknown = huge" default.
+      // default of "unknown = huge". With deletes these are an upper
+      // bound (deleted rows still counted).
       totalRows: Long, totalBytes: Long,
-      // live equality deletes (content=2) + the key columns they match
-      // on, WITH parquet field ids so renamed key columns still resolve
-      eqDeletes: Seq[EqDelete] = Seq.empty,
-      eqKeySchema: StructType = new StructType(),
-      // live PARQUET position-delete files (content=1, non-DV), same
-      // tuple scoping as eq-deletes; sequence rule is <= (a position
-      // delete reaches data files at-or-before its own sequence)
-      posDeletes: Seq[EqDelete] = Seq.empty) {
+      // the equality-delete groups the entries' FileDeletes index
+      eqGroups: Seq[EqDeleteGroup]) {
     def groups: Seq[(Seq[Any], Seq[KeyedEntry])] =
       entries.groupBy(_.key).toSeq
   }
@@ -210,26 +168,13 @@ object GraftKeyedScan {
     val root = IcebergIO.tableRoot(t.path)
     val meta = Try(ManifestReader.loadTable(
       root, snapshot, conf, t.opts.allowMovedPaths)).toOption.getOrElse(return None)
-    // (entry, effective sequence) — eq-delete scoping is by sequence
-    val live = meta.entries.flatMap { case (m, es) =>
-      es.filter(_.status != 2).map(e => (e, e.seqOr(m.sequenceNumber)))
+    // (entry, data sequence) of every live data file
+    val dataLive = meta.entries.flatMap { case (m, es) =>
+      es.filter(e => e.status != 2 && e.content == 0).map(e => (e, e.seqOr(m.sequenceNumber)))
     }
-    // All three delete shapes now ride the keyed path: v3 DELETION
-    // VECTORS (the manifest names the one data file each DV covers),
-    // PARQUET position-delete files (routed per tuple by sequence; the
-    // reader loads each file's (path → positions) map once per executor
-    // and filters by row index), and EQUALITY deletes (the shape every
-    // CDC upsert epoch commits, routed per tuple). A DML- or
-    // CDC-maintained table keeps its zero-shuffle joins until
-    // compaction. Moved-path tables bail when position deletes exist:
-    // the delete files' file_path column references original locations
-    // and the keyed reader matches raw manifest paths.
-    val (dvLive, posLive) = live.filter(_._1.content == 1).partition(_._1.isDV)
-    if (posLive.nonEmpty && t.opts.allowMovedPaths) return None
-    val (dataLive0, eqLive) =
-      live.filter(_._1.content != 1).partition(_._1.content == 0)
-    if (dataLive0.isEmpty) return None
-    if ((dataLive0 ++ eqLive ++ posLive).exists { case (e, _) =>
+    if (dataLive.isEmpty) return None
+    // the split arithmetic needs every data file's size
+    if (dataLive.exists { case (e, _) =>
         !e.fileFormat.equalsIgnoreCase("PARQUET") || e.fileSizeInBytes <= 0L })
       return None
     def qualify(p: String): String = IcebergIO.qualified(p, conf)
@@ -246,97 +191,27 @@ object GraftKeyedScan {
       }
       Some(vs)
     }
-    // equality deletes: one shared key-column set (heterogeneous sets
-    // would need the native path's per-pool composition), resolved by
-    // field id against the snapshot schema so renames stay safe
-    val (eqDeletes, eqKeySchema) =
-      if (eqLive.isEmpty) (Seq.empty[EqDelete], new StructType())
-      else {
-        val idSets = eqLive.map(_._1.equalityIds).distinct
-        if (idSets.size != 1 || idSets.head.isEmpty) return None
-        val byId = snapshot.schema.map(c => c.id -> c).toMap
-        val keyCols = idSets.head.map(id => byId.getOrElse(id, return None))
-        // top-level primitives only (UnsafeProjection key equality), and
-        // NO float/double keys: byte equality diverges from SQL equality
-        // there (-0.0 vs 0.0, NaN bit patterns) while the native path
-        // joins under NormalizeFloatingNumbers — and the Iceberg spec
-        // itself forbids float/double identifier fields, so bailing to
-        // the native plan loses nothing legitimate
-        val keyStruct = Try(graft.iceberg.IcebergSchemaParser
-          .toStructType(keyCols)).toOption.getOrElse(return None)
-        if (keyStruct.fields.exists(f => f.dataType match {
-            case _: StructType | _: ArrayType | _: MapType => true
-            case FloatType | DoubleType => true
-            case _ => false })) return None
-        val ds = eqLive.map { case (e, seq) =>
-          // empty tuple map = unpartitioned delete file = GLOBAL (the
-          // writer's deleteEquality / streaming-upsert shape); a full
-          // convertible tuple scopes to its partition; anything partial
-          // is ambiguous → native path
-          val tuple =
-            if (e.partition.isEmpty) None
-            else Some(tupleOf(e).getOrElse(return None))
-          EqDelete(resolvedPath(e), e.fileSizeInBytes, seq, tuple)
-        }
-        (ds, keyStruct)
-      }
-    // parquet position-delete files: tuple-scoped like eq-deletes
-    // (empty tuple = unpartitioned spec = global); the reader resolves
-    // each file's (file_path → positions) map once per executor
-    val posDeletes = posLive.map { case (e, seq) =>
-      val tuple =
-        if (e.partition.isEmpty) None
-        else Some(tupleOf(e).getOrElse(return None))
-      EqDelete(resolvedPath(e), e.fileSizeInBytes, seq, tuple,
-        pathLo = e.lowerBounds.get(IcebergWriter.PosDeleteFilePathFieldId),
-        pathHi = e.upperBounds.get(IcebergWriter.PosDeleteFilePathFieldId))
-    }
-    // v3 deletion vectors: ONE live DV per data file (the spec
-    // invariant — a rewrite REPLACES the old vector), addressed by the
-    // manifest's own blob coordinates so the reader never touches the
-    // puffin footer. Keyed by the RAW recorded data-file path (both
-    // sides live in this table's manifests); a DV whose referenced file
-    // is not live is inert, exactly as on the native path.
-    val dvByPath: Map[String, DvRef] =
-      if (dvLive.isEmpty) Map.empty
-      else {
-        // a DV entry missing referenced_data_file (malformed or foreign
-        // metadata) bails to the native spliced plan like the offset /
-        // length fields below — never throw out of the planning memo
-        if (dvLive.exists(_._1.referencedDataFile.isEmpty)) return None
-        val grouped = dvLive.groupBy(_._1.referencedDataFile.get)
-        if (grouped.values.exists(_.size > 1)) return None
-        grouped.map { case (ref, ds) =>
-          val e = ds.head._1
-          val off = e.contentOffset.getOrElse(return None)
-          val len = e.contentSizeInBytes.getOrElse(return None)
-          ref -> DvRef(resolvedPath(e), off, len)
-        }
-      }
     // entry-level pruning from the pushed filters (partition tuples +
-    // column bounds) — the same keep/skip the native path runs. With
-    // eq-deletes present, bounds-based pruning stays sound: a pruned
-    // file can't contain a matching row, deleted or not.
-    val bySig = dataLive0.map { case (e, s) => e.filePath -> s }.toMap
-    // a data path added twice (abnormal but representable) would fold to
-    // ONE sequence here; under sequence-scoped deletes that could scope
-    // a delete to the wrong copy — the native path reads duplicates
-    // verbatim, go there
-    if ((eqDeletes.nonEmpty || posDeletes.nonEmpty) &&
-        bySig.size != dataLive0.size) return None
+    // column bounds) — the same keep/skip the native path runs, and sound
+    // under deletes: a pruned file can't contain a matching row
     val data = graft.iceberg.IcebergPruning.prune(
-      dataLive0.map(_._1), preds, snapshot.partitionSpec, snapshot.schema)
+      dataLive.map(_._1), preds, snapshot.partitionSpec, snapshot.schema)
+    val kept = data.map(_.filePath).toSet
+    // row deletes as the spliced scan assigns them; a group the planner
+    // leaves to the anti join needs the spliced plan, and a planning
+    // failure (a malformed DV entry) falls back to it, which raises it
+    val deletes = Try(IcebergScan.planDeletes(spark, root, t.opts, snapshot, meta,
+      dataLive.filter { case (e, _) => kept(e.filePath) })).toOption.getOrElse(return None)
+    if (deletes.joinGroups.nonEmpty) return None
     val keyedEntries: Seq[KeyedEntry] = data.map { e =>
       val vs = tupleOf(e).getOrElse(return None) // older-spec entry: bail
-      KeyedEntry(e, resolvedPath(e), vs, bySig(e.filePath),
-        dv = dvByPath.get(e.filePath))
+      KeyedEntry(e, resolvedPath(e), vs, deletes.files.get(e.filePath))
     }
     Some(Keyed(keyTypes, keyedEntries,
       snapshot.partitionSpec, snapshot.schema,
       totalRows = data.map(_.recordCount).sum,
       totalBytes = data.map(_.fileSizeInBytes).sum,
-      eqDeletes = eqDeletes, eqKeySchema = eqKeySchema,
-      posDeletes = posDeletes))
+      eqGroups = deletes.filterGroups))
   }
 
   /** V2 source Filters → pruning predicates. Untranslatable shapes
@@ -442,26 +317,13 @@ private class GraftKeyedFilePartition(
   override def partitionKey(): InternalRow = key
 }
 
-/** A keyed split whose rows must pass a MoR filter: all files in the
-  * split share one data sequence (the split packer bins by (tuple,
-  * seq)), `deleteFiles` are exactly the eq-delete files with a STRICTLY
-  * newer sequence scoped to this tuple (or global), and `dv` is the
-  * split's deletion vector — set only when EVERY file in the split is
-  * the DV's referenced data file (the packer gives DV'd files their own
-  * bins, so row positions resolve against exactly one vector).
-  * `posDeleteFiles` are the applicable parquet position-delete files
-  * (sequence AT-OR-AFTER the split's, tuple-scoped or global) and
-  * `rawPath` the split's single data file's MANIFEST-recorded path —
-  * the domain the delete files' `file_path` column uses; position-
-  * affected files also bin alone. A file with a DV ignores parquet
-  * position deletes entirely (the spec's v3 read rule — DV writes
-  * absorb them). */
+/** A keyed split whose rows must pass a MoR filter: `deletes` are the
+  * row deletes of every file in the split. A file with a DV or
+  * position-delete files bins alone (its row positions resolve against
+  * its own deletes); other files share a split only with files of the
+  * same tuple and equal assignment, which then carries no `rawPath`. */
 private final class GraftKeyedMorFilePartition(
-    idx: Int, fs: Array[PartitionedFile], key: InternalRow,
-    val deleteFiles: Array[(String, Long)],
-    val dv: Option[GraftKeyedScan.DvRef] = None,
-    val posDeleteFiles: Array[(String, Long)] = Array.empty,
-    val rawPath: String = "")
+    idx: Int, fs: Array[PartitionedFile], key: InternalRow, val deletes: FileDeletes)
     extends GraftKeyedFilePartition(idx, fs, key)
 
 /** Executor-side soft cache of equality-delete KEY SETS — the one
@@ -754,66 +616,74 @@ private[sql] final class MappedColumnVector(
       o => new MappedColumnVector(base.getChild(o), mapping))
 }
 
-/** Wraps the parquet reader factory with the per-split MoR filters —
-  * equality-delete keys and/or deletion-vector row positions (the row
-  * ordinal rides Spark's own parquet row-index generator, so it stays
-  * exact under byte-range splits AND row-group skipping). Round 20: the
-  * read stays VECTORIZED whenever the inner parquet factory supports
-  * columnar for this schema — deleted rows are dropped per ColumnarBatch
-  * through [[MappedColumnVector]] ordinal views, so the delete-era
-  * 4x row-based penalty (measured: 0.55 s vs 0.13 s for the same
-  * provenance scan at sf0.1) is gone; the row-based wrapper remains as
-  * the fallback for schemas the vectorized reader rejects. */
+/** Wraps the parquet reader factory with the per-split MoR filter: the
+  * split's [[FileDeletes]], loaded through [[DeleteLoader]] like the
+  * spliced scan's filter — deleted row positions (the row ordinal rides
+  * Spark's own parquet row-index generator, so it stays exact under
+  * byte-range splits AND row-group skipping) and one key probe per
+  * equality-delete group that reaches the split, float keys normalized
+  * like the filter's. The read stays VECTORIZED whenever the inner
+  * parquet factory supports columnar for this schema — deleted rows are
+  * dropped per ColumnarBatch through [[MappedColumnVector]] ordinal views,
+  * no value copies; the row-based wrapper remains the fallback for
+  * schemas the vectorized reader rejects. */
 private final class GraftKeyedMorReaderFactory(
     inner: PartitionReaderFactory,
-    deleteReaderFactory: PartitionReaderFactory,
+    spec: DeleteSpec,
     extendedSchema: StructType,
-    keySchema: StructType,
     outSchema: StructType,
-    conf: Broadcast[SerializableConfiguration] = null,
-    posDeleteReaderFactory: PartitionReaderFactory = null)
+    conf: Broadcast[SerializableConfiguration])
     extends PartitionReaderFactory {
+  import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Expression, UnsafeProjection}
 
   // uniform per scan (Spark rejects mixed row/columnar partitions): the
   // inner parquet factory's answer depends only on conf + result schema
   override def supportColumnarReads(p: InputPartition): Boolean =
     inner.supportColumnarReads(p)
 
-  private def deletedKeys(m: GraftKeyedMorFilePartition): java.util.HashSet[InternalRow] =
-    if (m.deleteFiles.isEmpty) null
-    else EqDeleteKeyCache.load(m.deleteFiles, deleteReaderFactory, keySchema)
-
-  /** The split's deleted positions: its DV, else its parquet position
-    * deletes (a DV'd split carries none); null when neither applies. */
-  private def positionCursor(m: GraftKeyedMorFilePartition): PositionCursor = {
-    val ps = m.dv.map(DvPositionCache.load(_, conf.value.value)).getOrElse {
-      if (m.posDeleteFiles.isEmpty) null
-      else PosDeleteCache.load(m.posDeleteFiles, m.rawPath, posDeleteReaderFactory)
-    }
-    if (ps == null) null else new PositionCursor(ps)
-  }
-
   private val rowIdxOrd = extendedSchema.fieldNames.indexOf(
     org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
       .ROW_INDEX_TEMPORARY_COLUMN_NAME)
 
+  /** One split's deletes: its position cursor (null when none) and, per
+    * group whose keys reach it, the key set and its probe projection. */
+  private final class SplitDeletes(fd: FileDeletes) {
+    val cursor: PositionCursor = DeleteLoader.positions(spec, fd, conf.value.value)
+    private val reaching = fd.groups.flatMap { g =>
+      Option(DeleteLoader.keys(spec, g, fd.seq, fd.part)).map { set =>
+        // the key projection binds by the table's field name; the casts
+        // only widen (a key read at the snapshot type), never by zone
+        val ks = spec.groups(g).head.keySchema.fields.toSeq.map { f =>
+          val i = extendedSchema.fieldNames.indexWhere(_.equalsIgnoreCase(f.name))
+          val b = BoundReference(i, extendedSchema(i).dataType, extendedSchema(i).nullable)
+          if (b.dataType == f.dataType) b else Cast(b, f.dataType, Some("UTC"))
+        }
+        (set, EqDeleteKeyCache.probeProjection(ks))
+      }
+    }
+    private val keys = reaching.map(_._1).toArray
+    private val probes = reaching.map(_._2).toArray
+    val anyKeys: Boolean = keys.nonEmpty
+
+    /** Does the row miss every key set? */
+    def keyAlive(r: InternalRow): Boolean = {
+      var g = 0
+      while (g < keys.length) {
+        if (keys(g).contains(probes(g)(r))) return false
+        g += 1
+      }
+      true
+    }
+  }
+
   override def createColumnarReader(p: InputPartition)
       : org.apache.spark.sql.connector.read.PartitionReader[
         org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
     import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
-    val m = p.asInstanceOf[GraftKeyedMorFilePartition]
-    val deleted = deletedKeys(m)
-    val cursor = positionCursor(m)
+    val d = new SplitDeletes(p.asInstanceOf[GraftKeyedMorFilePartition].deletes)
+    val cursor = d.cursor
     val outOrds: Array[Int] =
       outSchema.fields.map(f => extendedSchema.fieldIndex(f.name))
-    def bound(f: StructField): Expression = {
-      val i = extendedSchema.fieldIndex(f.name)
-      BoundReference(i, extendedSchema(i).dataType, extendedSchema(i).nullable)
-    }
-    val keyProj =
-      if (keySchema.isEmpty || deleted == null) null
-      else EqDeleteKeyCache.probeProjection(keySchema.fields.toSeq.map(bound))
     val innerReader = inner.createColumnarReader(p)
     new org.apache.spark.sql.connector.read.PartitionReader[ColumnarBatch] {
       private var current: ColumnarBatch = _
@@ -822,7 +692,7 @@ private final class GraftKeyedMorReaderFactory(
           val b = innerReader.get()
           val n = b.numRows()
           val survives =
-            if (deleted == null && cursor == null) n
+            if (!d.anyKeys && cursor == null) n
             else {
               val mapping = new Array[Int](n)
               var k = 0
@@ -830,7 +700,7 @@ private final class GraftKeyedMorReaderFactory(
               var i = 0
               while (i < n) {
                 if ((cursor == null || !cursor.deleted(idxCol.getLong(i))) &&
-                    (deleted == null || !deleted.contains(keyProj(b.getRow(i))))) {
+                    (!d.anyKeys || d.keyAlive(b.getRow(i)))) {
                   mapping(k) = i; k += 1
                 }
                 i += 1
@@ -860,31 +730,24 @@ private final class GraftKeyedMorReaderFactory(
 
   override def createReader(p: InputPartition)
       : org.apache.spark.sql.connector.read.PartitionReader[InternalRow] = {
-    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, UnsafeProjection}
-    val m = p.asInstanceOf[GraftKeyedMorFilePartition]
-    val deleted = deletedKeys(m)
-    val cursor = positionCursor(m)
+    val d = new SplitDeletes(p.asInstanceOf[GraftKeyedMorFilePartition].deletes)
+    val cursor = d.cursor
     val dataReader = inner.createReader(p)
-    def bound(f: StructField): Expression = {
-      val i = extendedSchema.fieldIndex(f.name)
-      BoundReference(i, extendedSchema(i).dataType, extendedSchema(i).nullable)
-    }
     // (initial-defaults were already filled INSIDE the parquet reader —
     // EXISTS_DEFAULT read-schema metadata — so the key probe and the
     // output projection both see the filled values)
-    val keyProj =
-      if (keySchema.isEmpty) null
-      else EqDeleteKeyCache.probeProjection(keySchema.fields.toSeq.map(bound))
     val outProj =
       if (outSchema.fieldNames.sameElements(extendedSchema.fieldNames)) null
-      else UnsafeProjection.create(outSchema.fields.map(bound))
+      else UnsafeProjection.create(outSchema.fields.toSeq.map { f =>
+        val i = extendedSchema.fieldIndex(f.name)
+        BoundReference(i, extendedSchema(i).dataType, extendedSchema(i).nullable): Expression
+      })
     new org.apache.spark.sql.connector.read.PartitionReader[InternalRow] {
       private var current: InternalRow = _
       override def next(): Boolean = {
         while (dataReader.next()) {
           val r = dataReader.get()
-          if ((cursor == null || !cursor.deleted(r.getLong(rowIdxOrd))) &&
-              (deleted == null || !deleted.contains(keyProj(r)))) {
+          if ((cursor == null || !cursor.deleted(r.getLong(rowIdxOrd))) && d.keyAlive(r)) {
             current = if (outProj == null) r else outProj(r)
             return true
           }
@@ -923,11 +786,13 @@ private final class GraftKeyedV2Scan(
         java.util.OptionalLong.of(keyed.totalRows)
     }
 
-  // MoR reader row layout, shared by split planning (fill ordinals) and
-  // the reader factory: requested columns + eq-key columns the query
-  // pruned + Spark's parquet row-index generator when positions apply
+  // merge-on-read: some data file has deletes assigned; decided over the
+  // static entries, so partitions and reader factory always agree
+  private lazy val fileDeletes = keyed.entries.flatMap(_.deletes)
   private lazy val morAnyPositional =
-    keyed.entries.exists(_.dv.isDefined) || keyed.posDeletes.nonEmpty
+    fileDeletes.exists(d => d.dv.isDefined || d.pos.nonEmpty)
+  // MoR reader row layout: requested columns + equality-key columns the
+  // query pruned + Spark's parquet row-index generator when positions apply
   private lazy val morExtendedSchema: StructType = {
     val rowIdxField =
       if (!morAnyPositional) Seq.empty
@@ -938,24 +803,24 @@ private final class GraftKeyedV2Scan(
       else Seq(StructField(
         org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
           .ROW_INDEX_TEMPORARY_COLUMN_NAME, LongType, nullable = true))
-    StructType(schema.fields ++
-      keyed.eqKeySchema.fields.filterNot(f =>
-        schema.fieldNames.exists(_.equalsIgnoreCase(f.name))) ++ rowIdxField)
+    val keyFields = keyed.eqGroups.flatMap(_.keySchema.fields)
+      .filterNot(f => schema.fieldNames.exists(_.equalsIgnoreCase(f.name)))
+      .distinctBy(_.name.toLowerCase(java.util.Locale.ROOT))
+    StructType(schema.fields ++ keyFields ++ rowIdxField)
   }
 
   override def readSchema(): StructType = schema
-  override def description(): String =
+  override def description(): String = {
+    val eq = keyed.eqGroups.flatMap(_.pools).map(_._2.size).sum
+    val pos = fileDeletes.flatMap(_.pos).distinct.size
+    val dvs = fileDeletes.count(_.dv.isDefined)
     s"graft-keyed ${table.name()} (${keyed.groups.size} partition tuples" +
       (if (claimKgp) ", key-grouped" else ", packed") +
-      (if (keyed.eqDeletes.isEmpty) ""
-       else s", ${keyed.eqDeletes.size} eq-deletes") +
-      (if (keyed.posDeletes.isEmpty) ""
-       else s", ${keyed.posDeletes.size} pos-deletes") +
-      (keyed.entries.count(_.dv.isDefined) match {
-        case 0 => ")"
-        case n => s", $n DVs)"
-      }) +
+      (if (eq == 0) "" else s", $eq eq-deletes") +
+      (if (pos == 0) "" else s", $pos pos-deletes") +
+      (if (dvs == 0) ")" else s", $dvs DVs)") +
       (if (filters.isEmpty) "" else s" PushedFilters: ${filters.mkString(", ")}")
+  }
   override def toBatch: Batch = this
 
   // ---- runtime (dim-side) pruning ----------------------------------------
@@ -1026,8 +891,7 @@ private final class GraftKeyedV2Scan(
             start, math.min(maxSplit, len - start), Array.empty[String], 0L, len)
         }
       }
-    if (keyed.eqDeletes.isEmpty && keyed.posDeletes.isEmpty &&
-        !effective.exists(_.dv.isDefined)) {
+    if (fileDeletes.isEmpty) {
       // (v3 initial-defaults fill inside the parquet reader via the read
       // schema's EXISTS_DEFAULT metadata — per file, so bins need no
       // fill signature)
@@ -1043,60 +907,33 @@ private final class GraftKeyedV2Scan(
           }
       }
     } else {
-      // MoR: bins pack per (tuple, data sequence) so every file in a
-      // split shares ONE delete applicability set — eq-deletes with a
-      // STRICTLY newer sequence, position deletes AT-OR-AFTER, scoped
-      // to this tuple or global. DV'd and position-affected files bin
-      // ALONE (per file): a split's row positions must resolve against
-      // exactly one file's vector/delete rows. Initial-defaults fill
-      // inside the reader (EXISTS_DEFAULT), BEFORE the key probes —
-      // a defaulted eq-key column matches on its fill.
-      val seqScoped = keyed.eqDeletes.nonEmpty || keyed.posDeletes.nonEmpty
-      val groupSeq: GraftKeyedScan.KeyedEntry => Long =
-        if (seqScoped) _.seq else _ => 0L
-      effective.groupBy(e => (e.key, groupSeq(e))).toSeq.foreach {
-        case ((key, seq), es) =>
-          val row: InternalRow = new GenericInternalRow(key.toArray)
-          val applicable = keyed.eqDeletes
-            .filter(d => d.seq > seq && d.tuple.forall(_ == key))
-            .map(d => (d.path, d.size)).toArray
-          val applicablePosD = keyed.posDeletes
-            .filter(d => d.seq >= seq && d.tuple.forall(_ == key))
-          // per FILE, not per bin: only files a delete's file_path
-          // bounds can actually reference bin solo through the
-          // row-index MoR reader — everything else keeps its plain
-          // vectorized bin (one small DML delete must not
-          // de-vectorize the whole partition's keyed read)
-          val (soloEs, plainEs) = es.partition(e => e.dv.isDefined ||
-            applicablePosD.exists(_.mayReference(e.entry.filePath)))
-          FilePartition.getFilePartitions(
-              spark, splitsOf(plainEs).sortBy(-_.length), maxSplit).foreach { fp =>
-            out += new GraftKeyedMorFilePartition(idx, fp.files, row, applicable)
-            idx += 1
-          }
-          soloEs.foreach { e =>
-            // a DV absorbs/overrides parquet position deletes for its
-            // file (the spec's v3 read rule)
-            val pos = if (e.dv.isDefined) Array.empty[(String, Long)]
-                      else applicablePosD
-                        .filter(_.mayReference(e.entry.filePath))
-                        .map(d => (d.path, d.size)).toArray
-            FilePartition.getFilePartitions(
-                spark, splitsOf(Seq(e)).sortBy(-_.length), maxSplit).foreach { fp =>
-              out += new GraftKeyedMorFilePartition(
-                idx, fp.files, row, applicable, e.dv, pos, e.entry.filePath)
-              idx += 1
-            }
-          }
+      // MoR: every split carries ONE FileDeletes. Files with a DV or
+      // position-delete files bin ALONE — a split's row positions resolve
+      // against one file's deletes; the rest bin per (tuple, assignment)
+      // and keep their plain vectorized bins (one small DML delete must
+      // not de-vectorize the whole partition's keyed read). Initial-
+      // defaults fill inside the reader (EXISTS_DEFAULT), BEFORE the key
+      // probes — a defaulted eq-key column matches on its fill.
+      val untouched = FileDeletes(None, 0L, -1, Seq.empty, "", Seq.empty)
+      def pack(key: Seq[Any], es: Seq[GraftKeyedScan.KeyedEntry], fd: FileDeletes): Unit = {
+        val row: InternalRow = new GenericInternalRow(key.toArray)
+        FilePartition.getFilePartitions(
+            spark, splitsOf(es).sortBy(-_.length), maxSplit).foreach { fp =>
+          out += new GraftKeyedMorFilePartition(idx, fp.files, row, fd)
+          idx += 1
+        }
       }
+      val (solo, plain) =
+        effective.partition(_.deletes.exists(d => d.dv.isDefined || d.pos.nonEmpty))
+      plain.groupBy(e => (e.key, e.deletes.fold(untouched)(_.copy(rawPath = ""))))
+        .foreach { case ((key, fd), es) => pack(key, es, fd) }
+      solo.foreach(e => pack(e.key, Seq(e), e.deletes.get))
     }
     out.result()
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val anyDv = keyed.entries.exists(_.dv.isDefined)
-    val anyPositional = anyDv || keyed.posDeletes.nonEmpty
-    if (keyed.eqDeletes.isEmpty && !anyPositional) {
+  override def createReaderFactory(): PartitionReaderFactory =
+    if (fileDeletes.isEmpty) {
       // defaulted tables stay VECTORIZED: the per-file initial-default
       // fill happens inside the parquet reader (EXISTS_DEFAULT), so no
       // row-based wrapper is needed (pre-r18 the fill projection pushed
@@ -1105,27 +942,19 @@ private final class GraftKeyedV2Scan(
     } else {
       // MoR: the data reader must surface the equality-key columns even
       // when the query pruned them, plus Spark's parquet row-index
-      // generator column when deletion vectors apply (the generator
-      // yields FILE-relative positions, exact under splits and
-      // row-group skipping); the wrapper filters deleted rows and
-      // projects back to the requested schema
+      // generator column when positions apply (the generator yields
+      // FILE-relative positions, exact under splits and row-group
+      // skipping); the wrapper filters deleted rows and projects back to
+      // the requested schema. The spec carries the groups' pools only:
+      // each split brings its own FileDeletes.
       val extended = morExtendedSchema
-      // the wrapper's key projection binds by the TABLE's field name —
-      // use the table-cased field when the query requested it
-      val keySchemaAligned = StructType(keyed.eqKeySchema.fields.map { f =>
-        extended.fields.find(_.name.equalsIgnoreCase(f.name)).getOrElse(f)
-      })
       new GraftKeyedMorReaderFactory(
         inner = ParquetReaders.factory(spark, extended, table.tableSchema, filters),
-        deleteReaderFactory = ParquetReaders.factory(spark,
-          keyed.eqKeySchema, keyed.eqKeySchema),
+        spec = DeleteSpec.build(spark, Map.empty, keyed.eqGroups, morAnyPositional),
         extendedSchema = extended,
-        keySchema = keySchemaAligned,
         outSchema = schema,
-        conf = ConfBroadcast.session(spark),
-        posDeleteReaderFactory = PosDeleteCache.factory(spark))
+        conf = ConfBroadcast.session(spark))
     }
-  }
 }
 
 private[sql] object GraftKeyedV2Scan {

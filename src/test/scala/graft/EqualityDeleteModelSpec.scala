@@ -25,8 +25,8 @@ import graft.iceberg.IcebergScan.Options
   *  - the spliced scan with `broadcastDeleteThreshold = 0` (every group
   *    above the threshold: the retained anti join),
   *  - the keyed scan (`spark.sql.sources.v2.bucketing.enabled`) of the
-  *    partitioned tables, which serves single-key-set, non-float deletes
-  *    itself and hands the rest to the spliced plan.
+  *    partitioned tables, which applies the deletes itself — every key
+  *    set, the double key included — with the spliced scan's assignment.
   *
   * Tables cover format v2 and v3, unpartitioned and `day(dt)`, a key `k`
   * widened from int to long mid-sequence, null keys, and — on the
@@ -228,7 +228,7 @@ class EqualityDeleteModelSpec extends AnyFunSuite with BeforeAndAfterAll {
         history :+= run.step(i)
         run.check(history)
       }
-      if (partitioned && !mixedKeys)
+      if (partitioned)
         assert(run.keyedReads > 0, "no read took the keyed scan")
     }
   }

@@ -54,15 +54,16 @@ class KeyedPosDeleteBinSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sql("DELETE FROM graft.db.pdbin WHERE k = 150")
 
     val parts = morPartitions("pdbin")
-    val solo = parts.filter(_.posDeleteFiles.nonEmpty)
-    val plain = parts.filter(_.posDeleteFiles.isEmpty)
+    val solo = parts.filter(_.deletes.pos.nonEmpty)
+    val plain = parts.filter(_.deletes.pos.isEmpty)
     // the delete touches ONE data file (k=150 lives in commit 2's file
-    // for its bucket); every other file keeps a posDeleteFiles-free bin
+    // for its bucket); every other file keeps a bin without
+    // position-delete files
     assert(solo.size === 1,
       s"exactly the referenced file bins solo, got ${solo.size} of ${parts.size}")
-    assert(solo.head.rawPath.nonEmpty)
+    assert(solo.head.deletes.rawPath.nonEmpty)
     assert(plain.nonEmpty, "unaffected files must keep plain bins")
-    assert(plain.forall(_.rawPath.isEmpty),
+    assert(plain.forall(_.deletes.rawPath.isEmpty),
       "plain bins carry no row-index rawPath (vectorized read)")
 
     // ... and the read stays exact through the mixed binning
@@ -75,23 +76,18 @@ class KeyedPosDeleteBinSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("a delete entry without file_path bounds solo-bins conservatively") {
-    import GraftKeyedScan.EqDelete
-    val d = EqDelete("del.parquet", 10L, 5L, None)
-    assert(d.mayReference("any/path/at/all.parquet"))
-    val lo = "s3://wh/data/a.parquet".getBytes("UTF-8")
-    val hi = "s3://wh/data/m.parquet".getBytes("UTF-8")
-    val bounded = EqDelete("del.parquet", 10L, 5L, None,
-      pathLo = Some(lo), pathHi = Some(hi))
-    assert(bounded.mayReference("s3://wh/data/a.parquet"))
-    assert(bounded.mayReference("s3://wh/data/g.parquet"))
-    assert(bounded.mayReference("s3://wh/data/m.parquet"))
-    assert(!bounded.mayReference("s3://wh/data/z.parquet"))
-    assert(!bounded.mayReference("s3://wh/dat.parquet"))
+    import graft.iceberg.IcebergPruning.pathInBounds
+    assert(pathInBounds(None, None, "any/path/at/all.parquet"))
+    val lo = Some("s3://wh/data/a.parquet".getBytes("UTF-8"))
+    val hi = Some("s3://wh/data/m.parquet".getBytes("UTF-8"))
+    assert(pathInBounds(lo, hi, "s3://wh/data/a.parquet"))
+    assert(pathInBounds(lo, hi, "s3://wh/data/g.parquet"))
+    assert(pathInBounds(lo, hi, "s3://wh/data/m.parquet"))
+    assert(!pathInBounds(lo, hi, "s3://wh/data/z.parquet"))
+    assert(!pathInBounds(lo, hi, "s3://wh/dat.parquet"))
     // unsigned compare: bytes >= 0x80 sort ABOVE ascii, not below
-    val hiByte = Array[Byte](0x7f)
-    val loByte = Array[Byte](0x20)
-    val bin = EqDelete("d", 1L, 1L, None,
-      pathLo = Some(loByte), pathHi = Some(hiByte))
-    assert(!bin.mayReference("ÿ"), "0xc3/0xbf utf-8 bytes sort above 0x7f")
+    val hiByte = Some(Array[Byte](0x7f))
+    val loByte = Some(Array[Byte](0x20))
+    assert(!pathInBounds(loByte, hiByte, "ÿ"), "0xc3/0xbf utf-8 bytes sort above 0x7f")
   }
 }
