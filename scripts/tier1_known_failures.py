@@ -3,8 +3,8 @@
 
 sbt writes one JUnit XML report per suite under target/test-reports/.
 This script reads the reports of ONE run -- those written at or after
---since (a file whose modification time marks the run's start, or epoch
-seconds) -- and compares their failing tests with
+the modification time of the marker file given as --since, touched just
+before the run -- and compares their failing tests with
 scripts/tier1_known_failures.txt, one `Suite::test name` per line: the
 tests that read the reference implementation's fixture tables, which
 fail wherever that checkout is absent.
@@ -26,33 +26,24 @@ import sys
 import xml.etree.ElementTree as ET
 
 HERE = os.path.dirname(os.path.abspath(__file__))
-
-
-def since_epoch(value):
-    if value is None:
-        return None
-    if os.path.exists(value):
-        return os.path.getmtime(value)
-    return float(value)
+REPORTS = os.path.join(HERE, "..", "target", "test-reports")
+KNOWN = os.path.join(HERE, "tier1_known_failures.txt")
 
 
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("--reports", default=os.path.join(HERE, "..", "target", "test-reports"))
-    ap.add_argument("--known", default=os.path.join(HERE, "tier1_known_failures.txt"))
-    ap.add_argument("--since", help="file marking the run's start, or epoch seconds; "
-                    "without it every report in the directory counts")
+    ap.add_argument("--since", required=True, metavar="MARKER",
+                    help="file touched just before the test run")
     args = ap.parse_args()
 
-    start = since_epoch(args.since)
-    with open(args.known) as f:
+    start = os.path.getmtime(args.since)
+    with open(KNOWN) as f:
         known = {line.rstrip("\n") for line in f if line.strip()}
 
-    reports = [p for p in sorted(glob.glob(os.path.join(args.reports, "TEST-*.xml")))
-               if start is None or os.path.getmtime(p) >= start]
+    reports = [p for p in sorted(glob.glob(os.path.join(REPORTS, "TEST-*.xml")))
+               if os.path.getmtime(p) >= start]
     if not reports:
-        print(f"no test report in {args.reports}" +
-              ("" if start is None else " from this run"), file=sys.stderr)
+        print(f"no test report in {REPORTS} from this run", file=sys.stderr)
         return 2
 
     ran, failed = set(), set()

@@ -434,31 +434,24 @@ object IcebergScan {
       }.toDF("__eq_qual", "__data_seq", "__data_part")
       cur = cur.join(broadcast(seqMap), col("__graft_file") === col("__eq_qual"), "left")
         .drop("__eq_qual")
-      val eqCard = deletes.joinGroups.flatMap(_.files).map(_._1.recordCount).sum
-      deletes.joinGroups.foreach { g =>
+      val eqCard = deletes.joinGroups.flatMap(_.keys.files).map(_._1.recordCount).sum
+      deletes.joinGroups.foreach { case JoinGroup(g, affected) =>
         val delR = eqDeleteFrame(spark, conf, path, opts, g, snapshot, deletes.scope)
         val delB = if (eqCard <= opts.broadcastDeleteThreshold) broadcast(delR) else delR
-        // SCOPING, part 2 (per group): data files whose key bounds are
-        // disjoint from ALL of the group's delete files bypass the anti
-        // join entirely — a partition-local delete must not shuffle the
-        // whole table through the join when the delete side is too big
-        // to broadcast. The membership predicate on _metadata.file_path
-        // also file-prunes each branch's parquet scan. Bounded: above
-        // EqScopeMaxFiles affected files the split is skipped (a plan
-        // with a 100k-literal IN list would hurt more than the join).
-        val mayMatch = IcebergPruning.eqDeleteMayMatch(g.files.map(_._1), g.keyCols)
-        val affected = dataEntries.filter { case (de, dseq) =>
-          g.files.exists { case (d, delSeq) =>
-            dseq < delSeq && deletes.scope.reaches(d.filePath, de.filePath) } && mayMatch(de)
-        }
+        // SCOPING, part 2 (per group): data files the planner found out of
+        // the group's reach bypass the anti join entirely — a
+        // partition-local delete must not shuffle the whole table through
+        // the join when the delete side is too big to broadcast. The
+        // membership predicate on _metadata.file_path also file-prunes
+        // each branch's parquet scan. Bounded: above EqScopeMaxFiles
+        // affected files the split is skipped (a plan with a 100k-literal
+        // IN list would hurt more than the join).
         if (affected.isEmpty) ()
         else if (affected.size == dataEntries.size ||
                  affected.size > EqScopeMaxFiles)
           cur = cur.join(delB, eqDeleteCond(g.cols), "left_anti")
         else {
-          val affectedQual = affected.map { case (de, _) =>
-            qualify(resolved(path, de.filePath, opts))
-          }
+          val affectedQual = affected.map(p => qualify(resolved(path, p, opts)))
           val hit = col("__graft_file").isInCollection(affectedQual)
           cur = cur.filter(!hit).unionByName(
             cur.filter(hit).join(delB, eqDeleteCond(g.cols), "left_anti"))
@@ -472,25 +465,34 @@ object IcebergScan {
   }
 
   /** Which row deletes reach which data file, as [[planDeletes]] assigns
-    * them. `files`: per data file some delete reaches, by its manifest
-    * path, its [[graft.sql.FileDeletes]]. `filterGroups`: the
-    * equality-delete groups those descriptors index, applied per file.
-    * `joinGroups`: the groups left to the anti join. `listed`: every
-    * delete file the scan may read (`mode = 'list_files'`). */
-  private[graft] final case class DeletePlan(
-      files: Map[String, graft.sql.FileDeletes],
-      filterGroups: Seq[graft.sql.EqDeleteGroup],
-      joinGroups: Seq[EqKeyGroup],
-      listed: Seq[String],
-      scope: PartitionScope)
+    * them. `joinGroups`: the equality-delete groups left to the anti
+    * join, each with the data files it reaches. `listed`: every delete
+    * file the scan may read (`mode = 'list_files'`). `files`: per data
+    * file the filter applies deletes to, by its manifest path, its
+    * [[graft.sql.FileDeletes]]; `filterGroups`: the equality-delete groups
+    * those descriptors index. These two size unsized delete files
+    * ([[deleteFileLength]]) on first use, so a caller that stops at
+    * `joinGroups` stats no file. */
+  private[graft] final class DeletePlan(
+      val joinGroups: Seq[JoinGroup], val listed: Seq[String], val scope: PartitionScope,
+      assign: () => (Map[String, graft.sql.FileDeletes], Seq[graft.sql.EqDeleteGroup])) {
+    private lazy val assigned = assign()
+    def files: Map[String, graft.sql.FileDeletes] = assigned._1
+    def filterGroups: Seq[graft.sql.EqDeleteGroup] = assigned._2
+  }
 
-  /** The spec's partition scoping of equality deletes: partition ids by
-    * manifest path, equal ids = equal partition spec id and tuple, for the
-    * live data files and the equality deletes that record a tuple; every
-    * other file is -1, and a delete of id -1 reaches every partition. */
+  /** An equality-delete group left to the anti join, with the manifest
+    * paths of the data files it reaches. */
+  private[graft] final case class JoinGroup(keys: EqKeyGroup, affected: Seq[String])
+
+  /** The spec's partition scoping of position and equality deletes:
+    * partition ids by manifest path, equal ids = equal partition spec id
+    * and tuple, for the live data files and the deletes that record a
+    * tuple; every other file is -1, and a delete of id -1 reaches every
+    * partition. */
   private[graft] final case class PartitionScope(ids: Map[String, Int]) {
     def partOf(rawPath: String): Int = ids.getOrElse(rawPath, -1)
-    /** Does the equality delete at `delete` reach the data file at `data`? */
+    /** Does the delete file at `delete` reach the data file at `data`? */
     def reaches(delete: String, data: String): Boolean = {
       val d = partOf(delete)
       d < 0 || d == partOf(data)
@@ -498,17 +500,17 @@ object IcebergScan {
   }
 
   private object PartitionScope {
-    /** The scope of `meta` for its live equality deletes `eqDeletes`;
-      * no ids (all global) unless one of them records a tuple. */
-    def of(meta: TableMeta, eqDeletes: Seq[(ManifestEntry, Long)]): PartitionScope =
-      if (eqDeletes.forall(_._1.partition.isEmpty)) PartitionScope(Map.empty)
+    /** The scope of `meta` for its live position and equality deletes
+      * `deletes`; no ids (all global) unless one of them records a tuple. */
+    def of(meta: TableMeta, deletes: Seq[(ManifestEntry, Long)]): PartitionScope =
+      if (deletes.forall(_._1.partition.isEmpty)) PartitionScope(Map.empty)
       else {
         val ids = scala.collection.mutable.HashMap.empty[(Option[Int], Seq[(String, Any)]), Int]
         PartitionScope(meta.entries.flatMap { case (m, es) =>
           val spec = m.stats.map(_.partitionSpecId)
           es.collect {
             case e if e.status != 2 &&
-                (e.content == 0 || (e.content == 2 && e.partition.nonEmpty)) =>
+                (e.content == 0 || (e.partition.nonEmpty && !e.isDV)) =>
               // byte-array values compare by content
               val tuple = e.partition.toSeq.sortBy(_._1).map {
                 case (k, b: Array[Byte]) => (k, b.toSeq)
@@ -532,14 +534,14 @@ object IcebergScan {
     *    bounds ([[IcebergPruning.pathInBounds]]);
     *  - an equality-delete file reaches data files strictly before its
     *    sequence number whose key bounds it may match
-    *    ([[IcebergPruning.eqDeleteMayMatch]]) and, when it records a
-    *    partition tuple, whose partition spec id and tuple equal its own;
-    *    an empty tuple reaches every partition.
+    *    ([[IcebergPruning.eqDeleteMayMatch]]);
+    *  - a position or equality delete that records a partition tuple
+    *    reaches only data files of its partition spec id and tuple; an
+    *    empty tuple reaches every partition.
     * Equality groups of at most `broadcastDeleteThreshold` rows, keyed on
     * types the byte-wise probe compares like `<=>`, go to the filter, the
-    * rest to the anti join. Delete files without a recorded size are
-    * sized here ([[deleteFileLength]]). A deletion-vector entry that lacks
-    * its referenced file or blob coordinates fails with an IOException
+    * rest to the anti join. A deletion-vector entry that lacks its
+    * referenced file or blob coordinates fails with an IOException
     * naming it. */
   private[graft] def planDeletes(
       spark: SparkSession, path: String, opts: Options, snapshot: Snapshot,
@@ -557,18 +559,17 @@ object IcebergScan {
     val dataPathSet = data.map(_._1.filePath).toSet
     val dvEntries = dvAll.filter { case (e, _) => dataPathSet(e.referencedDataFile.get) }
       .groupBy(_._1.referencedDataFile.get).values.map(_.maxBy(_._2)).toSeq
-    val dvByFile = dvEntries.map { case (e, _) =>
-      e.referencedDataFile.get -> graft.sql.GraftKeyedScan.DvRef(
-        resolved(path, e.filePath, opts), e.contentOffset.get, e.contentSizeInBytes.get)
-    }.toMap
-    // a position-delete file whose `file_path` bounds no data file read
-    // falls in is dropped — a pruned scan of untouched partitions reads
-    // none. Bounds absent (foreign writers) → keep.
-    val posEntries = posAll.filter { case (e, _) =>
-      data.exists { case (de, _) => IcebergPruning.posDeleteMayReference(e, de.filePath) }
-    }
     val eqAll = livePaths(meta, manifestContent = 1, entryContent = 2, opts)
-    val scope = PartitionScope.of(meta, eqAll)
+    val scope = PartitionScope.of(meta, posAll ++ eqAll)
+    def posReaches(e: ManifestEntry, delSeq: Long, de: ManifestEntry, dseq: Long): Boolean =
+      dseq <= delSeq && scope.reaches(e.filePath, de.filePath) &&
+        IcebergPruning.posDeleteMayReference(e, de.filePath)
+    // a position-delete file that reaches no data file read is dropped —
+    // a pruned scan of untouched partitions reads none. Bounds absent
+    // (foreign writers) → the partition alone decides.
+    val posEntries = posAll.filter { case (e, delSeq) =>
+      data.exists { case (de, dseq) => posReaches(e, delSeq, de, dseq) }
+    }
     // equality deletes that reach no data file read — disjoint key bounds
     // (null-count-guarded), another partition, or no older data file —
     // are dropped: a partition-local delete on a pruned scan of other
@@ -590,45 +591,55 @@ object IcebergScan {
       g.files.map(_._1.recordCount).sum <= opts.broadcastDeleteThreshold &&
         g.keyStruct.fields.forall(f => graft.sql.DvAlive.probeable(f.dataType))
     }
-    // per filter group, bounds scoping (eqDeleteMayMatch merges the
-    // group's key bounds once) and the newest delete sequence per
-    // partition id (-1 = global): a file no group reaches is left out
-    val scopes = filterGroups.map { g =>
-      (IcebergPruning.eqDeleteMayMatch(g.files.map(_._1), g.keyCols),
-       g.files.groupMapReduce { case (e, _) => scope.partOf(e.filePath) }(_._2)(math.max))
+    // does group g reach a data file? Bounds scoping (eqDeleteMayMatch
+    // merges the group's key bounds once), then the newest delete
+    // sequence per partition id (-1 = global)
+    def groupReaches(g: EqKeyGroup): (ManifestEntry, Long) => Boolean = {
+      val mayMatch = IcebergPruning.eqDeleteMayMatch(g.files.map(_._1), g.keyCols)
+      val maxSeq = g.files.groupMapReduce { case (e, _) => scope.partOf(e.filePath) }(_._2)(math.max)
+      (de, dseq) =>
+        (maxSeq.get(-1).exists(dseq < _) || maxSeq.get(scope.partOf(de.filePath)).exists(dseq < _)) &&
+          mayMatch(de)
     }
-    val posFiles = posEntries.map { case (e, delSeq) =>
-      val p = resolved(path, e.filePath, opts)
-      (e, delSeq, (p, deleteFileLength(e, p, conf)))
-    }
-    val files = data.flatMap { case (de, dseq) =>
-      val part = scope.partOf(de.filePath)
-      val gs = scopes.indices.filter { i =>
-        val (mayMatch, maxSeq) = scopes(i)
-        (maxSeq.get(-1).exists(dseq < _) || maxSeq.get(part).exists(dseq < _)) && mayMatch(de)
-      }
-      val dv = dvByFile.get(de.filePath)
-      val pos =
-        if (dv.isDefined) Seq.empty
-        else posFiles.collect {
-          case (e, delSeq, coords) if dseq <= delSeq &&
-            IcebergPruning.posDeleteMayReference(e, de.filePath) => coords
-        }
-      if (dv.isEmpty && gs.isEmpty && pos.isEmpty) None
-      else Some(de.filePath -> graft.sql.FileDeletes(dv, dseq, part, gs, de.filePath, pos))
-    }.toMap
-    val groups = filterGroups.map { g =>
-      graft.sql.EqDeleteGroup(g.keyStruct, g.pools.map { case (schema, fs) =>
-        schema -> fs.map { case (e, dseq) =>
-          val p = resolved(path, e.filePath, opts)
-          graft.sql.EqDeleteFile(p, deleteFileLength(e, p, conf), dseq, scope.partOf(e.filePath))
-        }
-      })
+    val joins = joinGroups.map { g =>
+      val reaches = groupReaches(g)
+      JoinGroup(g, data.collect { case (de, dseq) if reaches(de, dseq) => de.filePath })
     }
     // one puffin file can hold many DVs — list it once
     val listed = (posEntries ++ dvEntries ++ eqEntries)
       .map { case (e, _) => resolved(path, e.filePath, opts) }.distinct
-    DeletePlan(files, groups, joinGroups, listed, scope)
+    new DeletePlan(joins, listed, scope, () => {
+      val dvByFile = dvEntries.map { case (e, _) =>
+        e.referencedDataFile.get -> graft.sql.GraftKeyedScan.DvRef(
+          resolved(path, e.filePath, opts), e.contentOffset.get, e.contentSizeInBytes.get)
+      }.toMap
+      val filterReaches = filterGroups.map(groupReaches)
+      val posFiles = posEntries.map { case (e, delSeq) =>
+        val p = resolved(path, e.filePath, opts)
+        (e, delSeq, (p, deleteFileLength(e, p, conf)))
+      }
+      val files = data.flatMap { case (de, dseq) =>
+        val gs = filterReaches.indices.filter(i => filterReaches(i)(de, dseq))
+        val dv = dvByFile.get(de.filePath)
+        val pos =
+          if (dv.isDefined) Seq.empty
+          else posFiles.collect {
+            case (e, delSeq, coords) if posReaches(e, delSeq, de, dseq) => coords
+          }
+        if (dv.isEmpty && gs.isEmpty && pos.isEmpty) None
+        else Some(de.filePath -> graft.sql.FileDeletes(
+          dv, dseq, scope.partOf(de.filePath), gs, de.filePath, pos))
+      }.toMap
+      val groups = filterGroups.map { g =>
+        graft.sql.EqDeleteGroup(g.keyStruct, g.pools.map { case (schema, fs) =>
+          schema -> fs.map { case (e, dseq) =>
+            val p = resolved(path, e.filePath, opts)
+            graft.sql.EqDeleteFile(p, deleteFileLength(e, p, conf), dseq, scope.partOf(e.filePath))
+          }
+        })
+      }
+      (files, groups)
+    })
   }
 
   /** One key-column set of equality-delete files: the key column names

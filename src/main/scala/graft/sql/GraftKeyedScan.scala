@@ -197,21 +197,24 @@ object GraftKeyedScan {
     val data = graft.iceberg.IcebergPruning.prune(
       dataLive.map(_._1), preds, snapshot.partitionSpec, snapshot.schema)
     val kept = data.map(_.filePath).toSet
+    val tuples = data.map(e => tupleOf(e).getOrElse(return None)) // older-spec entry: bail
     // row deletes as the spliced scan assigns them; a group the planner
-    // leaves to the anti join needs the spliced plan, and a planning
-    // failure (a malformed DV entry) falls back to it, which raises it
-    val deletes = Try(IcebergScan.planDeletes(spark, root, t.opts, snapshot, meta,
-      dataLive.filter { case (e, _) => kept(e.filePath) })).toOption.getOrElse(return None)
-    if (deletes.joinGroups.nonEmpty) return None
-    val keyedEntries: Seq[KeyedEntry] = data.map { e =>
-      val vs = tupleOf(e).getOrElse(return None) // older-spec entry: bail
-      KeyedEntry(e, resolvedPath(e), vs, deletes.files.get(e.filePath))
+    // leaves to the anti join needs the spliced plan (checked before any
+    // delete file is sized), and a planning failure (a malformed DV
+    // entry) falls back to it, which raises it
+    val (files, eqGroups) = Try {
+      val d = IcebergScan.planDeletes(spark, root, t.opts, snapshot, meta,
+        dataLive.filter { case (e, _) => kept(e.filePath) })
+      if (d.joinGroups.nonEmpty) None else Some((d.files, d.filterGroups))
+    }.toOption.flatten.getOrElse(return None)
+    val keyedEntries = data.zip(tuples).map { case (e, vs) =>
+      KeyedEntry(e, resolvedPath(e), vs, files.get(e.filePath))
     }
     Some(Keyed(keyTypes, keyedEntries,
       snapshot.partitionSpec, snapshot.schema,
       totalRows = data.map(_.recordCount).sum,
       totalBytes = data.map(_.fileSizeInBytes).sum,
-      eqGroups = deletes.filterGroups))
+      eqGroups = eqGroups))
   }
 
   /** V2 source Filters → pruning predicates. Untranslatable shapes

@@ -175,6 +175,34 @@ class DeletePlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("a position delete without file_path bounds reaches only its partition") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_delplan_pos_").toFile
+    val a = writeParquet(root, Seq((4L, "a"), (5L, "a"), (6L, "a")).toDF("x", "p"), "data/a")
+    val b = writeParquet(root, Seq((5L, "b"), (7L, "b")).toDF("x", "p"), "data/b")
+    val pos = writeParquet(root, Seq((a.getAbsolutePath, 1L)).toDF("file_path", "pos"), "data/pos")
+    // the manifest records no bounds for the delete (a foreign writer's
+    // shape), so only its partition tuple keeps it away from b
+    val path = buildTable(root)(
+      Seq(Entry(0, a.getAbsolutePath, "PARQUET", 3L, Some(a.length), "a"),
+          Entry(0, b.getAbsolutePath, "PARQUET", 2L, Some(b.length), "b")),
+      Seq(Entry(1, pos.getAbsolutePath, "PARQUET", 1L, Some(pos.length), "a")))
+    val want = Seq((4L, "a"), (5L, "b"), (6L, "a"), (7L, "b"))
+    assert(rows(IcebergScan.scan(spark, path)) === want, "spliced scan")
+    withKeyed {
+      val tbl = table(path)
+      val keyed = tbl.keyedPlan(spark).getOrElse(fail("table must plan keyed"))
+      val bins = GraftKeyedV2Scan(spark, tbl, tbl.schema(), keyed).toBatch
+        .planInputPartitions().toSeq.map(_.asInstanceOf[GraftKeyedMorFilePartition])
+      val (solo, plain) = bins.partition(_.deletes.pos.nonEmpty)
+      assert(solo.flatMap(_.files.map(_.filePath.toString)).forall(_.contains("/data/a/")) &&
+        solo.size === 1, s"only partition a's file bins solo: $bins")
+      assert(plain.nonEmpty && plain.forall(_.deletes.rawPath.isEmpty),
+        "partition b's file keeps a plain bin")
+      assert(rows(spark.read.format("graft").load(path)) === want, "keyed scan")
+    }
+  }
+
   test("a malformed deletion-vector entry fails with an IOException naming it") {
     import spark.implicits._
     def rootCause(t: Throwable): Option[java.io.IOException] = t match {
