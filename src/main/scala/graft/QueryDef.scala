@@ -74,7 +74,16 @@ object GraftSessions {
     // co-bucketed joins/aggregations plan with zero Exchange (ib64);
     // pushPartValues keeps one-sided tuples joinable
     "spark.sql.sources.v2.bucketing.enabled" -> "true",
-    "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true")
+    "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
+    // local storage: Hadoop's LocalFileSystem with a fork-free
+    // setPermission (without native libhadoop every create/mkdirs runs
+    // `chmod`). Wiring, not a knob. Uncached: Hadoop caches a FileSystem
+    // by scheme and user, not by conf, so a `file:` instance resolved
+    // earlier from another conf (a plain `new Configuration()`, another
+    // session) would otherwise serve this session with the stock class
+    // and that conf's umask.
+    "spark.hadoop.fs.file.impl" -> classOf[graft.iceberg.NioLocalFileSystem].getName,
+    "spark.hadoop.fs.file.impl.disable.cache" -> "true")
 
   /** Standard local session builder for the driver harnesses and tests.
     * Installs the graft extensions (TVFs, scalar functions, and the

@@ -9,7 +9,7 @@ import org.apache.avro.Schema
 import org.apache.avro.file.DataFileWriter
 import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
@@ -353,14 +353,33 @@ object IcebergWriter {
       records: Seq[GenericRecord]): Unit = {
     val os = out.getFileSystem(conf).create(out, true)
     val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](schema))
-    w.create(schema, os)
-    try records.foreach(w.append) finally w.close()
+    // w.close() closes os only once create has succeeded; closing os again
+    // is a no-op
+    try {
+      w.create(schema, os)
+      records.foreach(w.append)
+    } finally try w.close() finally os.close()
   }
 
-  private def writeString(p: Path, conf: Configuration, s: String): Unit = {
-    val os = p.getFileSystem(conf).create(p, true)
-    try os.write(s.getBytes("UTF-8")) finally os.close()
+  /** Commit metadata version `version`: the `v{N}.metadata.json`
+    * compare-and-swap, then the version hint. */
+  private def commitVersion(metaDir: Path, conf: Configuration, version: Int,
+                            root: ObjectNode): Unit = {
+    writeNewVersion(new Path(metaDir, s"v$version.metadata.json"), conf,
+      mapper.writerWithDefaultPrettyPrinter().writeValueAsString(root))
+    val hint = new Path(metaDir, DefaultVersionHintFile)
+    val os = hint.getFileSystem(conf).create(hint, true)
+    try os.write(version.toString.getBytes("UTF-8")) finally os.close()
   }
+
+  /** Every file under `dir`, recursively (`dir` itself when it is a file).
+    * `listStatus`, not `listFiles`: the local filesystem's
+    * `LocatedFileStatus` reads each entry's permission, which without
+    * native libhadoop forks `ls -ld` per entry; nothing here needs it. */
+  private def filesUnder(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    fs.listStatus(dir).toSeq.flatMap { st =>
+      if (st.isDirectory) filesUnder(fs, st.getPath) else Seq(st)
+    }
 
   /** Create-new-version write for metadata.json: the version file is
     * created with overwrite=false, so of two writers racing from the same
@@ -714,19 +733,10 @@ object IcebergWriter {
       dataFormat: String = "parquet"): Seq[WrittenFile] = {
     val fs = dir.getFileSystem(conf)
     val ext = "." + dataFormat.toLowerCase
-    val files = {
-      val it = fs.listFiles(dir, true)
-      val buf = Seq.newBuilder[FileStatus]
-      while (it.hasNext) {
-        val s = it.next()
-        // never register in-flight/orphaned avro staging output
-        // (defense in depth: the writer also deletes its staging tree)
-        if (s.isFile && s.getPath.getName.endsWith(ext) &&
-            !s.getPath.toString.contains("/" + AvroFiles.StagingPrefix))
-          buf += s
-      }
-      buf.result()
-    }
+    // never register in-flight/orphaned avro staging output
+    // (defense in depth: the writer also deletes its staging tree)
+    val files = filesUnder(fs, dir).filter(s => s.getPath.getName.endsWith(ext) &&
+      !s.getPath.toString.contains("/" + AvroFiles.StagingPrefix))
     // Footer reads in bounded parallel (same pool pattern as the manifest
     // fetch) — a commit may add O(10k) files and a sequential driver loop
     // over an object store would dominate commit time.
@@ -1690,10 +1700,7 @@ object IcebergWriter {
     appendLogs(root, state, path,
       if (branch == "main") Some(snapshotId -> commitTs) else None)
 
-    val version = state.map(_.version + 1).getOrElse(1)
-    writeNewVersion(new Path(metaDir, s"v$version.metadata.json"), conf,
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsString(root))
-    writeString(new Path(metaDir, DefaultVersionHintFile), conf, version.toString)
+    commitVersion(metaDir, conf, state.map(_.version + 1).getOrElse(1), root)
     snapshotId
   }
 
@@ -1849,11 +1856,7 @@ object IcebergWriter {
     val commitTs = state.nextTsMs
     root.put("last-updated-ms", commitTs)
     appendLogs(root, Some(state), path, moveMainTo.map(_ -> commitTs))
-    val metaDir = new Path(path, "metadata")
-    val version = state.version + 1
-    writeNewVersion(new Path(metaDir, s"v$version.metadata.json"), conf,
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsString(root))
-    writeString(new Path(metaDir, DefaultVersionHintFile), conf, version.toString)
+    commitVersion(new Path(path, "metadata"), conf, state.version + 1, root)
     removed
   }
 
@@ -1902,13 +1905,11 @@ object IcebergWriter {
     val fs = dataDir.getFileSystem(conf)
     val found = Seq.newBuilder[(String, Long)]
     if (fs.exists(dataDir)) {
-      val it = fs.listFiles(dataDir, true)
-      while (it.hasNext) {
-        val st = it.next()
+      filesUnder(fs, dataDir).foreach { st =>
         // .puffin: a deletion-vector file every retained snapshot has
         // rewritten away is as orphaned as a dropped parquet file
         val name = st.getPath.getName
-        if (st.isFile && (name.endsWith(".parquet") || name.endsWith(".puffin")) &&
+        if ((name.endsWith(".parquet") || name.endsWith(".puffin")) &&
             !referenced(st.getPath.toUri.getPath))
           found += st.getPath.toString -> st.getModificationTime
       }
@@ -1924,17 +1925,13 @@ object IcebergWriter {
       state.info.partitionStatistics.map(s => new Path(s.path).toUri.getPath).toSet
     val metaDir = new Path(path, "metadata")
     if (fs.exists(metaDir)) {
-      val it = fs.listFiles(metaDir, true)
-      while (it.hasNext) {
-        val st = it.next()
+      filesUnder(fs, metaDir).foreach { st =>
         val p = st.getPath.toUri.getPath
-        if (st.isFile) {
-          if (st.getPath.getName.endsWith(".puffin") && !statsReferenced(p))
-            found += st.getPath.toString -> st.getModificationTime
-          else if (p.contains("/partition-stats-") &&
-                   !pStatsDirs.exists(d => p.startsWith(d + "/")))
-            found += st.getPath.toString -> st.getModificationTime
-        }
+        if (st.getPath.getName.endsWith(".puffin") && !statsReferenced(p))
+          found += st.getPath.toString -> st.getModificationTime
+        else if (p.contains("/partition-stats-") &&
+                 !pStatsDirs.exists(d => p.startsWith(d + "/")))
+          found += st.getPath.toString -> st.getModificationTime
       }
     }
     found.result().sortBy(_._1)
@@ -2104,11 +2101,7 @@ object IcebergWriter {
     appendLogs(root, Some(state), path,
       newRefs.get("main").map(_._1).filterNot(prevMain.contains)
         .map(_ -> commitTs))
-    val metaDir = new Path(path, "metadata")
-    val version = state.version + 1
-    writeNewVersion(new Path(metaDir, s"v$version.metadata.json"), conf,
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsString(root))
-    writeString(new Path(metaDir, DefaultVersionHintFile), conf, version.toString)
+    commitVersion(new Path(path, "metadata"), conf, state.version + 1, root)
   }
 
   private def refState(path: String, conf: Configuration, op: String): State =
@@ -3013,9 +3006,7 @@ object IcebergWriter {
     }
     val metaDir = new Path(targetPath, "metadata")
     metaDir.getFileSystem(conf).mkdirs(metaDir)
-    writeNewVersion(new Path(metaDir, "v1.metadata.json"), conf,
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsString(root))
-    writeString(new Path(metaDir, DefaultVersionHintFile), conf, "1")
+    commitVersion(metaDir, conf, 1, root)
     cur.snapshotId
   }
 
@@ -3128,19 +3119,11 @@ object IcebergWriter {
     val src = new Path(sourceDir)
     val fs = src.getFileSystem(conf)
     val ext = "." + fmt
-    val files = {
-      val it = fs.listFiles(src, true)
-      val buf = Seq.newBuilder[FileStatus]
-      while (it.hasNext) {
-        val s = it.next()
-        // a crashed producer's staging leftovers are partial containers —
-        // registering one would commit garbage (same guard as collectFiles)
-        if (s.isFile && s.getPath.getName.endsWith(ext) &&
-            !s.getPath.toString.contains("/" + AvroFiles.StagingPrefix))
-          buf += s
-      }
-      buf.result().sortBy(_.getPath.toString)
-    }
+    // a crashed producer's staging leftovers are partial containers —
+    // registering one would commit garbage (same guard as collectFiles)
+    val files = filesUnder(fs, src).filter(s => s.getPath.getName.endsWith(ext) &&
+      !s.getPath.toString.contains("/" + AvroFiles.StagingPrefix))
+      .sortBy(_.getPath.toString)
     require(files.nonEmpty, s"addFiles: no $ext files under $sourceDir")
     // first file's PHYSICAL schema: new-table schema, and the
     // physical-presence check for partition sources below. Read the one
@@ -3368,11 +3351,7 @@ object IcebergWriter {
     root.put("current-schema-id", newId)
     root.put("last-updated-ms", state.nextTsMs)
     appendLogs(root, Some(state), path, None)
-    val metaDir = new Path(path, "metadata")
-    val version = state.version + 1
-    writeNewVersion(new Path(metaDir, s"v$version.metadata.json"), conf,
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsString(root))
-    writeString(new Path(metaDir, DefaultVersionHintFile), conf, version.toString)
+    commitVersion(new Path(path, "metadata"), conf, state.version + 1, root)
   }
 
   /** Metadata-only ADD COLUMN with spec-v3 DEFAULT VALUES (Iceberg spec
@@ -3466,11 +3445,7 @@ object IcebergWriter {
     root.put("last-column-id", math.max(prevLastCol, id))
     root.put("last-updated-ms", state.nextTsMs)
     appendLogs(root, Some(state), path, None)
-    val metaDir = new Path(path, "metadata")
-    val version = state.version + 1
-    writeNewVersion(new Path(metaDir, s"v$version.metadata.json"), conf,
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsString(root))
-    writeString(new Path(metaDir, DefaultVersionHintFile), conf, version.toString)
+    commitVersion(new Path(path, "metadata"), conf, state.version + 1, root)
   }
 
   /** ALTER TABLE SET/UNSET TBLPROPERTIES — a metadata-only commit (no
@@ -3506,11 +3481,7 @@ object IcebergWriter {
     }
     root.put("last-updated-ms", state.nextTsMs)
     appendLogs(root, Some(state), path, None)
-    val metaDir = new Path(path, "metadata")
-    val version = state.version + 1
-    writeNewVersion(new Path(metaDir, s"v$version.metadata.json"), conf,
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsString(root))
-    writeString(new Path(metaDir, DefaultVersionHintFile), conf, version.toString)
+    commitVersion(new Path(path, "metadata"), conf, state.version + 1, root)
   }
 
   /** ANALYZE TABLE — per-column NDV statistics (Iceberg spec "Table
@@ -3596,11 +3567,7 @@ object IcebergWriter {
     root.set[JsonNode]("statistics", stats)
     root.put("last-updated-ms", state.nextTsMs)
     appendLogs(root, Some(state), path, None)
-    val metaDir = new Path(path, "metadata")
-    val version = state.version + 1
-    writeNewVersion(new Path(metaDir, s"v$version.metadata.json"), conf,
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsString(root))
-    writeString(new Path(metaDir, DefaultVersionHintFile), conf, version.toString)
+    commitVersion(new Path(path, "metadata"), conf, state.version + 1, root)
     ndv
   }
 
@@ -3625,13 +3592,7 @@ object IcebergWriter {
       .withColumn("last_updated_snapshot_id", lit(snap.snapshotId))
       .coalesce(1)
       .write.mode("overwrite").parquet(statsPath.toString)
-    val size = {
-      val fs = statsPath.getFileSystem(conf)
-      val it = fs.listFiles(statsPath, true)
-      var n = 0L
-      while (it.hasNext) { val s = it.next(); if (s.isFile) n += s.getLen }
-      n
-    }
+    val size = filesUnder(statsPath.getFileSystem(conf), statsPath).map(_.getLen).sum
     val json = IcebergIO.readString(
       new Path(path, s"metadata/v${state.version}.metadata.json").toString, conf)
     val root = mapper.readTree(json).asInstanceOf[ObjectNode]
@@ -3646,11 +3607,7 @@ object IcebergWriter {
     root.set[JsonNode]("partition-statistics", stats)
     root.put("last-updated-ms", state.nextTsMs)
     appendLogs(root, Some(state), path, None)
-    val metaDir = new Path(path, "metadata")
-    val version = state.version + 1
-    writeNewVersion(new Path(metaDir, s"v$version.metadata.json"), conf,
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsString(root))
-    writeString(new Path(metaDir, DefaultVersionHintFile), conf, version.toString)
+    commitVersion(new Path(path, "metadata"), conf, state.version + 1, root)
     statsPath.toString
   }
 
@@ -3719,11 +3676,7 @@ object IcebergWriter {
     root.put("current-schema-id", newId)
     root.put("last-updated-ms", state.nextTsMs)
     appendLogs(root, Some(state), path, None)
-    val metaDir = new Path(path, "metadata")
-    val version = state.version + 1
-    writeNewVersion(new Path(metaDir, s"v$version.metadata.json"), conf,
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsString(root))
-    writeString(new Path(metaDir, DefaultVersionHintFile), conf, version.toString)
+    commitVersion(new Path(path, "metadata"), conf, state.version + 1, root)
   }
 
   /** Snapshot-summary key prefix for the streaming sink's batch-id
