@@ -1,6 +1,8 @@
 package graft.iceberg
 
 import java.nio.ByteBuffer
+import java.nio.file.Files
+import java.nio.file.attribute.PosixFilePermissions
 import java.time.LocalDate
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
@@ -10,6 +12,7 @@ import org.apache.avro.file.DataFileWriter
 import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
@@ -397,15 +400,22 @@ object IcebergWriter {
       // Hadoop's local create(path, overwrite=false) is exists-check-then-
       // create — two racers can BOTH pass the check, and the loser's bytes
       // silently clobber the winner's committed metadata. O_CREAT|O_EXCL
-      // via nio is the kernel-atomic CAS the commit protocol needs.
+      // via nio is the kernel-atomic CAS the commit protocol needs. The
+      // mode is the one Hadoop's create gives under the session umask,
+      // attached to the create so the file never exists wider.
       val local = java.nio.file.Paths.get(uri.getPath)
-      try java.nio.file.Files.createFile(local)
-      catch {
+      val mode = FsPermission.getFileDefault.applyUMask(FsPermission.getUMask(conf))
+      val perms = PosixFilePermissions.asFileAttribute(NioLocalFileSystem.posix(mode.toShort))
+      try {
+        // a store without a POSIX view refuses the attribute
+        try Files.createFile(local, perms)
+        catch { case _: UnsupportedOperationException => Files.createFile(local) }
+      } catch {
         case _: java.nio.file.FileAlreadyExistsException =>
           throw new java.io.IOException(
             s"commit conflict: ${p.getName} already exists (concurrent writer won)")
       }
-      java.nio.file.Files.write(local, s.getBytes("UTF-8"))
+      Files.write(local, s.getBytes("UTF-8"))
     } else {
       // non-local stores: best effort via the FS contract (HDFS create is
       // atomic; object stores need a catalog for true CAS — documented)

@@ -37,7 +37,7 @@ object NioLocalFileSystem {
   // i.e. mode bits 0400 down to 0001
   private val Bits = PosixFilePermission.values.zipWithIndex.map { case (p, i) => p -> (0x100 >> i) }
 
-  private def posix(mode: Short): java.util.Set[PosixFilePermission] = {
+  private[iceberg] def posix(mode: Short): java.util.Set[PosixFilePermission] = {
     val s = java.util.EnumSet.noneOf(classOf[PosixFilePermission])
     Bits.foreach { case (p, bit) => if ((mode & bit) != 0) s.add(p) }
     s

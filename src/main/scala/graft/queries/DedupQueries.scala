@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.iceberg.IcebergScan
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -137,8 +137,10 @@ object DedupQueries {
       posexplode(array(bandSigs: _*)).as(Seq("b", "sig")))
   }
 
-  /** Shared bigram-MinHash-LSH candidate pairs (doc_a < doc_b), the
-    * candidate generator behind d02/d04/d06.
+  /** Shared bigram-MinHash-LSH candidate pairs (doc_a < doc_b) of a
+    * `documents`-shaped frame, the candidate generator behind d02/d04/d06.
+    * Callers pass the frame they already loaded, so a query reads
+    * `documents` (and runs its schema-inference job) once.
     *
     * Round 19 (guide §2.4/§3.1): the self-join is pinned to a SHUFFLED
     * HASH join on (b, sig). Unhinted, the planner broadcast one side —
@@ -152,8 +154,8 @@ object DedupQueries {
     * (the executed plan carries a ReusedExchange — halving the dominant
     * map-side work), and per-partition hash build keeps memory bounded
     * by one LSH-bucket partition at any scale. */
-  private[queries] def minhashCandidates(s: SparkSession, dir: String): DataFrame = {
-    val bands = minhashBands(Tables.load(s, dir, "documents")).hint("shuffle_hash")
+  private[queries] def minhashCandidates(docs: DataFrame): DataFrame = {
+    val bands = minhashBands(docs).hint("shuffle_hash")
     bands.as("a").join(bands.as("c"),
         col("a.b") === col("c.b") && col("a.sig") === col("c.sig") &&
         col("a.doc_id") < col("c.doc_id"))
@@ -187,21 +189,22 @@ object DedupQueries {
             ON a.b = c.b AND a.sig = c.sig AND a.doc_id < c.doc_id)"""
 
   /** Min-label propagation over an undirected edge set (`s`,`d` columns;
-    * both directions present).
+    * both directions present). Preconditions: `labels0.doc_id` is unique
+    * and every edge endpoint is a `labels0.doc_id`. Under them, one
+    * self-loop (doc_id, doc_id) per `labels0` row makes a round
+    * `edges ⋈ labels_k on d = doc_id → groupBy(s) min(label)`, equal to
+    * `least(label, coalesce(nmin, label))` over a left join with the
+    * neighbors' minimum, and each generation is referenced ONCE. Both
+    * modes run that round.
     *
-    * `fixpoint = false` (exactly `maxRounds` rounds — the oracle-pinned
-    * d06 semantics; the unrolled CTEs mirror the count): the rounds are
-    * chained LAZILY into one plan with every join pinned SHUFFLE_HASH on
-    * doc_id (round 19, guide §2.4). Each generation is referenced twice
-    * by the next round (as the neighbor side of `nmin` and as the
-    * left-join base), but both references shuffle the IDENTICAL subtree
-    * by doc_id, so AQE exchange reuse computes every generation's stage
-    * exactly once — the executed d06 plan carries one ReusedExchange per
-    * duplicated reference (9 total). That replaces the old
-    * persist+count-per-round loop: ~2 driver jobs and a cache
-    * write/read/unpersist cycle per round collapse into one job, ~30%
-    * off d06 at sf0.1, with no cached generations to leak. The edges
-    * side equally shuffles once and is re-read per round.
+    * `fixpoint = false` (exactly `maxRounds` rounds, the oracle-pinned
+    * d06 semantics; the unrolled CTEs mirror the count): the rounds chain
+    * LAZILY into one plan (one job, no cached generation to leak) with
+    * every join pinned SHUFFLE_HASH. The plan grows by one join, one
+    * aggregate and one edge-set copy per round; AQE exchange reuse
+    * shuffles the edges once. A round that referenced its generation
+    * twice would double the plan per round: exchange reuse still runs
+    * each generation once, but Catalyst and AQE walk every copy.
     *
     * `fixpoint = true` (stop when a round changes no label — true
     * connected components for any diameter, bounded by `maxRounds`):
@@ -213,40 +216,25 @@ object DedupQueries {
   private[queries] def propagate(
       labels0: DataFrame, edges0: DataFrame,
       fixpoint: Boolean, maxRounds: Int): DataFrame = {
+    val loops = labels0.select(col("doc_id").as("s"), col("doc_id").as("d"))
+    val edges = edges0.select(col("s"), col("d")).union(loops).hint("shuffle_hash")
+    def step(labels: DataFrame): DataFrame =
+      edges.join(labels.select(col("doc_id").as("d"), col("label")).hint("shuffle_hash"), "d")
+        .groupBy(col("s").as("doc_id")).agg(min(col("label")).as("label"))
+    var labels = labels0.select(col("doc_id"), col("label"))
     if (!fixpoint) {
-      // the lazy path chains every round into ONE plan; analysis cost
-      // (DeduplicateRelations over nested self-joins) grows fast with
-      // depth, so cap it — callers needing more rounds get the
-      // materializing fixpoint loop instead (ADVICE r19)
+      // every round extends ONE plan; callers needing more rounds take
+      // the materializing fixpoint loop
       require(maxRounds <= 8,
         s"propagate: lazy chaining caps at 8 rounds, got $maxRounds — use fixpoint=true")
-      val edges = edges0.hint("shuffle_hash")
-      var labels = labels0.select(col("doc_id"), col("label"))
-      (1 to maxRounds).foreach { _ =>
-        val lab = labels.hint("shuffle_hash")
-        // keep the neighbor side UNRENAMED below the join so its exchange
-        // subtree is plan-identical to the left-join base's — renaming
-        // first would defeat the reuse that makes lazy chaining linear
-        val nmin = edges.join(lab, edges("d") === lab("doc_id"))
-          .groupBy(col("s").as("doc_id")).agg(min(col("label")).as("nmin"))
-        labels = lab.join(nmin, Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            least(col("label"), coalesce(col("nmin"), col("label"))).as("label"))
-      }
+      (1 to maxRounds).foreach(_ => labels = step(labels))
       return labels
     }
-    val edges = edges0.persist()
-    var labels = labels0.select(col("doc_id"), col("label"))
+    edges.persist()
     var round = 0
     var converged = false
     while (round < maxRounds && !converged) {
-      val nmin = edges.join(
-          labels.select(col("doc_id").as("d"), col("label").as("xl")), "d")
-        .groupBy(col("s").as("doc_id")).agg(min(col("xl")).as("nmin"))
-      val next = labels.join(nmin, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          least(col("label"), coalesce(col("nmin"), col("label"))).as("label"))
-        .persist()
+      val next = step(labels).persist()
       val changed = next.as("n")
         .join(labels.as("p"), "doc_id")
         .filter(col("n.label") =!= col("p.label"))
@@ -260,17 +248,17 @@ object DedupQueries {
     labels
   }
 
-  /** Cluster labels after exactly 3 rounds of min-label propagation over
-    * the LSH candidate graph — shared by d06 and the corpus pipeline
-    * (p01); the round count is mirrored in the unrolled oracle CTEs
-    * ([[clusterLabelsSql]] — change both together). */
-  private[queries] def clusterLabels(s: SparkSession, dir: String): DataFrame = {
-    val cand = minhashCandidates(s, dir)
-    val edges = cand.select(col("doc_a").as("s"), col("doc_b").as("d"))
-      .union(cand.select(col("doc_b").as("s"), col("doc_a").as("d")))
-    val labels0 = Tables.load(s, dir, "documents")
-      .select(col("doc_id"), col("doc_id").as("label"))
-    propagate(labels0, edges, fixpoint = false, maxRounds = 3)
+  /** Cluster labels of a `documents`-shaped frame after exactly 3 rounds
+    * of min-label propagation over its LSH candidate graph — shared by d06
+    * and the corpus pipeline (p01/p02). Both edge directions come from one
+    * candidate reference (`stack`); doc_id is unique and every candidate
+    * is a document, as [[propagate]] requires. The round count is mirrored
+    * in the unrolled oracle CTEs ([[clusterLabelsSql]] — change both). */
+  private[queries] def clusterLabels(docs: DataFrame): DataFrame = {
+    val edges = minhashCandidates(docs)
+      .select(expr("stack(2, doc_a, doc_b, doc_b, doc_a) AS (s, d)"))
+    propagate(docs.select(col("doc_id"), col("doc_id").as("label")), edges,
+      fixpoint = false, maxRounds = 3)
   }
 
   /** The same propagation as oracle CTEs ending in `l3(doc_id, label)`
@@ -312,7 +300,7 @@ object DedupQueries {
         WITH ${minhashCandSql}
         SELECT doc_a, doc_b FROM cand
         ORDER BY doc_a, doc_b"""),
-      (s, dir) => minhashCandidates(s, dir).orderBy("doc_a", "doc_b")
+      (s, dir) => minhashCandidates(Tables.load(s, dir, "documents")).orderBy("doc_a", "doc_b")
     ),
     QueryDef(
       "d03_simhash",
@@ -380,9 +368,9 @@ object DedupQueries {
                     / len(list_distinct(ta.w || tc.w)), 6) >= 0.7
         ORDER BY doc_a, doc_b"""),
       (s, dir) => {
-        val t = Tables.load(s, dir, "documents")
-          .select(col("doc_id"), col("lang"), toks.as("w"))
-        minhashCandidates(s, dir)
+        val docs = Tables.load(s, dir, "documents")
+        val t = docs.select(col("doc_id"), col("lang"), toks.as("w"))
+        minhashCandidates(docs)
           .join(t.select(col("doc_id").as("doc_a"), col("lang").as("la"), col("w").as("wa")), "doc_a")
           .join(t.select(col("doc_id").as("doc_b"), col("lang").as("lb"), col("w").as("wb")), "doc_b")
           .filter(col("la") === col("lb"))
@@ -409,7 +397,7 @@ object DedupQueries {
         ${clusterLabelsSql}
         SELECT doc_id, label AS cluster_id FROM l3 ORDER BY doc_id"""),
       (s, dir) => {
-        clusterLabels(s, dir)
+        clusterLabels(Tables.load(s, dir, "documents"))
           .select(col("doc_id"), col("label").as("cluster_id")).orderBy("doc_id")
       }
     ),

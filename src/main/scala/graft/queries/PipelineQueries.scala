@@ -19,8 +19,8 @@ object PipelineQueries {
     * t02/d06/t06 composition p01 aggregates). */
   private def curated(s: SparkSession, dir: String): DataFrame = {
     val stop = array(Seq("the", "and", "is", "of", "to", "a", "in").map(lit): _*)
-    val q = Tables.load(s, dir, "documents")
-      .select(col("doc_id"), col("source"),
+    val docs = Tables.load(s, dir, "documents")
+    val q = docs.select(col("doc_id"), col("source"),
         size(toksAll).as("n_tok"),
         round(size(filter(toksAll, x => array_contains(stop, x))).cast("double")
             / size(toksAll) * 0.5
@@ -29,7 +29,7 @@ object PipelineQueries {
               / length(col("text"))) * 0.3
           + least(size(toksAll).cast("double") / 100.0, lit(1.0)) * 0.2, 6)
           .as("quality"))
-    val keepers = DedupQueries.clusterLabels(s, dir)
+    val keepers = DedupQueries.clusterLabels(docs)
       .filter(col("label") === col("doc_id")).select("doc_id")
     val bucket = conv(substring(
         md5(col("doc_id").cast("string").cast("binary")), 1, 8), 16, 10)

@@ -149,14 +149,14 @@ class ForkFreeCommitSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally spark.conf.unset("fs.file.impl")
     commits(nio)
     assert(modes(nio) === modes(stock))
-    // umask 077: directories 0700; every file Hadoop creates (data,
-    // checksum, manifest, DV, hint) 0600. Only v{N}.metadata.json is made
-    // by the writer's own O_EXCL create, under the process umask.
+    // umask 077: directories 0700; every file a commit makes (data,
+    // checksum, manifest, DV, hint, and v{N}.metadata.json from the
+    // writer's own O_EXCL create) 0600.
     val all = modes(nio)
-    Seq(".parquet", ".parquet.crc", ".avro", ".avro.crc", ".puffin", ".text")
+    Seq(".parquet", ".parquet.crc", ".avro", ".avro.crc", ".puffin", ".text", ".metadata.json")
       .foreach(k => assert(all.exists(_._1.endsWith(k)), s"no $k file in $all"))
     assert(all.filter(_._1 == "dir").map(_._2) === Set(octal("700")))
-    assert(all.filterNot(e => e._1 == "dir" || e._1 == ".metadata.json").map(_._2) === Set(octal("600")))
+    assert(all.filterNot(_._1 == "dir").map(_._2) === Set(octal("600")))
   }
 
   test("explicit setPermission lands, sticky bit included") {

@@ -1,15 +1,21 @@
 package graft.queries
 
+import java.nio.file.Files
+
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.Generate
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.GraftSessions
+import graft.{GraftSessions, PlanWalk, SparkEntry}
 
 /** Label-propagation core (d06): the pinned 3-round variant is the oracle
   * contract; the fixpoint variant must find true connected components on
-  * graphs DEEPER than 3 hops and stop once no label changes. */
+  * graphs DEEPER than 3 hops and stop once no label changes. Both match a
+  * plain-Scala min-label model, and the lazy plan grows linearly in
+  * rounds. */
 class PropagationSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession =
@@ -26,6 +32,32 @@ class PropagationSpec extends AnyFunSuite with BeforeAndAfterAll {
     val labels0 = Seq(1L, 2L, 3L, 4L, 5L, 10L, 11L)
       .toDF("doc_id").select(col("doc_id"), col("doc_id").as("label"))
     (labels0, edges)
+  }
+
+  /** A seeded random undirected graph on `base until base + n` (both
+    * directions listed): a path of 7-8 hops through shuffled ids (every
+    * node on it is 4+ hops from one end, so 3 rounds cannot close it), a
+    * random graph on the other nodes (self-loops possible) but 2-4 that
+    * keep no edge at all, and a few edges listed twice. */
+  private def randomGraph(seed: Int, base: Long): (Seq[Long], Seq[(Long, Long)]) = {
+    val rnd = new scala.util.Random(seed)
+    val nodes = rnd.shuffle((base until base + 16 + rnd.nextInt(12)).toList)
+    val (path, others) = nodes.splitAt(8 + rnd.nextInt(2))
+    val linked = others.drop(2 + rnd.nextInt(3))
+    val extra = Seq.fill(2 * linked.size)(
+      (linked(rnd.nextInt(linked.size)), linked(rnd.nextInt(linked.size))))
+    val undirected = path.sliding(2).map(p => (p(0), p(1))).toSeq ++ extra
+    val twice = Seq.fill(3)(undirected(rnd.nextInt(undirected.size)))
+    (nodes, (undirected ++ twice).flatMap { case (a, b) => Seq((a, b), (b, a)) })
+  }
+
+  /** `rounds` rounds of min-label propagation: each node takes the least
+    * label among itself and its neighbors. */
+  private def model(nodes: Seq[Long], edges: Seq[(Long, Long)], rounds: Int): Map[Long, Long] = {
+    val nbrs = edges.groupMap(_._1)(_._2)
+    (1 to rounds).foldLeft(nodes.map(v => v -> v).toMap) { (lab, _) =>
+      lab.map { case (v, l) => v -> (l +: nbrs.getOrElse(v, Nil).map(lab)).min }
+    }
   }
 
   test("3 pinned rounds cannot close a diameter-4 path (oracle shape)") {
@@ -55,5 +87,57 @@ class PropagationSpec extends AnyFunSuite with BeforeAndAfterAll {
     // only the FINAL generation may remain cached
     assert(during <= before + 1)
     out.unpersist()
+  }
+
+  test("3 lazy rounds and the fixpoint match the model on 20 random graphs") {
+    import spark.implicits._
+    val graphs = (1 to 20).map(seed => seed -> randomGraph(seed, seed * 1000L))
+    // the graphs share no node, so one propagation over their union runs all
+    val labels0 = graphs.flatMap(_._2._1).toDF("doc_id")
+      .select(col("doc_id"), col("doc_id").as("label"))
+    val edges = graphs.flatMap(_._2._2).toDF("s", "d")
+    def run(fixpoint: Boolean, rounds: Int): Map[Long, Long] = {
+      val out = DedupQueries.propagate(labels0, edges, fixpoint, rounds)
+      try out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap finally out.unpersist()
+    }
+    for ((fixpoint, rounds) <- Seq(false -> 3, true -> 50)) {
+      val got = run(fixpoint, rounds)
+      assert(got.size === graphs.map(_._2._1.size).sum, s"fixpoint=$fixpoint")
+      graphs.foreach { case (seed, (nodes, es)) =>
+        assert(nodes.map(v => v -> got(v)).toMap === model(nodes, es, rounds),
+          s"fixpoint=$fixpoint seed=$seed")
+      }
+    }
+    // every path is deeper than 3 rounds reach
+    assert(graphs.forall { case (_, (nodes, es)) => model(nodes, es, 3) != model(nodes, es, 50) })
+  }
+
+  test("the lazy plan grows by the same node count every round") {
+    val (labels0, edges) = fixtures
+    def nodes(rounds: Int): Int =
+      DedupQueries.propagate(labels0, edges, fixpoint = false, rounds)
+        .queryExecution.analyzed.collect { case p => p }.size
+    val Seq(n1, n2, n3) = Seq(1, 2, 3).map(nodes)
+    assert(n3 - n2 === n2 - n1, s"analyzed nodes after 1, 2, 3 rounds: $n1, $n2, $n3")
+  }
+
+  test("d06 plans one band pipeline per round and runs it once") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    val vocab = (0 until 30).map(i => s"w$i")
+    val texts = (0 until 80).map(_ => Seq.fill(10 + rnd.nextInt(20))(vocab(rnd.nextInt(30))).mkString(" "))
+    // every 8th document is a near-duplicate of the one before it
+    val docs = texts.indices.map { i =>
+      (i.toLong, if (i % 8 == 7) texts(i - 1) + " dup" else texts(i))
+    }
+    val dir = Files.createTempDirectory("graft_prop_docs_").toString
+    docs.toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    val df = SparkEntry.queries("d06_dedup_clusters")(spark, dir)
+    // explode + posexplode per band side, two sides, 3 rounds; one stack each
+    val generates = df.queryExecution.optimizedPlan.collect { case g: Generate => g }.size
+    assert(generates <= 16, s"$generates Generate nodes")
+    assert(df.collect().count(r => r.getLong(0) != r.getLong(1)) >= 10)
+    val reused = PlanWalk.collect(df.queryExecution.executedPlan) { case r: ReusedExchangeExec => r }
+    assert(reused.nonEmpty, df.queryExecution.executedPlan.toString.take(3000))
   }
 }
