@@ -17,7 +17,7 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.{Column => SqlColumn, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{call_function, col, count, datediff, lit, month, when, xxhash64, year}
+import org.apache.spark.sql.functions.{call_function, col, datediff, lit, month, when, xxhash64, year}
 import org.apache.spark.sql.types._
 
 import IcebergModel._
@@ -1236,30 +1236,48 @@ object IcebergWriter {
     manifests.groupBy(_.content).toSeq.sortBy(_._1).flatMap {
       case (_, Seq(single)) => Seq(single)
       case (content, ms) =>
-        val entries = DriverPool.mapParallel(
+        val carried = DriverPool.mapParallel(
           ms, parallelism, timeout, "graft-manifest-merge") { m =>
-          ManifestReader.readManifestEntries(m.manifestPath, conf, formatVersion = 2)
-            .map(e => e.copy(
-              sequenceNumber = Some(e.seqOr(m.sequenceNumber)),
-              status = if (e.status == 1) 0 else e.status)) // ADDED → EXISTING
-        }.flatten
+          m -> ManifestReader.readManifestEntries(m.manifestPath, conf, formatVersion = 2)
+        }
         // Foreign writers can carry partition value types our merged
         // manifest schema does not model (boolean/float/...): merging
         // would mistype them — leave such a class unmerged (correct,
         // just not compacted) rather than fail the commit.
-        val mergeable = entries.forall(_.partition.values.forall {
+        val mergeable = carried.forall(_._2.forall(_.partition.values.forall {
           case null | _: java.lang.Integer | _: java.lang.Long | _: String => true
           case _ => false
-        })
+        }))
         if (!mergeable) ms
-        else {
-          val merged = new Path(path,
-            s"metadata/snap-$snapshotId-${commitToken()}-merged-c$content.avro")
-          writeManifest(merged, conf, entries, mergedPartitionFields(entries))
-          Seq(Manifest(merged.toString,
-            entries.flatMap(_.sequenceNumber).maxOption.getOrElse(0L), content))
-        }
+        else Seq(rewriteManifest(path, conf,
+          s"snap-$snapshotId-${commitToken()}-merged-c$content.avro", carried) { e =>
+          if (e.status == 1) e.copy(status = 0) else e // ADDED → EXISTING
+        })
     }
+  }
+
+  /** The one rewrite of carried manifest entries: writes `carried` —
+    * entries with the manifest they come from — into the new manifest
+    * `metadata/<name>`. Each entry first pins its EFFECTIVE sequence
+    * number (the new manifest sits at a new manifest-list position, where
+    * inheritance would re-stamp it); `restamp` then sets its status or
+    * first row id. A rewrite of one manifest keeps that manifest's
+    * sequence number and content; a merge of several takes their
+    * entries' highest sequence number. */
+  private def rewriteManifest(
+      path: String, conf: Configuration, name: String,
+      carried: Seq[(Manifest, Seq[ManifestEntry])])(
+      restamp: ManifestEntry => ManifestEntry): Manifest = {
+    val entries = carried.flatMap { case (m, es) =>
+      es.map(e => restamp(e.copy(sequenceNumber = Some(e.seqOr(m.sequenceNumber)))))
+    }
+    val p = new Path(path, s"metadata/$name")
+    writeManifest(p, conf, entries, mergedPartitionFields(entries))
+    val seq = carried match {
+      case Seq((m, _)) => m.sequenceNumber
+      case _ => entries.flatMap(_.sequenceNumber).maxOption.getOrElse(0L)
+    }
+    Manifest(p.toString, seq, carried.head._1.content)
   }
 
   /** Short random token embedded in every commit-scoped metadata file
@@ -2839,16 +2857,11 @@ object IcebergWriter {
     var tombstoned = 0
     val rewritten = meta.entries.map {
       case (m, es) if m.content == 0 && es.exists(hit) =>
-        val entries = es.filter(_.status != 2).map { e =>
+        rewriteManifest(path, conf, s"snap-$snapshotId-${commitToken()}-ow.avro",
+            Seq(m -> es.filter(_.status != 2))) { e =>
           if (hit(e)) tombstoned += 1
-          e.copy(
-            status = if (hit(e)) 2 else 0,
-            sequenceNumber = Some(e.seqOr(m.sequenceNumber)))
+          e.copy(status = if (hit(e)) 2 else 0)
         }
-        val p = new Path(path,
-          s"metadata/snap-$snapshotId-${commitToken()}-ow.avro")
-        writeManifest(p, conf, entries, mergedPartitionFields(entries))
-        Manifest(p.toString, m.sequenceNumber, m.content)
       case (m, _) => m
     }
     commitSnapshot(path, conf, Some(state), df.schema, snapshotId, seq,
@@ -2922,14 +2935,11 @@ object IcebergWriter {
       var tombstoned = 0
       val rewritten = meta.entries.map {
         case (m, es) if m.content == 0 && es.exists(e => e.status != 2) =>
-          val entries = es.filter(_.status != 2).map { e =>
+          rewriteManifest(path, conf, s"snap-$snapshotId-${commitToken()}-ow.avro",
+              Seq(m -> es.filter(_.status != 2))) { e =>
             tombstoned += 1
-            e.copy(status = 2, sequenceNumber = Some(e.seqOr(m.sequenceNumber)))
+            e.copy(status = 2)
           }
-          val p = new Path(path,
-            s"metadata/snap-$snapshotId-${commitToken()}-ow.avro")
-          writeManifest(p, conf, entries, mergedPartitionFields(entries))
-          Manifest(p.toString, m.sequenceNumber, m.content)
         case (m, _) => m
       }
       commitSnapshot(path, conf, Some(state), df.schema, snapshotId, seq,
@@ -2941,9 +2951,9 @@ object IcebergWriter {
       // MoR: position tombstones for matching rows, same commit as the
       // new data. The delete rows reference the PRE-commit files by
       // path, so the same-sequence data files above are never affected.
-      val positions = matchedPositions(spark, path, latest, meta, predicate, conf)
+      val (positions, deletes) = matchedPositions(spark, path, latest, meta, predicate, conf)
       val manifests = commitPositionDeletes(
-        spark, path, conf, latest, meta, positions, snapshotId, seq,
+        spark, path, conf, latest, meta, positions, deletes, snapshotId, seq,
         manifestIdx = 1)
       commitSnapshot(path, conf, Some(state), df.schema, snapshotId, seq,
         manifests :+ added, spec, operation = "overwrite", branch = branch,
@@ -3725,74 +3735,78 @@ object IcebergWriter {
     val schema = IcebergSchemaParser.toStructType(latest.schema)
     val snapshotId = state.nextSnapshotId
     val seq = state.nextSeq
-    val positions = matchedPositions(spark, path, latest, meta, predicate, conf)
+    val (positions, deletes) = matchedPositions(spark, path, latest, meta, predicate, conf)
     val manifests = commitPositionDeletes(
-      spark, path, conf, latest, meta, positions, snapshotId, seq)
+      spark, path, conf, latest, meta, positions, deletes, snapshotId, seq)
     commitSnapshot(path, conf, Some(state), schema, snapshotId, seq,
       manifests, operation = "delete", branch = branch)
   }
 
   /** (file_path, pos) of live rows matching `predicate`, matched against
     * the TOMBSTONE-AWARE scan (provenance kept) — already position/
-    * equality-deleted rows must not be re-tombstoned. Reuses the
-    * caller's loaded manifest tree (no second metadata fetch); the
-    * qualified-URI → manifest-path bridge mirrors the scan's. Shared by
-    * [[delete]] and [[overwriteWhere]]. */
+    * equality-deleted rows must not be re-tombstoned — with the scan's
+    * delete plan. Reuses the caller's loaded manifest tree (no second
+    * metadata fetch); the qualified-URI → manifest-path bridge mirrors
+    * the scan's. Shared by [[delete]] and [[overwriteWhere]]. */
   private def matchedPositions(
       spark: SparkSession, path: String, latest: Snapshot, meta: TableMeta,
       predicate: org.apache.spark.sql.Column,
-      conf: Configuration): DataFrame =
-    toOriginalPositions(spark, meta, conf,
-      IcebergScan.scanLoaded(spark, path,
-          IcebergScan.Options(keepProvenance = true), latest, meta)
-        .filter(predicate)
-        .select(col("__graft_file"), col("__graft_pos")))
+      conf: Configuration): (DataFrame, IcebergScan.DeletePlan) = {
+    val (rows, deletes) = IcebergScan.scanPlanned(spark, path,
+      IcebergScan.Options(keepProvenance = true), latest, meta)
+    (toOriginalPositions(spark, meta, conf,
+      rows.filter(predicate).select(col("__graft_file"), col("__graft_pos"))), deletes)
+  }
 
   /** Provenance (`__graft_file` qualified URI, `__graft_pos`) →
     * (file_path, pos) with the MANIFEST-recorded original path — the
-    * qualified-URI bridge all row-tombstoning ops share. */
+    * qualified-URI bridge all row-tombstoning ops share. The map of live
+    * data files rides a broadcast variable into the tasks: a broadcast
+    * join cost the commit one more Spark job. */
   private def toOriginalPositions(
       spark: SparkSession, meta: TableMeta, conf: Configuration,
       rows: DataFrame): DataFrame = {
-    import spark.implicits._
-    val liveFiles = meta.entries.collect {
-      case (m, es) if m.content == 0 =>
-        es.filter(e => e.status != 2 && e.content == 0).map(_.filePath)
-    }.flatten
     val qualify: String => String = IcebergIO.qualified(_, conf)
-    val fileMap = liveFiles.map(f => (qualify(f), f)).toDF("__qual", "__orig")
-    rows.join(org.apache.spark.sql.functions.broadcast(fileMap),
-        col("__graft_file") === col("__qual"))
-      .select(col("__orig").as("file_path"), col("__graft_pos").as("pos"))
+    val original = spark.sparkContext.broadcast(meta.entries.collect {
+      case (m, es) if m.content == 0 =>
+        es.collect { case e if e.status != 2 && e.content == 0 => qualify(e.filePath) -> e.filePath }
+    }.flatten.toMap)
+    val toOriginal = org.apache.spark.sql.functions.udf((q: String) => original.value(q))
+    rows.select(toOriginal(col("__graft_file")).as("file_path"), col("__graft_pos").as("pos"))
   }
 
   /** Commit-side position tombstones, routed by the table's format:
     * v2 writes a parquet position-delete file; v3 writes DELETION
     * VECTORS (Iceberg spec v3 — one puffin-held roaring bitmap per
-    * affected data file). Returns the manifest list to commit: previous
-    * manifests (superseded DV entries tombstoned via rewrite) plus the
-    * new delete manifest.
+    * affected data file). `positions` are (file_path, pos) with the
+    * manifest-recorded path; a null `pos` names a file to rewrite with no
+    * new position. `deletes` is the plan of the scan that matched them.
+    * Returns the manifest list to commit: previous manifests (superseded
+    * delete entries tombstoned via rewrite) plus the new delete manifest.
     *
     * The v3 invariant is AT MOST ONE live DV per data file: the new DV
-    * for a file is the union of the incoming positions with every prior
-    * live delete for it (old DV, plus parquet position-delete rows from
-    * the table's v2 era), and the superseded DV entries are rewritten to
-    * DELETED status. Parquet delete FILES are not tombstoned here — one
-    * file can cover unaffected data files too — but scans ignore their
-    * rows for any data file that has a DV (the spec's read rule), which
-    * this merge makes lossless.
+    * for a file is the union of the incoming positions with the file's
+    * prior deletes, and the superseded DV entries are rewritten to
+    * DELETED status. The prior deletes are the scan's own: the
+    * `FileDeletes` the delete planner assigned the file, loaded through
+    * the readers' loader (`DeleteLoader`) — its DV if it has one, else
+    * the parquet position deletes whose sequence number reaches it. So
+    * the new DV hides exactly what the base snapshot hid plus the new
+    * rows. Parquet delete FILES are not tombstoned here — one file can
+    * cover unaffected data files too — but scans ignore their rows for
+    * any data file that has a DV (the spec's read rule).
     *
-    * Scale: positions flow through one hash repartition on file_path +
-    * a within-partition sort; each executor task streams its groups into
-    * ONE puffin file (memory bounded by a single file's position set —
-    * Puffin.DVWriter). Only blob COORDINATES are collected to the driver
-    * (one row per affected data file, the same order of driver metadata
-    * as the manifests themselves). The affected-file set is collected to
-    * scope old-delete merging and the manifest rewrite; it is bounded by
-    * the live file count. */
+    * Scale: one distributed pass. Positions flow through one hash
+    * repartition on file_path and a within-partition sort; each task
+    * merges each of its files' positions with the file's prior deletes
+    * and streams them into ONE puffin file (memory bounded by a single
+    * file's position set — Puffin.DVWriter). Only blob COORDINATES come
+    * back to the driver, one row per affected data file; they name the
+    * DV entries to supersede. */
   private def commitPositionDeletes(
       spark: SparkSession, path: String, conf: Configuration,
       latest: Snapshot, meta: TableMeta, positions: DataFrame,
+      deletes: IcebergScan.DeletePlan,
       snapshotId: Long, seq: Long, manifestIdx: Int = 0,
       tombstoneParquetDeletes: Boolean = false,
       // upgradeFormat commits DVs while the LOADED table is still v2
@@ -3805,151 +3819,87 @@ object IcebergWriter {
       latest.manifestList, conf, latest.formatVersion)
     val tok = commitToken()
     val manifestPath = new Path(path, s"metadata/snap-$snapshotId-$tok-m$manifestIdx.avro")
+    val asDV = latest.formatVersion >= 3 || forceDV
 
-    if (latest.formatVersion < 3 && !forceDV) {
-      val delDir = new Path(path, s"data/snap-$snapshotId-deletes")
-      positions.write.parquet(delDir.toString)
-      val delFiles = posDeleteFiles(delDir, conf)
-      val added =
-        if (delFiles.isEmpty) Seq.empty
-        else {
-          writeManifest(manifestPath, conf, delFiles.map { w =>
-            ManifestEntry(status = 1, content = 1, filePath = w.path, // POSITION_DELETES
-              fileFormat = "PARQUET", recordCount = w.count, fileSizeInBytes = w.sizeBytes,
-              lowerBounds = w.lower, upperBounds = w.upper, splitOffsets = w.splitOffsets)
-          })
-          Seq(Manifest(manifestPath.toString, seq, content = 1))
+    val added: Seq[ManifestEntry] =
+      if (!asDV) {
+        val delDir = new Path(path, s"data/snap-$snapshotId-deletes")
+        positions.write.parquet(delDir.toString)
+        posDeleteFiles(delDir, conf).map { w =>
+          ManifestEntry(status = 1, content = 1, filePath = w.path, // POSITION_DELETES
+            fileFormat = "PARQUET", recordCount = w.count, fileSizeInBytes = w.sizeBytes,
+            lowerBounds = w.lower, upperBounds = w.upper, splitOffsets = w.splitOffsets)
         }
-      if (!tombstoneEqualityDeletes) return prevManifests ++ added
-      // absorbed eq-delete entries rewrite to DELETED status, with
-      // carried entries pinning their effective sequence numbers (the
-      // rewritten manifest is referenced from a new list position;
-      // inheritance would otherwise re-stamp them)
-      val manifestByPath2 = meta.entries.map { case (m, es) => m.manifestPath -> es }.toMap
-      val carried2 = prevManifests.zipWithIndex.map { case (m, i) =>
-        val es = manifestByPath2.getOrElse(m.manifestPath, Seq.empty)
-        if (m.content != 1 || !es.exists(e => e.status != 2 && e.content == 2)) m
-        else {
-          val rewritten = es.filter(_.status != 2).map { e =>
-            val e2 = e.copy(sequenceNumber = Some(e.seqOr(m.sequenceNumber)))
-            if (e.content == 2) e2.copy(status = 2) else e2
+      } else {
+        val prior = deletes.files.filter { case (_, fd) => fd.dv.isDefined || fd.pos.nonEmpty }
+        val spec = graft.sql.DeleteSpec.build(spark, prior, Seq.empty,
+          positional = prior.valuesIterator.exists(_.pos.nonEmpty))
+        val confB = ConfBroadcast(spark, conf)
+        val dvDir = new Path(path, s"data/snap-$snapshotId-dv-$tok").toString
+        positions
+          .select(col("file_path"), col("pos").cast("long").as("pos"))
+          .repartition(col("file_path"))
+          .sortWithinPartitions("file_path")
+          .as[(String, Option[Long])]
+          .mapPartitions { rows =>
+            val it = rows.buffered
+            val out = new Path(s"$dvDir/part-${org.apache.spark.TaskContext.getPartitionId()}.puffin")
+            var w: Puffin.DVWriter = null
+            val blobs = Seq.newBuilder[(String, String, Long, Long, Long)]
+            while (it.hasNext) {
+              val file = it.head._1
+              val ps = Array.newBuilder[Long]
+              while (it.hasNext && it.head._1 == file) it.next()._2.foreach(ps += _)
+              spec.files.get(file).foreach { fd =>
+                val old = graft.sql.DeleteLoader.deleted(spec, fd, confB.value.value)
+                if (old != null) ps ++= old
+              }
+              val merged = ps.result()
+              if (merged.nonEmpty) {
+                if (w == null) w = new Puffin.DVWriter(out, confB.value.value, snapshotId, seq)
+                val (_, m, card) = w.add(file, merged)
+                blobs += ((file, out.toString, m.offset, m.length, card))
+              }
+            }
+            if (w != null) w.close()
+            blobs.result().iterator
+          }.collect().toSeq.map { case (ref, puffin, off, len, card) =>
+            ManifestEntry(status = 1, content = 1, filePath = puffin,
+              fileFormat = "PUFFIN", recordCount = card, referencedDataFile = Some(ref),
+              contentOffset = Some(off), contentSizeInBytes = Some(len))
           }
-          val p = new Path(path, s"metadata/snap-$snapshotId-$tok-req$i.avro")
-          writeManifest(p, conf, rewritten, mergedPartitionFields(rewritten))
-          Manifest(p.toString, m.sequenceNumber, content = 1)
-        }
       }
-      return carried2 ++ added
-    }
+    if (added.nonEmpty) writeManifest(manifestPath, conf, added)
 
-    // ---- v3: deletion vectors ----
-    // Driver-side collect is BOUNDED by the number of DISTINCT data
-    // files this delete touches (paths only, no positions) — a
-    // maintenance action's working set, not the table's file count. At
-    // 100-TB churn a delete touching ~1M files would hold ~100 MB of
-    // path strings here; acceptable for a maintenance commit, and the
-    // set must be driver-side anyway to route prior delete-file
-    // carryover below.
-    val affected = positions.select("file_path").distinct().as[String].collect().toSet
-    val prevDel: Seq[(Manifest, ManifestEntry)] = meta.entries.collect {
-      case (m, es) if m.content == 1 =>
-        es.filter(e => e.status != 2 && e.content == 1).map(m -> _)
-    }.flatten
-    val oldDVs = prevDel.collect {
-      case (_, e) if e.isDV && affected(e.referencedDataFile.get) => e
-    }
-    val confB = ConfBroadcast(spark, conf)
-    val posSchema = StructType(Seq(
-      StructField("file_path", org.apache.spark.sql.types.StringType),
-      StructField("pos", LongType)))
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], posSchema)
-    val oldDVRows =
-      if (oldDVs.isEmpty) empty
-      else spark.createDataset(oldDVs.map(e =>
-          (e.filePath, e.contentOffset.get, e.contentSizeInBytes.get,
-           e.referencedDataFile.get)))
-        .flatMap { case (p, off, len, ref) =>
-          Puffin.readDV(new Path(p), confB.value.value, off, len).map(pos => (ref, pos))
-        }.toDF("file_path", "pos")
-    val oldParquet = prevDel.collect { case (_, e) if !e.isDV => e.filePath }.distinct
-    val oldParquetRows =
-      if (oldParquet.isEmpty) empty
-      else spark.read.parquet(oldParquet: _*).select("file_path", "pos")
-        .join(org.apache.spark.sql.functions.broadcast(
-          affected.toSeq.toDF("file_path")), Seq("file_path"), "left_semi")
-
-    val dvDir = new Path(path, s"data/snap-$snapshotId-dv-$tok").toString
-    val blobRows: Array[(String, String, Long, Long, Long)] = positions
-      .select(col("file_path"), col("pos").cast("long").as("pos"))
-      .unionByName(oldDVRows).unionByName(oldParquetRows)
-      .repartition(col("file_path"))
-      .sortWithinPartitions("file_path", "pos")
-      .as[(String, Long)]
-      .mapPartitions { it =>
-        if (!it.hasNext) Iterator.empty
-        else {
-          val pid = org.apache.spark.TaskContext.getPartitionId()
-          val out = new Path(s"$dvDir/part-$pid.puffin")
-          val w = new Puffin.DVWriter(out, confB.value.value, snapshotId, seq)
-          val results = Seq.newBuilder[(String, String, Long, Long, Long)]
-          var curFile: String = null
-          var buf = Array.newBuilder[Long]
-          def flush(): Unit = if (curFile != null) {
-            val (_, m, card) = w.add(curFile, buf.result())
-            results += ((curFile, out.toString, m.offset, m.length, card))
-          }
-          it.foreach { case (f, p) =>
-            if (f != curFile) { flush(); curFile = f; buf = Array.newBuilder[Long] }
-            buf += p
-          }
-          flush()
-          w.close()
-          results.result().iterator
-        }
-      }.collect()
-
-    val dvEntries = blobRows.toSeq.map { case (ref, puffinPath, off, len, card) =>
-      ManifestEntry(status = 1, content = 1, filePath = puffinPath,
-        fileFormat = "PUFFIN", recordCount = card,
-        referencedDataFile = Some(ref),
-        contentOffset = Some(off), contentSizeInBytes = Some(len))
-    }
-    if (dvEntries.nonEmpty) writeManifest(manifestPath, conf, dvEntries)
-
-    // Rewrite prev delete manifests: tombstone superseded DV entries (and,
-    // on upgrade, the parquet position-delete entries the DVs absorbed).
-    // Carried entries pin their EFFECTIVE sequence number explicitly —
-    // the rewritten manifest is referenced from a new list position and
-    // inheritance would otherwise re-stamp them.
+    // Rewrite prev delete manifests: tombstone the DV entries the new DVs
+    // supersede, the parquet position-delete entries the DVs absorbed
+    // (upgrade) and the equality deletes the positions absorbed.
+    val affected = added.flatMap(_.referencedDataFile).toSet
+    def superseded(e: ManifestEntry): Boolean =
+      (e.content == 1 && ((e.isDV && affected(e.referencedDataFile.get)) ||
+        (!e.isDV && tombstoneParquetDeletes))) ||
+        (e.content == 2 && tombstoneEqualityDeletes)
     val manifestByPath = meta.entries.map { case (m, es) => m.manifestPath -> es }.toMap
     val carried = prevManifests.zipWithIndex.map { case (m, i) =>
-      val es = manifestByPath.getOrElse(m.manifestPath, Seq.empty)
-      def superseded(e: ManifestEntry): Boolean =
-        e.status != 2 && ((e.content == 1 && (
-          (e.isDV && affected(e.referencedDataFile.get)) ||
-          (!e.isDV && tombstoneParquetDeletes))) ||
-          (e.content == 2 && tombstoneEqualityDeletes))
-      if (m.content != 1 || !es.exists(superseded)) m
-      else {
-        val rewritten = es.map { e =>
-          val e2 = e.copy(sequenceNumber = Some(e.seqOr(m.sequenceNumber)))
-          if (superseded(e)) e2.copy(status = 2) else e2
-        }
-        val p = new Path(path, s"metadata/snap-$snapshotId-$tok-rw$i.avro")
-        writeManifest(p, conf, rewritten, mergedPartitionFields(rewritten))
-        Manifest(p.toString, m.sequenceNumber, content = 1)
+      val live = manifestByPath.getOrElse(m.manifestPath, Seq.empty).filter(_.status != 2)
+      if (m.content != 1 || !live.exists(superseded)) m
+      else rewriteManifest(path, conf, s"snap-$snapshotId-$tok-rw$i.avro", Seq(m -> live)) { e =>
+        if (superseded(e)) e.copy(status = 2) else e
       }
     }
-    if (dvEntries.isEmpty) carried
+    if (added.isEmpty) carried
     else carried :+ Manifest(manifestPath.toString, seq, content = 1)
   }
 
   /** Upgrade a v2 table to format-version 3 (Iceberg spec v3), rewriting
-    * every live parquet position-delete row into deletion vectors in the
+    * every live parquet position delete into deletion vectors in the
     * same commit — v3 readers use DVs only, so leaving parquet deletes
-    * authoritative would drop tombstones. Data files are untouched;
-    * equality deletes carry over (still valid in v3). Idempotent on an
+    * authoritative would drop tombstones. Each live data file the delete
+    * planner assigns parquet position deletes gets a DV of exactly the
+    * positions the scan applies to it (a delete reaches only data files
+    * at or before its sequence number, within its partition); deletes
+    * that reach no live file vanish. Data files are untouched; equality
+    * deletes carry over (still valid in v3). Idempotent on an
     * already-v3 table (no-op commit is skipped). */
   def upgradeFormat(spark: SparkSession, path: String): Long = {
     val conf = spark.sessionState.newHadoopConf()
@@ -3963,55 +3913,32 @@ object IcebergWriter {
     val snapshotId = state.nextSnapshotId
     val seq = state.nextSeq
     import spark.implicits._
-    val parquetDeletes = meta.entries.collect {
-      case (m, es) if m.content == 1 =>
-        es.filter(e => e.status != 2 && e.content == 1 && !e.isDV).map(_.filePath)
-    }.flatten.distinct
-    val posSchema = StructType(Seq(
-      StructField("file_path", org.apache.spark.sql.types.StringType),
-      StructField("pos", LongType)))
-    val positions =
-      if (parquetDeletes.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], posSchema)
-      else spark.read.parquet(parquetDeletes: _*).select("file_path", "pos")
-    // scope to LIVE data files: deletes referencing dead files must not
-    // resurrect as DVs (their referenced entries are gone)
-    val liveData = meta.entries.collect {
-      case (m, es) if m.content == 0 =>
-        es.filter(e => e.status != 2 && e.content == 0).map(_.filePath)
-    }.flatten.toSet
-    val scoped = positions
-      .join(org.apache.spark.sql.functions.broadcast(
-        liveData.toSeq.toDF("file_path")), Seq("file_path"), "left_semi")
+    val deletes = IcebergScan.planPositionDeletes(spark, path, latest, meta)
+    val positions = deletes.files.collect { case (f, fd) if fd.pos.nonEmpty => f }.toSeq
+      .toDF("file_path").withColumn("pos", lit(null).cast(LongType))
     // The upgraded metadata must not change visible rows — the rewritten
     // state is pure representation change, upgraded under "replace".
     val manifests = commitPositionDeletes(
-      spark, path, conf, latest, meta, scoped, snapshotId, seq,
+      spark, path, conf, latest, meta, positions, deletes, snapshotId, seq,
       tombstoneParquetDeletes = true, forceDV = true)
     // ROW LINEAGE backfill (metadata-only): the v2 table's files have no
     // row ids; assign each LIVE data file a first_row_id range now, so
     // lineage is total immediately after upgrade instead of only for
-    // rows written later. Data manifests are rewritten with the ids and
-    // entries pin their effective sequence numbers (they move to a new
-    // manifest-list position, where inheritance would re-stamp them).
+    // rows written later.
     val manifestByPath = meta.entries.map { case (m, es) => m.manifestPath -> es }.toMap
     var nextRow = nextRowIdOf(Some(state))
     val rowBase = nextRow
     val withRowIds = manifests.zipWithIndex.map { case (m, i) =>
       val es = manifestByPath.getOrElse(m.manifestPath, Seq.empty)
       if (m.content != 0 || !es.exists(e => e.status != 2 && e.content == 0)) m
-      else {
-        val rewritten = es.map { e =>
-          val pinned = e.copy(sequenceNumber = Some(e.seqOr(m.sequenceNumber)))
-          if (e.status != 2 && e.content == 0) {
-            val a = pinned.copy(firstRowId = Some(nextRow))
-            nextRow += e.recordCount
-            a
-          } else pinned
+      else rewriteManifest(path, conf,
+          s"snap-$snapshotId-${commitToken()}-rid$i.avro", Seq(m -> es)) { e =>
+        if (e.status == 2 || e.content != 0) e
+        else {
+          val withId = e.copy(firstRowId = Some(nextRow))
+          nextRow += e.recordCount
+          withId
         }
-        val p = new Path(path, s"metadata/snap-$snapshotId-${commitToken()}-rid$i.avro")
-        writeManifest(p, conf, rewritten, mergedPartitionFields(rewritten))
-        Manifest(p.toString, m.sequenceNumber, content = 0)
       }
     }
     commitSnapshot(path, conf, Some(state), schema, snapshotId, seq,
@@ -4110,17 +4037,9 @@ object IcebergWriter {
       throw new IllegalArgumentException(s"update: no Iceberg table at $path"))
     val latest = state.opBase("update", branch)
     val meta = ManifestReader.loadTable(path, latest, conf, allowMovedPaths = false)
-    val liveFiles = meta.entries.collect {
-      case (m, es) if m.content == 0 =>
-        es.filter(e => e.status != 2 && e.content == 0).map(_.filePath)
-    }.flatten
     val schema = IcebergSchemaParser.toStructType(latest.schema)
     require(assignments.keySet.subsetOf(schema.fieldNames.toSet),
       s"update: unknown columns ${assignments.keySet -- schema.fieldNames}")
-
-    import spark.implicits._
-    val qualify: String => String = IcebergIO.qualified(_, conf)
-    val fileMap = liveFiles.map(f => (qualify(f), f)).toDF("__qual", "__orig")
     val snapshotId = state.nextSnapshotId
     val seq = state.nextSeq
 
@@ -4132,18 +4051,16 @@ object IcebergWriter {
     // and rewrite another under a non-deterministic predicate (and scans
     // the table twice even under a deterministic one) — same reason
     // merge() persists its source.
-    val matched = IcebergScan.scanLoaded(spark, path,
-        IcebergScan.Options(keepProvenance = true), latest, meta)
-      .filter(predicate)
+    val (scanned, deletes) = IcebergScan.scanPlanned(spark, path,
+      IcebergScan.Options(keepProvenance = true), latest, meta)
+    val matched = scanned.filter(predicate)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // tombstones for the old versions (v2: parquet delete file; v3: DVs)
-    val positions = matched
-      .join(org.apache.spark.sql.functions.broadcast(fileMap),
-        col("__graft_file") === col("__qual"))
-      .select(col("__orig").as("file_path"), col("__graft_pos").as("pos"))
+    val positions = toOriginalPositions(spark, meta, conf,
+      matched.select(col("__graft_file"), col("__graft_pos")))
     val delManifests = commitPositionDeletes(
-      spark, path, conf, latest, meta, positions, snapshotId, seq, manifestIdx = 1)
+      spark, path, conf, latest, meta, positions, deletes, snapshotId, seq, manifestIdx = 1)
 
     // updated versions of the matched rows — written under the table's
     // CURRENT partition spec (like merge): an update that dropped the
@@ -4233,16 +4150,9 @@ object IcebergWriter {
     // the new one).
     val src = source.select(schema.fieldNames.map(col).toIndexedSeq: _*).persist()
     try {
-      // "Every source row replaces the row with its key" is only coherent
-      // when the source holds ONE row per key — same rule real MERGE
-      // implementations enforce. Cheap on the persisted source.
-      val dup = src.groupBy(keyCols.map(col): _*)
-        .agg(count(lit(1)).as("__n")).filter(col("__n") > 1).limit(1).count()
-      require(dup == 0L, s"merge: source has multiple rows for the same key $keyCols")
-
       // Equality delete on the source keys. Keys with no current match are
       // harmless no-ops at read time, so no existence probe is needed.
-      val (delManifest, _) = writeEqualityDeleteManifest(
+      val (delManifest, distinctKeys) = writeEqualityDeleteManifest(
         conf, path, snapshotId, src.select(keyCols.map(col): _*), latest.schema,
         s"snap-$snapshotId-${commitToken()}-m1.avro")
 
@@ -4252,8 +4162,21 @@ object IcebergWriter {
       // ingestion must keep producing partition values and bounds, or
       // nothing written by merge would ever prune.
       val spec = currentSpec(latest, src.schema)
-      val dataFiles = writeDataFiles(src, new Path(path, s"data/snap-$snapshotId"), spec,
+      val dataDir = new Path(path, s"data/snap-$snapshotId")
+      val dataFiles = writeDataFiles(src, dataDir, spec,
         prevIds = state.rootNode.map(existingIds).getOrElse(Map.empty))
+      // "Every source row replaces the row with its key" is only coherent
+      // when the source holds ONE row per key — same rule real MERGE
+      // implementations enforce. The delete files' own footers tell, as in
+      // the streaming upsert: fewer distinct keys than rows written. Nothing
+      // is committed, so the files written above go before the error.
+      if (distinctKeys < dataFiles.map(_.count).sum) {
+        val fs = dataDir.getFileSystem(conf)
+        Seq(dataDir, new Path(path, s"data/snap-$snapshotId-eqdeletes"), delManifest)
+          .foreach(p => try fs.delete(p, true) catch { case _: Exception => () })
+        throw new IllegalArgumentException(
+          s"merge: source has multiple rows for the same key $keyCols")
+      }
 
       val dataManifest = new Path(path,
         s"metadata/snap-$snapshotId-${commitToken()}-m0.avro")
@@ -4350,9 +4273,9 @@ object IcebergWriter {
 
     // presence markers survive the outer join where natural columns
     // go null; provenance (file,pos) identifies target rows to tombstone
-    val t = IcebergScan.scanLoaded(spark, path,
-        IcebergScan.Options(keepProvenance = true), latest, meta)
-      .withColumn("__t_present", lit(true))
+    val (scanned, deletes) = IcebergScan.scanPlanned(spark, path,
+      IcebergScan.Options(keepProvenance = true), latest, meta)
+    val t = scanned.withColumn("__t_present", lit(true))
     val s = source.withColumn("__s_present", lit(true))
     val joinType =
       if (notMatched.nonEmpty && notMatchedBySource.nonEmpty) "full_outer"
@@ -4454,7 +4377,7 @@ object IcebergWriter {
         })
       val manifests =
         if (touched) commitPositionDeletes(
-          spark, path, conf, latest, meta, positions, snapshotId, seq,
+          spark, path, conf, latest, meta, positions, deletes, snapshotId, seq,
           manifestIdx = 1)
         else ManifestReader.readManifestList(
           latest.manifestList, conf, latest.formatVersion)
@@ -4634,14 +4557,10 @@ object IcebergWriter {
     val rewritten = meta.entries.map {
       case (m, es) if m.content == 1 &&
           es.exists(e => e.status != 2 && e.content == 1 && !e.isDV) =>
-        val entries = es.filter(_.status != 2).map { e =>
-          e.copy(
-            status = if (e.isDV) 0 else 2,
-            sequenceNumber = Some(e.seqOr(m.sequenceNumber)))
+        rewriteManifest(path, conf, s"snap-$snapshotId-${commitToken()}-rpd.avro",
+            Seq(m -> es.filter(_.status != 2))) { e =>
+          e.copy(status = if (e.isDV) 0 else 2)
         }
-        val p = new Path(path, s"metadata/snap-$snapshotId-${commitToken()}-rpd.avro")
-        writeManifest(p, conf, entries, mergedPartitionFields(entries))
-        Manifest(p.toString, m.sequenceNumber, m.content)
       case (m, _) => m
     }
     val dropped = parquetDeletes.map(_.recordCount).sum - delFiles.map(_.count).sum
@@ -4700,15 +4619,14 @@ object IcebergWriter {
     val prov = Seq(col("__graft_file"), col("__graft_pos"))
     val base = IcebergScan.scanLoaded(spark, path,
         optsP.copy(skipEqualityDeletes = true), latest, meta).select(prov: _*)
-    val survivors = IcebergScan.scanLoaded(spark, path, optsP, latest, meta)
-      .select(prov: _*)
-    val hits = base.join(survivors,
+    val (survivors, deletes) = IcebergScan.scanPlanned(spark, path, optsP, latest, meta)
+    val hits = base.join(survivors.select(prov: _*),
       Seq("__graft_file", "__graft_pos"), "left_anti")
     val positions = toOriginalPositions(spark, meta, conf, hits)
     val snapshotId = state.nextSnapshotId
     val seq = state.nextSeq
     val manifests = commitPositionDeletes(
-      spark, path, conf, latest, meta, positions, snapshotId, seq,
+      spark, path, conf, latest, meta, positions, deletes, snapshotId, seq,
       tombstoneEqualityDeletes = true)
     Some(commitSnapshot(path, conf, Some(state),
       IcebergSchemaParser.toStructType(latest.schema), snapshotId, seq,
@@ -5006,15 +4924,10 @@ object IcebergWriter {
     // manifests and ALL delete manifests carry forward verbatim.
     val rewritten = meta.entries.map {
       case (m, es) if m.content == 0 && es.exists(isCandidate) =>
-        val entries = es.filter(_.status != 2).map { e =>
-          e.copy(
-            status = if (candidatePaths(e.filePath)) 2 else 0,
-            sequenceNumber = Some(e.seqOr(m.sequenceNumber)))
+        rewriteManifest(path, conf, s"snap-$snapshotId-${commitToken()}-rw.avro",
+            Seq(m -> es.filter(_.status != 2))) { e =>
+          e.copy(status = if (candidatePaths(e.filePath)) 2 else 0)
         }
-        val p = new Path(path,
-          s"metadata/snap-$snapshotId-${commitToken()}-rw.avro")
-        writeManifest(p, conf, entries, mergedPartitionFields(entries))
-        Manifest(p.toString, m.sequenceNumber, m.content)
       case (m, _) => m
     }
     Some(commitSnapshot(path, conf, Some(state), logicalSchema, snapshotId, seq,

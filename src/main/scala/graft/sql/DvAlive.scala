@@ -76,24 +76,31 @@ object DeleteSpec {
   * the spliced scan's [[DvAlive]] filter calls it per data file, the keyed
   * scan's reader per split. Positions come from [[DvPositionCache]] or
   * [[PosDeleteCache]], keys from [[EqDeleteKeyCache]]; each file is read
-  * once per executor. */
-private[sql] object DeleteLoader {
+  * once per executor. The v3 commit (`IcebergWriter`) loads a file's
+  * prior positions through it too, so a new deletion vector merges
+  * exactly the deletes the readers apply. */
+private[graft] object DeleteLoader {
 
-  /** `fd`'s deleted positions — its DV, else its position-delete files —
-    * or null when none apply. */
-  def positions(spec: DeleteSpec, fd: FileDeletes,
-                conf: => org.apache.hadoop.conf.Configuration): PositionCursor = {
-    val ps = fd.dv.map(DvPositionCache.load(_, conf)).getOrElse {
+  /** `fd`'s sorted deleted positions — its DV, else its position-delete
+    * files — or null when none apply. Cached: never mutate the array. */
+  def deleted(spec: DeleteSpec, fd: FileDeletes,
+              conf: => org.apache.hadoop.conf.Configuration): Array[Long] =
+    fd.dv.map(DvPositionCache.load(_, conf)).getOrElse {
       if (fd.pos.isEmpty) null
       else PosDeleteCache.load(fd.pos.toArray, fd.rawPath, spec.posFactory)
     }
+
+  /** A cursor over [[deleted]], or null when none apply. */
+  private[sql] def positions(spec: DeleteSpec, fd: FileDeletes,
+                             conf: => org.apache.hadoop.conf.Configuration): PositionCursor = {
+    val ps = deleted(spec, fd, conf)
     if (ps == null) null else new PositionCursor(ps)
   }
 
   /** Union of group g's keys that reach a data file of sequence `seq` in
     * partition `part`: files with a greater sequence, global or scoped to
     * `part`. Null when none. */
-  def keys(spec: DeleteSpec, g: Int, seq: Long, part: Int): java.util.HashSet[InternalRow] = {
+  private[sql] def keys(spec: DeleteSpec, g: Int, seq: Long, part: Int): java.util.HashSet[InternalRow] = {
     val sets = spec.groups(g).flatMap { pool =>
       val fs = pool.files.filter(f => f.seq > seq && (f.part < 0 || f.part == part))
       if (fs.isEmpty) None

@@ -320,4 +320,22 @@ class IcebergParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(IcebergScan.metadataRowCount(spark, table) === Some(9L))
     assert(df.count() === 9L)
   }
+
+  test("upgradeFormat turns foreign v2 position deletes into DVs under the sequence rule") {
+    import spark.implicits._
+    // the seq-2 delete names positions 2 and 4 of the seq-1 file and row 0
+    // of the seq-3 file, which it cannot reach
+    val table = buildForeignV2Table(1)((data1, data3) =>
+      (Seq((data1, 2L), (data1, 4L), (data3, 0L)).toDF("file_path", "pos"), false))
+    val want = Seq(1L, 2L, 3L, 4L, 6L, 7L, 8L, 9L, 10L)
+    def rows = IcebergScan.scan(spark, table).collect().map(_.getLong(0)).sorted.toSeq
+    assert(rows === want)
+    graft.iceberg.IcebergWriter.upgradeFormat(spark, table)
+    assert(IcebergScan.loadInfo(spark, table).formatVersion === 3)
+    assert(rows === want, "the upgrade must not delete the seq-3 row")
+    // one DV, for the seq-1 file alone; the parquet delete is tombstoned
+    val dvs = IcebergScan.positionDeletes(spark, table).select("file_path").distinct()
+      .collect().map(_.getString(0)).toSeq
+    assert(dvs.size === 1 && dvs.head.endsWith(".parquet") && dvs.head.contains("/data/d1/"), dvs)
+  }
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 import graft.iceberg.{IcebergScan, IcebergWriter}
 import graft.iceberg.IcebergScan.Options
@@ -374,12 +375,22 @@ class IcebergWriteSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(IcebergScan.scan(spark, table,
       Options(snapshotId = Some(snap2))).count() === 4)
 
-    // a source with two rows for one key is ambiguous → rejected
+    // a source with two rows for one key is ambiguous → rejected, and
+    // leaves no snapshot and no file behind
+    def listing = {
+      val root = new java.io.File(table).toPath
+      val walk = Files.walk(root)
+      try walk.iterator().asScala.map(root.relativize(_).toString).toList.sorted
+      finally walk.close()
+    }
+    val (snapsBefore, filesBefore) = (IcebergScan.snapshots(spark, table).count(), listing)
     val dup = intercept[IllegalArgumentException] {
       IcebergWriter.merge(spark, table,
         Seq((5L, "x"), (5L, "y")).toDF("id", "v"), Seq("id"))
     }
     assert(dup.getMessage.contains("multiple rows"))
+    assert(IcebergScan.snapshots(spark, table).count() === snapsBefore)
+    assert(listing === filesBefore)
     // a wrongly-typed source must not poison the table
     val badType = intercept[IllegalArgumentException] {
       IcebergWriter.merge(spark, table,
