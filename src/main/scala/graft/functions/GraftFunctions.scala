@@ -20,25 +20,26 @@ object GraftFunctions {
        require(exprs.length == 2, s"graft_dot expects 2 arguments, got ${exprs.length}")
        DotProduct(exprs.head, exprs(1))
      }),
+    (FunctionIdentifier("graft_shingle_hashes"),
+     new ExpressionInfo(classOf[ShingleHashes].getCanonicalName, null,
+       "graft_shingle_hashes", "60-bit md5 hash of each distinct n-token shingle of a token array", ""),
+     (exprs: Seq[Expression]) => {
+       require(exprs.length == 2, s"graft_shingle_hashes expects 2 arguments, got ${exprs.length}")
+       ShingleHashes(exprs.head, positiveIntArg("graft_shingle_hashes", "shingle width", exprs(1)))
+     }),
+    (FunctionIdentifier("graft_minhash"),
+     new ExpressionInfo(classOf[MinHashSignature].getCanonicalName, null,
+       "graft_minhash", "k MinHash values of an array of shingle hashes", ""),
+     (exprs: Seq[Expression]) => {
+       require(exprs.length == 2, s"graft_minhash expects 2 arguments, got ${exprs.length}")
+       MinHashSignature(exprs.head, positiveIntArg("graft_minhash", "signature length", exprs(1)))
+     }),
     (FunctionIdentifier("graft_bucket"),
      new ExpressionInfo(classOf[IcebergBucket].getCanonicalName, null,
        "graft_bucket", "Iceberg bucket[n] partition transform of a value", ""),
      (exprs: Seq[Expression]) => {
        require(exprs.length == 2, s"graft_bucket expects 2 arguments, got ${exprs.length}")
-       val n = exprs(1) match {
-         case e if e.foldable => e.eval() match {
-           // toInt would silently truncate (4294967312L -> bucket 16), and
-           // n <= 0 divides by zero (or flips sign) at execution; any
-           // invalid count must fail analysis, not change semantics
-           case i: Int if i >= 1 => i
-           case l: Long if l >= 1 && l <= Int.MaxValue => l.toInt
-           case other => throw new IllegalArgumentException(
-             s"graft_bucket: bucket count must be a positive Int-range integer literal, got $other")
-         }
-         case e => throw new IllegalArgumentException(
-           s"graft_bucket: bucket count must be a constant, got '${e.sql}'")
-       }
-       IcebergBucket(exprs.head, n)
+       IcebergBucket(exprs.head, positiveIntArg("graft_bucket", "bucket count", exprs(1)))
      }),
     (FunctionIdentifier("graft_nfc"),
      new ExpressionInfo(classOf[NfcNormalize].getCanonicalName, null,
@@ -82,6 +83,21 @@ object GraftFunctions {
        require(exprs.length == 1, s"graft_theta expects 1 argument, got ${exprs.length}")
        ThetaSketchAgg(exprs.head)
      }))
+
+  /** A positive Int-range integer literal argument. toInt would silently
+    * truncate (4294967312L -> 16), and a count <= 0 divides by zero (or
+    * flips sign) at execution; any invalid value must fail analysis, not
+    * change semantics. */
+  private def positiveIntArg(fn: String, what: String, arg: Expression): Int = arg match {
+    case e if e.foldable => e.eval() match {
+      case i: Int if i >= 1 => i
+      case l: Long if l >= 1 && l <= Int.MaxValue => l.toInt
+      case other => throw new IllegalArgumentException(
+        s"$fn: $what must be a positive Int-range integer literal, got $other")
+    }
+    case e => throw new IllegalArgumentException(
+      s"$fn: $what must be a constant, got '${e.sql}'")
+  }
 
   /** Idempotent: registerFunction overwrites by identifier. */
   def register(spark: SparkSession): Unit =

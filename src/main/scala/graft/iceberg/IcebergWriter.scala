@@ -4503,16 +4503,19 @@ object IcebergWriter {
     * set. A MoR table under continuous row-level deletes accumulates one
     * small delete file per commit, and every scan reads ALL of them —
     * this rewrite merges them (clustered by target file for join
-    * locality) and DROPS dangling tombstones whose target data file is
-    * no longer live (left behind by compaction/overwrite), shrinking what
-    * every scan reads to what can actually match. v3 deletion
-    * vectors are already one-per-file and carry forward untouched.
-    * Old delete entries are tombstoned under explicit sequence numbers;
-    * the consolidated files commit at the new sequence — position
-    * deletes match by (file_path, pos) in data files at or before their
-    * sequence, so re-sequencing them forward never changes which rows are
-    * tombstoned. Returns the new
-    * snapshot id, or None when there are no parquet delete files. */
+    * locality) and DROPS every tombstone that reaches no live data file:
+    * dangling ones whose target is gone (left behind by
+    * compaction/overwrite) and ones the sequence rule keeps from their
+    * target (a delete reaches only data files at or before its
+    * sequence), shrinking what every scan reads to what can actually
+    * match. v3 deletion vectors are already one-per-file and carry
+    * forward untouched. The consolidated files commit at the NEW
+    * sequence, so they must hold only the positions the scan applies
+    * today: each live data file's are loaded from the delete planner's
+    * `FileDeletes` through `DeleteLoader`, as the readers load them. Old
+    * delete entries are tombstoned under explicit sequence numbers.
+    * Returns the new snapshot id, or None when there are no parquet
+    * delete files. */
   def rewritePositionDeleteFiles(spark: SparkSession, path: String,
                                  branch: String = "main"): Option[Long] = {
     import spark.implicits._
@@ -4527,17 +4530,17 @@ object IcebergWriter {
         es.filter(e => e.status != 2 && e.content == 1 && !e.isDV)
     }.flatten
     if (parquetDeletes.isEmpty) return None
-    val liveData = meta.entries.collect {
-      case (m, es) if m.content == 0 =>
-        es.filter(e => e.status != 2 && e.content == 0).map(_.filePath)
-    }.flatten
     val snapshotId = state.nextSnapshotId
     val seq = state.nextSeq
-    val survivors = spark.read
-      .parquet(parquetDeletes.map(_.filePath).distinct: _*)
-      .select("file_path", "pos")
-      .join(org.apache.spark.sql.functions.broadcast(liveData.toDF("file_path")),
-        Seq("file_path"), "left_semi")
+    val reached = IcebergScan.planPositionDeletes(spark, path, latest, meta).files
+      .filter { case (_, fd) => fd.dv.isEmpty && fd.pos.nonEmpty }
+    val spec = graft.sql.DeleteSpec.build(spark, reached, Seq.empty, positional = true)
+    val confB = ConfBroadcast(spark, conf)
+    val survivors = reached.keys.toSeq.toDS()
+      .flatMap { f =>
+        graft.sql.DeleteLoader.deleted(spec, spec.files(f), confB.value.value).iterator.map(f -> _)
+      }
+      .toDF("file_path", "pos")
     val numOut = math.max(1, parquetDeletes.size / 8)
     val delDir = new Path(path, s"data/snap-$snapshotId-deletes-${commitToken()}")
     survivors

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
+import graft.functions.{GraftFunctions, MinHash}
 import graft.iceberg.IcebergScan
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -22,14 +23,7 @@ object DedupQueries {
 
   private def toks: Column = array_distinct(split(trim(col("text")), "\\s+"))
 
-  /** Distinct word-bigram shingles: unigrams over the synthetic tiny
-    * vocabulary collide so much that LSH bands select ~90% of all pairs;
-    * bigrams give the shingle space real discriminating power. */
-  private def bigramShingles: Column = array_distinct(expr(
-    """transform(sequence(1, size(__t) - 1),
-                 i -> concat(element_at(__t, i), ' ', element_at(__t, i + 1)))"""))
-
-  /** 16 MinHash signatures: min over shingles of md5(i + ":" + shingle). */
+  /** 16 MinHash values per document, over its distinct word bigrams. */
   private val NumHashes = 16
   private val RowsPerBand = 4
   private val NumBands = NumHashes / RowsPerBand
@@ -96,14 +90,6 @@ object DedupQueries {
           SELECT vec_id, ${dotDblSql("e", "e")} AS nn
           FROM emb)"""
 
-  /** MinHash mixing: each shingle is md5'd ONCE into a 60-bit integer,
-    * reduced mod the Mersenne prime 2^31-1, and the i-th hash family is
-    * the multiplicative permutation h → h·(2i+1) mod p. One md5 + 16
-    * integer ops per shingle instead of 16 md5s — and every step is plain
-    * 64-bit integer arithmetic that both engines evaluate identically
-    * (products stay < 2^36, far from BIGINT overflow). */
-  private val MersenneP = 2147483647L
-
   /** Oracle CTE prefix for IVF: embeddings as DOUBLE[] + squared norms
     * (no hyperplane machinery). */
   private def embNormsSql: String =
@@ -116,21 +102,27 @@ object DedupQueries {
 
   /** Bigram-MinHash-LSH band signatures of a `documents`-shaped frame:
     * one (doc_id, b, sig) row per band — the persistable LSH index unit
-    * (d07 materializes it as an Iceberg table). */
+    * (d07 materializes it as an Iceberg table). Word bigrams, because
+    * unigrams over the synthetic tiny vocabulary collide so much that LSH
+    * bands select ~90% of all pairs.
+    *
+    * One narrow projection per document: `graft_shingle_hashes` md5s each
+    * distinct bigram once into a 60-bit integer and `graft_minhash` folds
+    * those into the 16 MinHash values ([[graft.functions.MinHash]]), so
+    * the pipeline has no explode, no lambda and no shuffle before the
+    * bands' `posexplode`. A document with fewer than two tokens has no
+    * bigram and no bands. `doc_id` must be unique (every caller's frame
+    * is a filter of `documents`): rows are not grouped by it. Builders
+    * call `GraftFunctions.register(session)` first. */
   private[queries] def minhashBands(docs: DataFrame): DataFrame = {
-    val tok = docs
-      .withColumn("__t", split(trim(col("text")), "\\s+"))
-      .select(col("doc_id"), explode(bigramShingles).as("w"))
-      .withColumn("h",
-        conv(substring(md5(col("w").cast("binary")), 1, 15), 16, 10)
-          .cast("long") % MersenneP)
-    val mhCols = (0 until NumHashes).map { i =>
-      min((col("h") * (2 * i + 1)) % MersenneP).as(s"mh$i")
-    }
-    val mh = tok.groupBy("doc_id").agg(mhCols.head, mhCols.tail: _*)
+    val mh = docs
+      .select(col("doc_id"), call_function("graft_minhash",
+        call_function("graft_shingle_hashes", split(trim(col("text")), "\\s+"), lit(2)),
+        lit(NumHashes)).as("mh"))
+      .filter(col("mh").isNotNull)
     val bandSigs = (0 until NumBands).map { b =>
       md5(concat_ws("|",
-        (0 until RowsPerBand).map(r => col(s"mh${RowsPerBand * b + r}").cast("string")): _*)
+        (0 until RowsPerBand).map(r => col("mh").getItem(RowsPerBand * b + r).cast("string")): _*)
         .cast("binary"))
     }
     mh.select(col("doc_id"),
@@ -173,10 +165,10 @@ object DedupQueries {
           FROM documents),
         hsh AS (
           SELECT doc_id,
-                 ('0x' || substring(md5(w), 1, 15))::BIGINT % $MersenneP AS h
+                 ('0x' || substring(md5(w), 1, 15))::BIGINT % ${MinHash.P} AS h
           FROM tok),
         mh AS (
-          SELECT doc_id, i, MIN((h * (2 * i + 1)) % $MersenneP) AS mh
+          SELECT doc_id, i, MIN((h * (2 * i + 1)) % ${MinHash.P}) AS mh
           FROM hsh, range($NumHashes) t(i)
           GROUP BY doc_id, i),
         band AS (
@@ -300,7 +292,10 @@ object DedupQueries {
         WITH ${minhashCandSql}
         SELECT doc_a, doc_b FROM cand
         ORDER BY doc_a, doc_b"""),
-      (s, dir) => minhashCandidates(Tables.load(s, dir, "documents")).orderBy("doc_a", "doc_b")
+      (s, dir) => {
+        GraftFunctions.register(s)
+        minhashCandidates(Tables.load(s, dir, "documents")).orderBy("doc_a", "doc_b")
+      }
     ),
     QueryDef(
       "d03_simhash",
@@ -368,6 +363,7 @@ object DedupQueries {
                     / len(list_distinct(ta.w || tc.w)), 6) >= 0.7
         ORDER BY doc_a, doc_b"""),
       (s, dir) => {
+        GraftFunctions.register(s)
         val docs = Tables.load(s, dir, "documents")
         val t = docs.select(col("doc_id"), col("lang"), toks.as("w"))
         minhashCandidates(docs)
@@ -397,6 +393,7 @@ object DedupQueries {
         ${clusterLabelsSql}
         SELECT doc_id, label AS cluster_id FROM l3 ORDER BY doc_id"""),
       (s, dir) => {
+        GraftFunctions.register(s)
         clusterLabels(Tables.load(s, dir, "documents"))
           .select(col("doc_id"), col("label").as("cluster_id")).orderBy("doc_id")
       }
@@ -425,6 +422,7 @@ object DedupQueries {
           AND doc_id NOT IN (SELECT doc_id FROM dropped)
         ORDER BY doc_id"""),
       (s, dir) => {
+        GraftFunctions.register(s)
         val idx = java.nio.file.Files
           .createTempDirectory("graft_d07_").toString + "/band_index"
         val docs = Tables.load(s, dir, "documents")

@@ -18,6 +18,7 @@ object PipelineQueries {
     * with token counts and their deterministic split assignment (the
     * t02/d06/t06 composition p01 aggregates). */
   private def curated(s: SparkSession, dir: String): DataFrame = {
+    graft.functions.GraftFunctions.register(s)
     val stop = array(Seq("the", "and", "is", "of", "to", "a", "in").map(lit): _*)
     val docs = Tables.load(s, dir, "documents")
     val q = docs.select(col("doc_id"), col("source"),

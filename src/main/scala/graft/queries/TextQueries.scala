@@ -161,17 +161,11 @@ object TextQueries {
         GROUP BY tr.doc_id
         ORDER BY tr.doc_id"""),
       (s, dir) => {
+        graft.functions.GraftFunctions.register(s)
         val docs = Tables.load(s, dir, "documents")
-          .withColumn("__t", split(trim(col("text")), "\\s+"))
         def shingles(df: org.apache.spark.sql.DataFrame) =
-          df.filter(size(col("__t")) >= 5)
-            .select(col("doc_id"), explode(array_distinct(expr(
-              """transform(sequence(1, size(__t) - 4),
-                           i -> concat_ws(' ', element_at(__t, i), element_at(__t, i + 1),
-                                          element_at(__t, i + 2), element_at(__t, i + 3),
-                                          element_at(__t, i + 4)))"""))).as("w5"))
-            .withColumn("h",
-              conv(substring(md5(col("w5").cast("binary")), 1, 15), 16, 10).cast("long"))
+          df.select(col("doc_id"), explode(call_function("graft_shingle_hashes",
+            split(trim(col("text")), "\\s+"), lit(5))).as("h"))
         val evalH = shingles(docs.filter(col("doc_id") < 50))
           .select(col("h"), lit(1).as("__hit")).distinct()
         shingles(docs.filter(col("doc_id") >= 50))

@@ -321,6 +321,23 @@ class IcebergParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(df.count() === 9L)
   }
 
+  test("rewritePositionDeleteFiles keeps the position-delete sequence rule") {
+    import spark.implicits._
+    // the seq-2 delete names positions 2 and 4 of the seq-1 file and row 0
+    // of the seq-3 file, which it cannot reach
+    val table = buildForeignV2Table(1)((data1, data3) =>
+      (Seq((data1, 2L), (data1, 4L), (data3, 0L)).toDF("file_path", "pos"), false))
+    val want = Seq(1L, 2L, 3L, 4L, 6L, 7L, 8L, 9L, 10L)
+    def rows = IcebergScan.scan(spark, table).collect().map(_.getLong(0)).sorted.toSeq
+    assert(rows === want)
+    assert(graft.iceberg.IcebergWriter.rewritePositionDeleteFiles(spark, table).nonEmpty)
+    assert(rows === want, "the rewrite must not delete the seq-3 row")
+    // the consolidated delete holds the two tombstones that reach a file
+    val kept = IcebergScan.positionDeletes(spark, table).select("file_path", "pos")
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    assert(kept.map(_._2).sorted === Seq(2L, 4L) && kept.forall(_._1.contains("/data/d1/")), kept)
+  }
+
   test("upgradeFormat turns foreign v2 position deletes into DVs under the sequence rule") {
     import spark.implicits._
     // the seq-2 delete names positions 2 and 4 of the seq-1 file and row 0

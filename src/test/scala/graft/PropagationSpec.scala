@@ -4,12 +4,12 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.Generate
-import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{GraftSessions, PlanWalk, SparkEntry}
+import graft.{GraftSessions, PlanWalk, SparkEntry, Tables}
 
 /** Label-propagation core (d06): the pinned 3-round variant is the oracle
   * contract; the fixpoint variant must find true connected components on
@@ -121,23 +121,56 @@ class PropagationSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(n3 - n2 === n2 - n1, s"analyzed nodes after 1, 2, 3 rounds: $n1, $n2, $n3")
   }
 
-  test("d06 plans one band pipeline per round and runs it once") {
+  /** A `documents` directory holding `docs` (doc_id, text), as the
+    * query builders load it. */
+  private def documentsDir(docs: Seq[(Long, String)]): String = {
     import spark.implicits._
+    val dir = Files.createTempDirectory("graft_prop_docs_").toString
+    docs.toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    dir
+  }
+
+  /** 80 documents over a 30-word vocabulary; every 8th is a
+    * near-duplicate of the one before it. */
+  private lazy val nearDupDocs: String = {
     val rnd = new scala.util.Random(7)
     val vocab = (0 until 30).map(i => s"w$i")
     val texts = (0 until 80).map(_ => Seq.fill(10 + rnd.nextInt(20))(vocab(rnd.nextInt(30))).mkString(" "))
-    // every 8th document is a near-duplicate of the one before it
-    val docs = texts.indices.map { i =>
+    documentsDir(texts.indices.map { i =>
       (i.toLong, if (i % 8 == 7) texts(i - 1) + " dup" else texts(i))
-    }
-    val dir = Files.createTempDirectory("graft_prop_docs_").toString
-    docs.toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
-    val df = SparkEntry.queries("d06_dedup_clusters")(spark, dir)
-    // explode + posexplode per band side, two sides, 3 rounds; one stack each
+    })
+  }
+
+  test("d06 plans one band pipeline per round and runs it once") {
+    val df = SparkEntry.queries("d06_dedup_clusters")(spark, nearDupDocs)
+    // posexplode per band side, two sides, 3 rounds; one stack each
     val generates = df.queryExecution.optimizedPlan.collect { case g: Generate => g }.size
-    assert(generates <= 16, s"$generates Generate nodes")
+    assert(generates <= 9, s"$generates Generate nodes")
     assert(df.collect().count(r => r.getLong(0) != r.getLong(1)) >= 10)
     val reused = PlanWalk.collect(df.queryExecution.executedPlan) { case r: ReusedExchangeExec => r }
     assert(reused.nonEmpty, df.queryExecution.executedPlan.toString.take(3000))
+  }
+
+  test("the band pipeline is one narrow projection and the bands' posexplode") {
+    graft.functions.GraftFunctions.register(spark)
+    val bands = DedupQueries.minhashBands(Tables.load(spark, nearDupDocs, "documents"))
+    assert(bands.count() === 80 * 4)
+    val generates = bands.queryExecution.optimizedPlan.collect { case g: Generate => g }
+    assert(generates.size === 1, bands.queryExecution.optimizedPlan.toString)
+    val shuffles = PlanWalk.collect(bands.queryExecution.executedPlan) {
+      case e: ShuffleExchangeExec => e
+    }
+    assert(shuffles.isEmpty, bands.queryExecution.executedPlan.toString)
+  }
+
+  test("a document with fewer than two tokens is its own d06 cluster") {
+    // such a document has no bigram: no bands, no candidate pair
+    for (short <- Seq("hello", "", "   ")) {
+      val dir = documentsDir(Seq(0L -> short, 1L -> "a b c d e", 2L -> "a b c d e f"))
+      val got = SparkEntry.queries("d06_dedup_clusters")(spark, dir)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got.keySet === Set(0L, 1L, 2L), s"text '$short'")
+      assert(got.collect { case (d, 0L) => d }.toSeq === Seq(0L), s"text '$short'")
+    }
   }
 }
