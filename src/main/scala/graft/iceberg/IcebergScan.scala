@@ -2,7 +2,7 @@ package graft.iceberg
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -375,13 +375,6 @@ object IcebergScan {
         "Spark's ORC reader exposes no row positions; use equality " +
         "deletes (deleteEquality/merge) on ORC-format tables")
 
-    // Spark reports _metadata.file_path as a fully-qualified URI, while
-    // manifests and position-delete files record the writer's exact
-    // strings. Bridge on the driver: the delete filter's spec and the
-    // lineage/anti-join broadcasts are keyed by the qualified URI, and the
-    // spec carries each file's raw path for the position-delete lookup.
-    val conf = scanConf
-    val qualify: String => String = IcebergIO.qualified(_, conf)
     import spark.implicits._
 
     // The common merge-on-read read (one parquet or ORC relation, no
@@ -406,7 +399,7 @@ object IcebergScan {
       // N has _row_id = first_row_id + N unless the file materializes
       // the ids
       val lineageMap = dataEntries.map { case (e, seq) =>
-        (qualify(resolved(path, e.filePath, opts)), e.firstRowId, seq)
+        (qualifiedPath(path, e.filePath, opts, scanConf), e.firstRowId, seq)
       }.toDF("__lin_qual", "__lin_base", "__lin_seq")
       cur = cur
         .join(broadcast(lineageMap), col("__graft_file") === col("__lin_qual"), "left")
@@ -426,60 +419,99 @@ object IcebergScan {
         if (!direct) (col("__graft_file"), col("__graft_pos"))
         else (col("_metadata.file_path"),
           if (orcDataFiles.nonEmpty) lit(null).cast(LongType) else col("_metadata.row_index"))
-      val fileDeletes = deletes.files.map { case (raw, fd) =>
-        qualify(resolved(path, raw, opts)) -> fd
-      }
-      cur = cur.filter(graft.sql.DvAlive.filter(spark, file, pos, fileDeletes,
-        deletes.filterGroups))
+      cur = cur.filter(aliveFilter(spark, path, opts, deletes, file, pos))
     }
-
-    if (deletes.joinGroups.nonEmpty) {
-      // per-row data sequence number and partition id via a broadcast
-      // (qualified URI → seq, partition)
-      val seqMap = dataEntries.map { case (e, seq) =>
-        (qualify(resolved(path, e.filePath, opts)), seq, deletes.scope.partOf(e.filePath))
-      }.toDF("__eq_qual", "__data_seq", "__data_part")
-      cur = cur.join(broadcast(seqMap), col("__graft_file") === col("__eq_qual"), "left")
-        .drop("__eq_qual")
-      val eqCard = deletes.joinGroups.flatMap(_.keys.files).map(_._1.recordCount).sum
-      deletes.joinGroups.foreach { case JoinGroup(g, affected) =>
-        val delR = eqDeleteFrame(spark, conf, path, opts, g, snapshot, deletes.scope)
-        val delB = if (eqCard <= opts.broadcastDeleteThreshold) broadcast(delR) else delR
-        // SCOPING, part 2 (per group): data files the planner found out of
-        // the group's reach bypass the anti join entirely — a
-        // partition-local delete must not shuffle the whole table through
-        // the join when the delete side is too big to broadcast. The
-        // membership predicate on _metadata.file_path also file-prunes
-        // each branch's parquet scan. Bounded: above EqScopeMaxFiles
-        // affected files the split is skipped (a plan with a 100k-literal
-        // IN list would hurt more than the join).
-        if (affected.isEmpty) ()
-        else if (affected.size == dataEntries.size ||
-                 affected.size > EqScopeMaxFiles)
-          cur = cur.join(delB, eqDeleteCond(g.cols), "left_anti")
-        else {
-          val affectedQual = affected.map(p => qualify(resolved(path, p, opts)))
-          val hit = col("__graft_file").isInCollection(affectedQual)
-          cur = cur.filter(!hit).unionByName(
-            cur.filter(hit).join(delB, eqDeleteCond(g.cols), "left_anti"))
-        }
-      }
-      cur = cur.drop("__data_seq", "__data_part")
-    }
+    if (deletes.joinGroups.nonEmpty)
+      cur = joinDeletes(spark, path, opts, snapshot, deletes, dataEntries, cur, "left_anti")
 
     (if (opts.keepProvenance || direct) cur
      else cur.drop("__graft_file", "__graft_pos"), // SELECT * EXCLUDE(...) analogue (P1)
      deletes)
   }
 
+  /** A manifest-recorded path as Spark reports `_metadata.file_path`: a
+    * fully-qualified URI, where manifests and delete files record the
+    * writer's exact strings. The driver-side bridge of every map keyed by
+    * a row's data or delete file. */
+  private def qualifiedPath(path: String, raw: String, opts: Options, conf: Configuration): String =
+    IcebergIO.qualified(resolved(path, raw, opts), conf)
+
+  /** TRUE for the rows, carrying their data file's URI `file` and row
+    * position `pos`, that survive the deletes `deletes` applies by the
+    * filter: its `graft_dv_alive`, keyed by the qualified URI, each entry
+    * keeping its file's raw path for the position-delete lookup. */
+  private def aliveFilter(spark: SparkSession, path: String, opts: Options,
+                          deletes: DeletePlan, file: Column, pos: Column): Column = {
+    val conf = hadoopConf(spark)
+    graft.sql.DvAlive.filter(spark, file, pos,
+      deletes.files.map { case (raw, fd) => qualifiedPath(path, raw, opts, conf) -> fd },
+      deletes.filterGroups)
+  }
+
+  /** `rows` — read from the data files `data`, each row carrying its
+    * file's URI in `__graft_file` and position in `__graft_pos` — joined
+    * with the equality-delete groups `deletes` leaves to the join: with
+    * `joinType = "left_anti"` the rows no group deletes, with
+    * "left_semi" the rows some group deletes, each once. */
+  private def joinDeletes(
+      spark: SparkSession, path: String, opts: Options, snapshot: Snapshot,
+      deletes: DeletePlan, data: Seq[(ManifestEntry, Long)], rows: DataFrame,
+      joinType: String): DataFrame = {
+    import spark.implicits._
+    val conf = hadoopConf(spark)
+    // per-row data sequence number and partition id via a broadcast
+    // (qualified URI → seq, partition)
+    val seqMap = data.map { case (e, seq) =>
+      (qualifiedPath(path, e.filePath, opts, conf), seq, deletes.scope.partOf(e.filePath))
+    }.toDF("__eq_qual", "__data_seq", "__data_part")
+    val withSeq = rows.join(broadcast(seqMap), col("__graft_file") === col("__eq_qual"), "left")
+      .drop("__eq_qual")
+    val joins = deletes.joinGroups.filter(_.affected.nonEmpty)
+    val eqCard = deletes.joinGroups.flatMap(_.keys.files).map(_._1.recordCount).sum
+    val delSides = joins.map { case JoinGroup(g, _) =>
+      val delR = eqDeleteFrame(spark, conf, path, opts, g, snapshot, deletes.scope)
+      (g, if (eqCard <= opts.broadcastDeleteThreshold) broadcast(delR) else delR)
+    }
+    // SCOPING, part 2: rows of data files the planner found out of every
+    // group's reach bypass the joins entirely — a partition-local delete
+    // must not shuffle the whole table through the join when the delete
+    // side is too big to broadcast. The membership predicate on
+    // _metadata.file_path also file-prunes each branch's parquet scan.
+    // Bounded: above EqScopeMaxFiles reached files the split is skipped
+    // (a plan with a 100k-literal IN list would hurt more than the join).
+    val reachedFiles = joins.flatMap(_.affected).distinct
+    val scoped = reachedFiles.nonEmpty && reachedFiles.size < data.size &&
+      reachedFiles.size <= EqScopeMaxFiles
+    val hit = col("__graft_file")
+      .isInCollection(reachedFiles.map(qualifiedPath(path, _, opts, conf)))
+    val reached = if (scoped) withSeq.filter(hit) else withSeq
+    val out =
+      if (joinType == "left_anti") {
+        val kept = delSides.foldLeft(reached) { case (cur, (g, del)) =>
+          cur.join(del, eqDeleteCond(g.cols), joinType)
+        }
+        if (scoped) withSeq.filter(!hit).unionByName(kept) else kept
+      } else {
+        val hits = delSides.map { case (g, del) =>
+          reached.join(del, eqDeleteCond(g.cols), joinType)
+        }
+        if (hits.isEmpty) withSeq.limit(0)
+        else if (hits.size == 1) hits.head
+        else hits.reduce(_ unionByName _).dropDuplicates("__graft_file", "__graft_pos")
+      }
+    out.drop("__data_seq", "__data_part")
+  }
+
   /** The position deletes [[planDeletes]] assigns to every live data
     * file of `meta`, without building a scan: what a commit that
-    * rewrites deletes but matches no rows reads. */
+    * rewrites deletes but matches no rows reads, and what the metadata
+    * count subtracts. */
   private[iceberg] def planPositionDeletes(
-      spark: SparkSession, path: String, snapshot: Snapshot, meta: TableMeta): DeletePlan = {
-    val opts = Options(skipEqualityDeletes = true)
-    planDeletes(spark, path, opts, snapshot, meta,
-      livePaths(meta, manifestContent = 0, entryContent = 0, opts))
+      spark: SparkSession, path: String, snapshot: Snapshot, meta: TableMeta,
+      opts: Options = Options()): DeletePlan = {
+    val posOpts = opts.copy(skipEqualityDeletes = true)
+    planDeletes(spark, path, posOpts, snapshot, meta,
+      livePaths(meta, manifestContent = 0, entryContent = 0, posOpts))
   }
 
   /** Which row deletes reach which data file, as [[planDeletes]] assigns
@@ -691,11 +723,12 @@ object IcebergScan {
     else { val hp = new Path(p); hp.getFileSystem(conf).getFileStatus(hp).getLen }
 
   /** Equality-delete files grouped by key-column set — the ONE
-    * definition of how delete files resolve to key columns, shared by the
-    * MoR scan (filter or anti join) and the changelog (semi join) so their
-    * semantics stay in lockstep. Manifest `equality_ids` give the key
-    * columns WITHOUT touching the files; only id-less files (legacy
-    * writers) pay a schema read each, on the bounded pool. */
+    * definition of how delete files resolve to key columns, called by
+    * [[planDeletes]] only, so every reader of equality deletes (both
+    * scans and the changelog, by the filter or the join) resolves them
+    * alike. Manifest `equality_ids` give the key columns WITHOUT touching
+    * the files; only id-less files (legacy writers) pay a schema read
+    * each, on the bounded pool. */
   private def eqKeyGroups(
       spark: SparkSession, conf: Configuration, path: String, opts: Options,
       entries: Seq[(ManifestEntry, Long)],
@@ -744,7 +777,6 @@ object IcebergScan {
       spark: SparkSession, conf: Configuration, path: String, opts: Options,
       g: EqKeyGroup, snapshot: Snapshot, scope: PartitionScope): DataFrame = {
     import spark.implicits._
-    val qualify: String => String = IcebergIO.qualified(_, conf)
     val pools = g.pools.map { case (schema, pf) =>
       val files = pf.map { case (e, _) => (resolved(path, e.filePath, opts), e.fileSizeInBytes) }
       ManifestFileIndex.relation(spark, "parquet", files, schema, conf,
@@ -755,7 +787,7 @@ object IcebergScan {
     // per-file delete sequence number and partition via a small broadcast
     // (qualified URI → seq, partition), same bridge as the data side
     val delSeqMap = g.files.map { case (e, dseq) =>
-      (qualify(resolved(path, e.filePath, opts)), dseq, scope.partOf(e.filePath))
+      (qualifiedPath(path, e.filePath, opts, conf), dseq, scope.partOf(e.filePath))
     }.toDF("__del_path", "__del_seq", "__del_part")
     pools.reduce(_ unionByName _)
       .join(broadcast(delSeqMap), "__del_path")
@@ -1109,12 +1141,18 @@ object IcebergScan {
     * files) yields an EMPTY changelog.
     *
     * Metadata does the heavy lifting: only files REMOVED or ADDED
-    * between the snapshots are scanned, plus tombstones committed inside
-    * the window applied to surviving files — unchanged files are never
-    * read. The final exceptAll pair only reconciles rewrite churn among
-    * those candidates, so its input is proportional to the CHANGE size,
-    * not the table size. v1 tables carry no sequence numbers and always
-    * yield an empty window. */
+    * between the snapshots are scanned, plus the surviving files some
+    * delete reaches when a delete was committed inside the window.
+    * [[planDeletes]] assigns deletes to those surviving files twice, as
+    * the `from` snapshot and as the `to` snapshot hold them; a row was
+    * deleted in the window iff it is alive under the `from` assignment
+    * (the scan that reads it) and dead under the `to` one (one
+    * `graft_dv_alive` filter, plus a semi join for equality groups the
+    * planner leaves to the join). Candidate inserts then net against
+    * candidate deletes by full row, so rewrite churn (compaction) cancels
+    * and the diff's input is proportional to the CHANGE size, not the
+    * table size. v1 tables carry no sequence numbers and always yield an
+    * empty window. */
   def changelog(
       spark: SparkSession, path: String,
       fromSnapshotId: Long, toSnapshotId: Option[Long] = None,
@@ -1169,61 +1207,38 @@ object IcebergScan {
       if (added.isEmpty) emptyDF
       else scanLoaded(spark, root, opts, to, restrict(metaTo, added))
 
-    // rows of surviving files tombstoned INSIDE the window (they were
-    // live at `from`): position deletes by (file, pos), equality deletes
-    // by key with the spec's strictly-older sequence scoping
-    val newPos = livePaths(metaTo, 1, 1, opts).filter(_._2 > from.sequenceNumber)
-    val newEq = livePaths(metaTo, 1, 2, opts).filter(_._2 > from.sequenceNumber)
-    val commonDead =
-      if (common.isEmpty || (newPos.isEmpty && newEq.isEmpty)) emptyDF
-      else {
-        import spark.implicits._
-        val qualify: String => String = IcebergIO.qualified(_, conf)
+    // rows of surviving files deleted INSIDE the window: alive under the
+    // `from` snapshot's delete assignment and dead under the `to` one,
+    // both made by the scans' planner (Iceberg-java's existingDeletes()
+    // and addedDeletes() of a DeletedRowsScanTask). Deletes sequenced at
+    // or below `from` were live there already, so a window without a
+    // newer one deletes nothing, and only files `to` assigns deletes to
+    // are read.
+    val commonTo = livePaths(metaTo, 0, 0, opts).filter { case (e, _) => common(e.filePath) }
+    val windowDeletes = metaTo.entries.exists { case (m, es) =>
+      m.content == 1 &&
+        es.exists(e => e.status != 2 && e.seqOr(m.sequenceNumber) > from.sequenceNumber)
+    }
+    val toDeletes =
+      if (commonTo.isEmpty || !windowDeletes) None
+      else Some(planDeletes(spark, root, opts, to, metaTo, commonTo))
+    val touched = toDeletes.fold(Set.empty[String])(d =>
+      d.files.keySet ++ d.joinGroups.flatMap(_.affected))
+    val commonDead = toDeletes match {
+      case Some(d) if touched.nonEmpty =>
         val live = scanLoaded(spark, root, opts.copy(keepProvenance = true),
-          to, restrict(metaFrom, common))
-        val provCols = (schema.fieldNames.toSeq :+ "__graft_file" :+ "__graft_pos").map(col)
-        var hits = Seq.empty[DataFrame]
-        if (newPos.nonEmpty) {
-          val fileMap = livePaths(metaTo, 0, 0, opts).collect {
-            case (e, _) if common(e.filePath) =>
-              (e.filePath, qualify(resolved(root, e.filePath, opts)))
-          }.toDF("__orig_path", "__qual_path")
-          // both delete formats (v2 parquet files + v3 DVs); a DV merged
-          // from pre-window deletes only semi-hits rows still live at
-          // `from`, so the merge cannot over-report window deletions
-          val dels = posDeleteRows(spark, conf, root, opts, newPos)
-            .join(broadcast(fileMap), col("file_path") === col("__orig_path"))
-            .select(col("__qual_path").as("__del_file"), col("pos").as("__del_pos"))
-          hits :+= live.join(dels,
-            col("__graft_file") <=> col("__del_file") &&
-              col("__graft_pos") <=> col("__del_pos"), "left_semi")
-            .select(provCols: _*)
-        }
-        if (newEq.nonEmpty) {
-          val scope = PartitionScope.of(metaTo, newEq)
-          val seqMap = livePaths(metaTo, 0, 0, opts).collect {
-            case (e, s) if common(e.filePath) =>
-              (qualify(resolved(root, e.filePath, opts)), s, scope.partOf(e.filePath))
-          }.toDF("__eq_qual", "__data_seq", "__data_part")
-          val withSeq = live
-            .join(broadcast(seqMap), col("__graft_file") === col("__eq_qual"), "left")
-          // same cardinality-gated broadcast the scan uses: a huge
-          // equality-delete commit must not be forced onto the driver
-          val eqCard = newEq.map(_._1.recordCount).sum
-          val small = eqCard <= opts.broadcastDeleteThreshold
-          eqKeyGroups(spark, conf, root, opts, newEq, to).foreach { g =>
-            val delR = eqDeleteFrame(spark, conf, root, opts, g, to, scope)
-            val delB = if (small) broadcast(delR) else delR
-            hits :+= withSeq.join(delB, eqDeleteCond(g.cols), "left_semi")
-              .select(provCols: _*)
-          }
-        }
-        // a row hit by BOTH a position and an equality delete is one
-        // deleted row — dedupe on physical identity
-        hits.reduce(_ unionByName _)
-          .dropDuplicates("__graft_file", "__graft_pos")
-          .drop("__graft_file", "__graft_pos")
-      }
+          to, restrict(metaFrom, touched))
+        val alive = aliveFilter(spark, root, opts, d, col("__graft_file"), col("__graft_pos"))
+        // a row both the filter and a join group delete is reported once:
+        // the join sees only the rows the filter keeps
+        val byFilter = if (d.files.isEmpty) Seq.empty else Seq(live.filter(!alive))
+        val byJoin =
+          if (d.joinGroups.isEmpty) Seq.empty
+          else Seq(joinDeletes(spark, root, opts, to, d, commonTo,
+            if (d.files.isEmpty) live else live.filter(alive), "left_semi"))
+        (byFilter ++ byJoin).reduce(_ unionByName _).drop("__graft_file", "__graft_pos")
+      case _ => emptyDF
+    }
 
     // ---- net difference, in ONE pass ----------------------------------
     // Candidate inserts tag +1, candidate deletes -1; group by the full
@@ -1504,24 +1519,6 @@ object IcebergScan {
     (parquetRows, dvRows)
   }
 
-  /** [[posDeleteFrames]]' rows under the spec-v3 read rule: for a data
-    * file with a DV, the DV is the whole truth — parquet position-delete
-    * rows for that file are dropped via a small broadcast anti join (the
-    * DV writer merged them). */
-  private def posDeleteRows(
-      spark: SparkSession, conf: org.apache.hadoop.conf.Configuration,
-      root: String, opts: Options,
-      entries: Seq[(ManifestEntry, Long)]): DataFrame = {
-    import spark.implicits._
-    val (parquetRows, dvRows) = posDeleteFrames(spark, conf, root, opts, entries)
-    val dvTargets = entries.collect { case (e, _) if e.isDV => e.referencedDataFile.get }.distinct
-    val live =
-      if (dvTargets.isEmpty) parquetRows
-      else parquetRows.join(
-        broadcast(dvTargets.toDF("file_path")), Seq("file_path"), "left_anti")
-    live.unionByName(dvRows)
-  }
-
   /** mode='list_files' output: (file, type ∈ {data, delete}) — S14. */
   private def listFilesDF(spark: SparkSession, data: Seq[String], deletes: Seq[String]): DataFrame = {
     import spark.implicits._
@@ -1725,17 +1722,18 @@ object IcebergScan {
 
   /** The snapshot's EXACT live row count from metadata alone, or None
     * when metadata can't answer exactly. Delete-free snapshots sum
-    * manifest `record_count`s; DV'd snapshots (v3 DML-maintained — the
-    * normal production state between compactions) stay exact too:
-    * count = Σ record_count − Σ DV cardinality, one memoized puffin
-    * blob read per DV'd file; v2 PARQUET position-delete snapshots
-    * (r19) count the distinct live (file_path, pos) tombstones from
-    * the delete files themselves — delete-file I/O only. Equality
-    * deletes bail unless their key bounds provably match no surviving
-    * data file (their match counts are unknown without reading data).
-    * O(1) with full list stats and no delete manifests; O(manifests)
-    * (+ DV blobs / delete files) otherwise; ZERO DATA-file I/O always.
-    * Consumed by [[rowCount]] and the catalog's COUNT(*) rewrite. */
+    * manifest `record_count`s. Under position deletes the count
+    * subtracts exactly what the scans drop, because the scans' planner
+    * ([[planDeletes]]) assigns the deletes: Σ record_count − Σ DV
+    * cardinality (one memoized puffin blob read per DV'd file) − the
+    * distinct in-range positions of each file's v2 parquet position
+    * deletes (one Spark pass over the delete files, [[tupleFoldLive]]).
+    * Equality deletes bail unless their key bounds provably match no
+    * surviving data file (their match counts are unknown without reading
+    * data). O(1) with full list stats and no delete manifests;
+    * O(manifests) (+ DV blobs / delete files) otherwise; ZERO DATA-file
+    * I/O always. Consumed by [[rowCount]] and the catalog's COUNT(*)
+    * rewrite. */
   def metadataRowCount(spark: SparkSession, path: String,
                        opts: Options = Options()): Option[Long] = {
     val snapshot = selectSnapshot(spark, path, opts.copy(skipSchemaInference = true))
@@ -1769,22 +1767,26 @@ object IcebergScan {
 
   /** Per-tuple LIVE stat partials from a loaded manifest tree, exact
     * under every delete shape metadata can still answer (r19, VERDICT
-    * r18 #1/#2/#3) — zero DATA-file I/O:
-    *  - DELETION VECTORS: per-file deleted counts from the (memoized)
-    *    roaring cardinality, max-sequence vector per file;
-    *  - v2 PARQUET position deletes: per-file deleted counts = the
-    *    distinct live (file_path, pos) tombstones, read from the
-    *    delete files themselves (bounded delete-file-only Spark job,
-    *    dedupe across stacked delete files — footer record counts
-    *    alone would overcount re-deleted positions);
+    * r18 #1/#2/#3) — zero DATA-file I/O. Which position deletes and DVs
+    * reach which data file is the scans' own assignment
+    * ([[planPositionDeletes]]: DV wins, the sequence rule, `file_path`
+    * bounds, partition scope), so the count subtracts what the scans
+    * drop:
+    *  - a DV'd file's deleted count is the vector's (memoized) roaring
+    *    cardinality;
+    *  - a file with v2 PARQUET position deletes counts the distinct
+    *    positions in [0, record_count) its delete files name
+    *    ([[positionDeleteCounts]]: stacked delete files repeat
+    *    positions, so footer record counts alone would overcount);
     *  - EQUALITY deletes: match counts are unknowable from stats, so a
     *    delete entry TAINTS every tuple holding a data file it may
     *    still match ([[IcebergPruning.eqDeleteMayMatch]] bounds +
     *    zero-null guard, sequence-scoped exactly like the MoR scan) —
     *    consumers serve only tuple sets whose tainted members their
     *    filters provably exclude. Unresolvable key ids taint ALL.
-    * None = a delete's effect can't be counted at all (DV without blob
-    * offsets, non-parquet position-delete format, corrupt counts). */
+    * None = a delete's effect can't be counted at all (non-parquet
+    * position-delete format, corrupt counts); a malformed DV entry fails
+    * planning with the scans' error. */
   private def tupleFoldLive(
       spark: SparkSession, root: String, snapshot: Snapshot,
       meta: TableMeta, opts: Options,
@@ -1792,38 +1794,14 @@ object IcebergScan {
       : Option[Seq[TupleAgg]] = {
     val conf = hadoopConf(spark)
     val dataWithSeq = livePaths(meta, manifestContent = 0, entryContent = 0, opts)
-    val posDvAll = livePaths(meta, manifestContent = 1, entryContent = 1, opts)
     val eqAll = livePaths(meta, manifestContent = 1, entryContent = 2, opts)
-    val dataPaths = dataWithSeq.map(_._1.filePath).toSet
-    val (dvAll, posAll) = posDvAll.partition(_._1.isDV)
-    // a position-delete format the counting job can't read → refuse
-    if (posAll.exists(p => !p._1.fileFormat.equalsIgnoreCase("PARQUET")))
+    // a position-delete format the counting pass can't read → refuse
+    if (livePaths(meta, manifestContent = 1, entryContent = 1, opts).exists { case (e, _) =>
+        !e.isDV && !e.fileFormat.equalsIgnoreCase("PARQUET") })
       return None
-    // live DVs scoped to live data files, max-sequence vector per file
-    val dvByFile: Map[String, ManifestEntry] =
-      dvAll.filter { case (e, _) => dataPaths(e.referencedDataFile.get) }
-        .groupBy(_._1.referencedDataFile.get)
-        .map { case (p, es) => p -> es.maxBy(_._2)._1 }
-    // position-delete entries scoped by their recorded file_path bounds
-    // (reserved field id — mirrors scanLoaded): a partition-local
-    // delete leaves other partitions' counting job empty
-    val posScoped = posAll.filter { case (e, _) =>
-      dataWithSeq.exists { case (de, _) =>
-        IcebergPruning.posDeleteMayReference(e, de.filePath) }
-    }
-    val posCounts: Map[String, Long] =
-      if (posScoped.isEmpty) Map.empty
-      else {
-        // DV-wins on upgraded tables (ib36): a DV'd file's tombstones
-        // come from the vector alone — candidates exclude DV'd files,
-        // exactly like the scan, whose filter gives a DV'd file no
-        // parquet position-delete files
-        val candidates = dataWithSeq.collect {
-          case (e, seq) if !dvByFile.contains(e.filePath) =>
-            (e.filePath, e.recordCount, seq)
-        }
-        posDeleteCounts(spark, root, opts, posScoped, candidates)
-      }
+    val assigned = planPositionDeletes(spark, root, snapshot, meta, opts).files
+    val posCounts = positionDeleteCounts(spark, assigned.filter(_._2.pos.nonEmpty),
+      dataWithSeq.map { case (e, _) => e.filePath -> e.recordCount }.toMap)
     // equality-delete taint: sequence-scoped may-match, mirroring the
     // MoR scan (deletes apply to STRICTLY-OLDER data files)
     val taintAll = eqAll.exists { case (e, _) =>
@@ -1844,22 +1822,15 @@ object IcebergScan {
         }
         b.result()
       }
+    def dv(e: ManifestEntry) = assigned.get(e.filePath).flatMap(_.dv)
     val (delEntries, plainEntries) = dataWithSeq.partition { case (e, _) =>
-      dvByFile.contains(e.filePath) || posCounts.contains(e.filePath)
+      dv(e).isDefined || posCounts.contains(e.filePath)
     }
     val base = MetaAgg.fold(plainEntries.iterator.map(_._1), needed)
-    val deletedFiles = delEntries.flatMap { case (e, _) =>
-      if (e.recordCount <= 0) None
-      else {
-        val d = dvByFile.get(e.filePath) match {
-          case Some(dv) =>
-            // never the entry's record_count — decode the blob (exact)
-            dvCardinality(root, dv, opts.allowMovedPaths, conf)
-              .getOrElse(return None)
-          case None => posCounts.getOrElse(e.filePath, 0L)
-        }
-        Some(MetaAgg.DeletedFile(MetaAgg.ofEntry(e, needed), d))
-      }
+    val deletedFiles = delEntries.collect { case (e, _) if e.recordCount > 0 =>
+      // never a DV entry's record_count — decode the blob (exact)
+      MetaAgg.DeletedFile(MetaAgg.ofEntry(e, needed),
+        dv(e).fold(posCounts(e.filePath))(dvCardinality(_, conf)))
     }
     MetaAgg.applyDeletes(base, deletedFiles, needed).map { ts =>
       if (taintAll) ts.map(_.copy(tainted = true))
@@ -1869,34 +1840,39 @@ object IcebergScan {
     }
   }
 
-  /** Per-data-file DISTINCT live tombstone counts from v2 parquet
-    * position-delete files — one bounded Spark job over the DELETE
-    * files only (the same reader the MoR scan uses, so dedupe across
-    * stacked delete files and dropped dangling references match the
-    * scan by construction). `candidates` are the (manifest path,
-    * record_count, data sequence) triples of the data files tombstones
-    * may hit; the record-count range filter drops corrupt out-of-range
-    * positions that delete nothing, and a tombstone counts only where
-    * the scans apply it: at data files whose data sequence is at or
-    * below the delete's. */
-  private[graft] def posDeleteCounts(
-      spark: SparkSession, root: String, opts: Options,
-      posEntries: Seq[(ManifestEntry, Long)],
-      candidates: Seq[(String, Long, Long)]): Map[String, Long] = {
-    if (candidates.isEmpty) return Map.empty
+  /** Per data file, the DISTINCT positions in [0, record_count) that its
+    * position-delete files delete — what the scans drop, counted in the
+    * one pass of [[deletedPositions]]. `files` are the planner's
+    * assignments by manifest path, `records` the data files' record
+    * counts. A position a stacked delete file repeats counts once; one
+    * at or past the record count, or a row naming another file, deletes
+    * nothing. Files with nothing to count are left out. */
+  private[graft] def positionDeleteCounts(
+      spark: SparkSession, files: Map[String, graft.sql.FileDeletes],
+      records: Map[String, Long]): Map[String, Long] = {
+    if (files.isEmpty) return Map.empty
     import spark.implicits._
-    val conf = hadoopConf(spark)
-    val rcDf = candidates.toDF("file_path", "__rc", "__data_seq")
-    posDeleteRows(spark, conf, root, opts, posEntries)
-      .where(col("file_path").isNotNull && col("pos").isNotNull)
-      .join(broadcast(rcDf), Seq("file_path"))
-      .where(col("pos") >= 0 && col("pos") < col("__rc") &&
-        col("__data_seq") <= col("data_sequence_number"))
-      .select("file_path", "pos")
-      .distinct()
-      .groupBy("file_path").count()
-      .collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    deletedPositions(spark, files)
+      .map { case (f, ps) =>
+        (f, ps.iterator.filter(p => p >= 0 && p < records(f)).distinct.size.toLong)
+      }
+      .collect().filter(_._2 > 0).toMap
+  }
+
+  /** Each data file of `files` — the planner's assignments by manifest
+    * path, every one carrying a DV or position-delete files — with its
+    * sorted deleted positions, loaded in one Spark pass through the
+    * readers' loader (`DeleteLoader`): exactly the positions the scans
+    * drop. */
+  private[iceberg] def deletedPositions(
+      spark: SparkSession,
+      files: Map[String, graft.sql.FileDeletes]): Dataset[(String, Array[Long])] = {
+    import spark.implicits._
+    val spec = graft.sql.DeleteSpec.build(spark, files, Seq.empty,
+      positional = files.valuesIterator.exists(_.pos.nonEmpty))
+    val confB = ConfBroadcast.session(spark)
+    files.keys.toSeq.toDS()
+      .map(f => (f, graft.sql.DeleteLoader.deleted(spec, spec.files(f), confB.value.value)))
   }
 
   private val mtimeFoldsCtr = new java.util.concurrent.atomic.AtomicLong
@@ -1929,21 +1905,26 @@ object IcebergScan {
   private[iceberg] def dvCardinality(
       root: String, e: ManifestEntry, allowMovedPaths: Boolean,
       conf: org.apache.hadoop.conf.Configuration): Option[Long] =
-    for (off <- e.contentOffset; len <- e.contentSizeInBytes) yield {
-      val p =
-        if (allowMovedPaths) IcebergIO.fullPath(root, e.filePath) else e.filePath
-      val cached = dvCardCache.synchronized(dvCardCache.get((p, off)))
-      if (cached != null) cached.longValue
-      else {
-        // blob read OUTSIDE the monitor (it's remote I/O); a racing
-        // duplicate read of the same immutable blob is harmless
-        val n = Puffin.readDV(
-          new org.apache.hadoop.fs.Path(p), conf, off, len).length.toLong
-        dvCardCache.synchronized(
-          dvCardCache.put((p, off), java.lang.Long.valueOf(n)))
-        n
-      }
+    for (off <- e.contentOffset; len <- e.contentSizeInBytes) yield dvCardinality(
+      graft.sql.GraftKeyedScan.DvRef(
+        if (allowMovedPaths) IcebergIO.fullPath(root, e.filePath) else e.filePath, off, len),
+      conf)
+
+  /** The exact deleted-row count of the resolved deletion vector `dv`. */
+  private def dvCardinality(dv: graft.sql.GraftKeyedScan.DvRef,
+                            conf: org.apache.hadoop.conf.Configuration): Long = {
+    val cached = dvCardCache.synchronized(dvCardCache.get((dv.path, dv.offset)))
+    if (cached != null) cached.longValue
+    else {
+      // blob read OUTSIDE the monitor (it's remote I/O); a racing
+      // duplicate read of the same immutable blob is harmless
+      val n = Puffin.readDV(
+        new org.apache.hadoop.fs.Path(dv.path), conf, dv.offset, dv.length).length.toLong
+      dvCardCache.synchronized(
+        dvCardCache.put((dv.path, dv.offset), java.lang.Long.valueOf(n)))
+      n
     }
+  }
 
   // per-metadata-file override verdicts, keyed by the metadata-log entry
   // (timestamp-ms, path): superseded metadata.json files are immutable,

@@ -4534,12 +4534,8 @@ object IcebergWriter {
     val seq = state.nextSeq
     val reached = IcebergScan.planPositionDeletes(spark, path, latest, meta).files
       .filter { case (_, fd) => fd.dv.isEmpty && fd.pos.nonEmpty }
-    val spec = graft.sql.DeleteSpec.build(spark, reached, Seq.empty, positional = true)
-    val confB = ConfBroadcast(spark, conf)
-    val survivors = reached.keys.toSeq.toDS()
-      .flatMap { f =>
-        graft.sql.DeleteLoader.deleted(spec, spec.files(f), confB.value.value).iterator.map(f -> _)
-      }
+    val survivors = IcebergScan.deletedPositions(spark, reached)
+      .flatMap { case (f, ps) => ps.iterator.map(f -> _) }
       .toDF("file_path", "pos")
     val numOut = math.max(1, parquetDeletes.size / 8)
     val delDir = new Path(path, s"data/snap-$snapshotId-deletes-${commitToken()}")

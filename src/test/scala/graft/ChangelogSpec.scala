@@ -339,4 +339,42 @@ class ChangelogSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(t === Map("update_preimage" -> 1L, "update_postimage" -> 1L,
       "delete" -> 1L), t)
   }
+
+  test("a v3 window of row-level commits diffs with no join in at most 5 Spark jobs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val table = Files.createTempDirectory("graft_cdc_jobs_").toString + "/t"
+    val nation = Tables.load(spark, Sf, "nation")
+    val snap1 = IcebergWriter.write(nation, table, formatVersion = 3)
+    IcebergWriter.delete(spark, table, col("n_nationkey") === 3)
+    IcebergWriter.update(spark, table, col("n_nationkey") === 7, Map("n_name" -> lit("X")))
+    IcebergWriter.merge(spark, table,
+      nation.filter(col("n_nationkey").isin(1, 2)).withColumn("n_name", lit("M")),
+      Seq("n_nationkey"))
+    val snap5 = IcebergWriter.deleteEquality(spark, table,
+      nation.filter(col("n_nationkey") === 5).select("n_nationkey"))
+
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(start: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
+    }
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val (log, rows) =
+      try {
+        val log = IcebergScan.changelog(spark, table, snap1, Some(snap5))
+        (log, log.collect())
+      } finally {
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+    info(s"Spark jobs: ${jobs.get}")
+    val changes = rows.map(r =>
+      (r.getAs[Number]("n_nationkey").longValue, r.getAs[String]("_change_type")))
+    assert(changes.sorted.toSeq === Seq(1L -> "delete", 1L -> "insert", 2L -> "delete",
+      2L -> "insert", 3L -> "delete", 5L -> "delete", 7L -> "delete", 7L -> "insert"))
+    val joins = PlanWalk.collect(log.queryExecution.executedPlan) { case j: BaseJoinExec => j }
+    assert(joins.isEmpty, log.queryExecution.executedPlan.toString)
+    assert(jobs.get <= 5, s"${jobs.get} Spark jobs")
+  }
 }

@@ -26,7 +26,12 @@ import graft.iceberg.IcebergScan.Options
   *    above the threshold: the retained anti join),
   *  - the keyed scan (`spark.sql.sources.v2.bucketing.enabled`) of the
   *    partitioned tables, which applies the deletes itself — every key
-  *    set, the double key included — with the spliced scan's assignment.
+  *    set, the double key included — with the spliced scan's assignment,
+  *  - the changelog from the previous step's snapshot, against the
+  *    model's multiset diff (inserts and deletes), at both thresholds:
+  *    at 0 every key set takes the semi join, so on the mixed-key tables
+  *    a row two key sets delete must be reported once,
+  *  - the metadata row count, where it answers.
   *
   * Tables cover format v2 and v3, unpartitioned and `day(dt)`, a key `k`
   * widened from int to long mid-sequence, null keys, and — on the
@@ -75,6 +80,9 @@ class EqualityDeleteModelSpec extends AnyFunSuite with BeforeAndAfterAll {
     var keyType: DataType = IntegerType
     var keyedReads = 0
     var created = false
+    /** The snapshot and model rows of the previous check. */
+    var lastSnapshot: Option[Long] = None
+    var lastModel: Vector[R] = Vector.empty
 
     def schema: StructType = StructType(Seq(
       StructField("id", LongType), StructField("k", keyType),
@@ -208,6 +216,31 @@ class EqualityDeleteModelSpec extends AnyFunSuite with BeforeAndAfterAll {
         if (keyed.queryExecution.executedPlan.toString.contains("graft-keyed")) keyedReads += 1
         same("keyed scan", got)
       }
+      val snapshot = IcebergScan.selectSnapshot(spark, table,
+        Options(skipSchemaInference = true)).snapshotId
+      // the changelog's net diff groups by the whole row, and grouping
+      // normalizes -0.0 to 0.0
+      def diff(a: Vector[R], b: Vector[R]) = {
+        def norm(r: R) = show(r.copy(d = r.d.map(x => if (x == 0.0) 0.0 else x)))
+        a.map(norm).diff(b.map(norm)).sorted
+      }
+      lastSnapshot.foreach { from =>
+        for (opts <- Seq(Options(), Options(broadcastDeleteThreshold = 0L))) {
+          val log = IcebergScan.changelog(spark, table, from, Some(snapshot), opts)
+            .select("id", "k", "s", "dt", "d", "v", "_change_type").collect()
+          def changes(kind: String) =
+            log.filter(_.getString(6) == kind).map(show).toSeq.sorted
+          val what = s"changelog (threshold ${opts.broadcastDeleteThreshold}) of the last step"
+          assert(changes("insert") === diff(model, lastModel), s"$what: inserts after:\n  " +
+            history.mkString("\n  "))
+          assert(changes("delete") === diff(lastModel, model), s"$what: deletes after:\n  " +
+            history.mkString("\n  "))
+        }
+      }
+      lastSnapshot = Some(snapshot)
+      lastModel = model
+      val counted = IcebergScan.metadataRowCount(spark, table)
+      assert(counted.forall(_ == model.size), s"metadata count $counted, model ${model.size}")
     }
   }
 

@@ -1595,29 +1595,25 @@ class GraftCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
       fs, d1.getPath, fs, d2Path, false, conf)
     val dataPath = spark.read.parquet(d1.getPath.toString)
       .select("file_path").head.getString(0)
-    def mk(fp: String, size: Long) = graft.iceberg.IcebergModel.ManifestEntry(
-      status = 1, content = 1, filePath = fp, fileFormat = "PARQUET",
-      recordCount = 2, fileSizeInBytes = size, partition = Map.empty)
-    val entries = Seq(
-      (mk(d1.getPath.toString, d1.getLen), 2L),
-      (mk(d2Path.toString, d1.getLen), 3L))
+    // the planner's assignment of both delete files to a data file at
+    // manifest path `raw`
+    def assigned(raw: String) = raw -> graft.sql.FileDeletes(None, 1L, -1, Seq.empty, raw,
+      Seq((d1.getPath.toString, d1.getLen), (d2Path.toString, d1.getLen)))
     // duplicate tombstones count ONCE (footer record counts would say 4)
-    val counts = IcebergScan.posDeleteCounts(
-      spark, p, graft.iceberg.IcebergScan.Options(),
-      entries, Seq((dataPath, 50L, 0L)))
+    val counts = IcebergScan.positionDeleteCounts(
+      spark, Map(assigned(dataPath)), Map(dataPath -> 50L))
     assert(counts === Map(dataPath -> 2L),
       "stacked duplicate tombstones must dedupe")
     // positions at/past the file's record count delete nothing: with a
     // claimed record count of 5, position 7 is out of range
-    val clamped = IcebergScan.posDeleteCounts(
-      spark, p, graft.iceberg.IcebergScan.Options(),
-      entries, Seq((dataPath, 5L, 0L)))
+    val clamped = IcebergScan.positionDeleteCounts(
+      spark, Map(assigned(dataPath)), Map(dataPath -> 5L))
     assert(clamped === Map(dataPath -> 1L),
       "out-of-range tombstones must not count")
-    // tombstones referencing non-live files drop out entirely
-    val none = IcebergScan.posDeleteCounts(
-      spark, p, graft.iceberg.IcebergScan.Options(),
-      entries, Seq(("some/other/file.parquet", 50L, 0L)))
+    // tombstones naming another file count nowhere
+    val other = "some/other/file.parquet"
+    val none = IcebergScan.positionDeleteCounts(
+      spark, Map(assigned(other)), Map(other -> 50L))
     assert(none === Map.empty)
   }
 

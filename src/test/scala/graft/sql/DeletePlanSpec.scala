@@ -18,8 +18,9 @@ import graft.iceberg.IcebergScan
 import graft.iceberg.IcebergScan.Options
 
 /** The one delete planner (`IcebergScan.planDeletes`) over hand-built
-  * foreign tables: the spliced scan (filter and anti join) and the keyed
-  * scan apply the spec's partition scoping of equality deletes alike, a
+  * foreign tables: the spliced scan (filter and anti join), the keyed
+  * scan and the metadata count apply the spec's partition scoping of
+  * deletes alike, a
   * delete entry without a recorded size does not keep the keyed scan
   * away, and a malformed deletion-vector entry fails with one error that
   * names it. */
@@ -201,6 +202,24 @@ class DeletePlanSpec extends AnyFunSuite with BeforeAndAfterAll {
         "partition b's file keeps a plain bin")
       assert(rows(spark.read.format("graft").load(path)) === want, "keyed scan")
     }
+  }
+
+  test("a metadata count applies a position delete's partition scope like the scan") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_delplan_count_").toFile
+    val a = writeParquet(root, Seq((4L, "a"), (5L, "a"), (6L, "a")).toDF("x", "p"), "data/a")
+    val b = writeParquet(root, Seq((5L, "b"), (7L, "b")).toDF("x", "p"), "data/b")
+    // a delete of partition b that names row 1 of partition a's file
+    // deletes nothing: it reaches only partition b
+    val pos = writeParquet(root, Seq((a.getAbsolutePath, 1L)).toDF("file_path", "pos"), "data/pos")
+    val path = buildTable(root)(
+      Seq(Entry(0, a.getAbsolutePath, "PARQUET", 3L, Some(a.length), "a"),
+          Entry(0, b.getAbsolutePath, "PARQUET", 2L, Some(b.length), "b")),
+      Seq(Entry(1, pos.getAbsolutePath, "PARQUET", 1L, Some(pos.length), "b")))
+    val scanned = IcebergScan.scan(spark, path).count()
+    assert(scanned === 5L)
+    val counted = IcebergScan.metadataRowCount(spark, path)
+    assert(counted.forall(_ == scanned), s"metadata count $counted, scan $scanned")
   }
 
   test("a malformed deletion-vector entry fails with an IOException naming it") {
